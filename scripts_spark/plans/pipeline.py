@@ -22,8 +22,8 @@ Scale design (100 TB / 1000 executors):
   lookups are linear scans, so a 1.4k-entry literal costs ~70k string
   compares per doc (measured 135s vs 10s per 200k docs at local[8]),
   and literals cap out long before a real LM table would fit anyway.
-  The same seam accepts the mapInPandas scorer in
-  functions/model_scoring.py for genuinely expensive models;
+  The Arrow pandas-UDF scorer (functions/scoring_udf.py) is the
+  default form of the same seam;
 - plus the url-dedup window and the explicit salted bucket
   repartition (north rule). Every shuffle partial-aggregates map-side
   and scales with cores; AQE coalesces/splits at runtime;
@@ -132,6 +132,19 @@ class CurateConfig:
     near_dedup_bands: int = 8
     near_dedup_shingle_k: int = 3
     near_dedup_mode: str = "component"  # "component" | "neighbor"
+
+    def __post_init__(self) -> None:
+        # an unknown mode would otherwise silently take the fallback
+        # branch (join scorer, salted layout) and change the output
+        for field, allowed in (
+            ("scorer", ("arrow", "join")),
+            ("repartition_mode", ("salted", "domain")),
+            ("near_dedup_mode", ("component", "neighbor")),
+        ):
+            if getattr(self, field) not in allowed:
+                raise ValueError(
+                    f"{field} must be one of {allowed}, got {getattr(self, field)!r}"
+                )
 
     def rule_versions(self) -> dict[str, str]:
         rv = dict(text_kernel.KERNEL_VERSIONS)
@@ -503,18 +516,13 @@ def _near_dup_losers(d: DataFrame, cfg: CurateConfig,
         batch_losers = comp.filter(F.col("node") != F.col("group")).select(
             F.col("node").alias("url"), F.col("group").alias("near_dup_of")
         )
-    elif cfg.near_dedup_mode == "neighbor":
+    else:  # "neighbor"
         # pairs always carry key_a < key_b, so "has any strictly-smaller
         # verified neighbor" == "appears on the b side of some pair"
         batch_losers = (
             pairs.groupBy("key_b")
             .agg(F.min("key_a").alias("near_dup_of"))
             .withColumnRenamed("key_b", "url")
-        )
-    else:
-        raise ValueError(
-            f"near_dedup_mode must be 'component' or 'neighbor', "
-            f"got {cfg.near_dedup_mode!r}"
         )
     if sig_history is None:
         return batch_losers
@@ -617,62 +625,74 @@ def _sig_rows_from_kept(d: DataFrame, cfg: CurateConfig) -> DataFrame:
     )
 
 
+def _always(cfg: CurateConfig) -> bool:
+    return True
+
+
+# THE rule table: (reason, enabled(cfg), predicate(cfg, cols)), every
+# test integer-exact. The reason registry (REASONS), the
+# unknown-reasons audit (quality_checks), the per-partition metrics
+# columns (catalog.partition_metrics) and its oracle SQL all derive
+# from it. Table order is the emission order of the filter_reasons
+# array expression — the output array is array_sort'ed, but the plan
+# bytes follow this order. A rule whose stage is off adds NO
+# expression (not a vacuous lit(False)), so the default plan stays
+# byte-identical to pipeline 1.2; the column references of its stage
+# (paras_dup, _nd_loser) then stay unresolved and never enter the plan.
+RULES = (
+    ("min_length", _always, lambda cfg, c: c["n_chars"] < cfg.min_chars),
+    (
+        "repetition", _always,
+        lambda cfg, c: (c["n_tokens"] >= cfg.rep_min_tokens)
+        & (c["n_distinct"] * cfg.rep_den < c["n_tokens"] * cfg.rep_num),
+    ),
+    (
+        "word_length", _always,
+        lambda cfg, c: (c["n_tokens"] > 0)
+        & (
+            (c["tok_chars"] < c["n_tokens"] * cfg.word_len_min)
+            | (c["tok_chars"] > c["n_tokens"] * cfg.word_len_max)
+        ),
+    ),
+    (
+        "digit_ratio", _always,
+        lambda cfg, c: (c["n_chars"] > 0)
+        & (c["n_digits"] * cfg.digit_den > c["n_chars"] * cfg.digit_num),
+    ),
+    (
+        "caps_ratio", _always,
+        lambda cfg, c: (c["n_letters"] > cfg.caps_min_letters)
+        & (c["n_upper"] * cfg.caps_den > c["n_letters"] * cfg.caps_num),
+    ),
+    (
+        "boilerplate", _always,
+        lambda cfg, c: (c["paras_total"] > 0)
+        & (c["paras_boiler"] * cfg.boiler_doc_den > c["paras_total"] * cfg.boiler_doc_num),
+    ),
+    ("lang", _always, lambda cfg, c: c["lang_pred"] != "sv"),
+    ("perplexity", _always, lambda cfg, c: c["ppx_flag"]),
+    # measured against the POST-boiler paragraph count (the dedup
+    # stage's own input)
+    (
+        "para_dup_frac", lambda cfg: cfg.para_dedup,
+        lambda cfg, c: (c["paras_total"] - c["paras_boiler"] > 0)
+        & (
+            c["paras_dup"] * cfg.para_dup_den
+            > (c["paras_total"] - c["paras_boiler"]) * cfg.para_dup_num
+        ),
+    ),
+    # fires for cluster losers only
+    ("near_dup", lambda cfg: cfg.near_dedup, lambda cfg, c: c["_nd_loser"]),
+)
+REASONS = tuple(name for name, _, _ in RULES)
+
+
 def _reasons(cfg: CurateConfig, c: dict[str, Column]) -> Column:
-    """Ordered reason array; every test is integer-exact."""
-    tests = [
-        ("min_length", c["n_chars"] < cfg.min_chars),
-        (
-            "repetition",
-            (c["n_tokens"] >= cfg.rep_min_tokens)
-            & (c["n_distinct"] * cfg.rep_den < c["n_tokens"] * cfg.rep_num),
-        ),
-        (
-            "word_length",
-            (c["n_tokens"] > 0)
-            & (
-                (c["tok_chars"] < c["n_tokens"] * cfg.word_len_min)
-                | (c["tok_chars"] > c["n_tokens"] * cfg.word_len_max)
-            ),
-        ),
-        (
-            "digit_ratio",
-            (c["n_chars"] > 0) & (c["n_digits"] * cfg.digit_den > c["n_chars"] * cfg.digit_num),
-        ),
-        (
-            "caps_ratio",
-            (c["n_letters"] > cfg.caps_min_letters)
-            & (c["n_upper"] * cfg.caps_den > c["n_letters"] * cfg.caps_num),
-        ),
-        (
-            "boilerplate",
-            (c["paras_total"] > 0)
-            & (c["paras_boiler"] * cfg.boiler_doc_den > c["paras_total"] * cfg.boiler_doc_num),
-        ),
-        ("lang", c["lang_pred"] != "sv"),
-        ("perplexity", c["ppx_flag"]),
-    ]
-    if cfg.para_dedup:
-        # para_dup_frac is measured against the POST-boiler paragraph
-        # count (the dedup stage's own input); with the stage off the
-        # test is omitted entirely (not a vacuous lit(0) predicate) so
-        # the off-plan stays byte-identical to pipeline 1.2. Position
-        # in this list is cosmetic: reasons are array_sort'ed.
-        tests.append(
-            (
-                "para_dup_frac",
-                (c["paras_total"] - c["paras_boiler"] > 0)
-                & (
-                    c["paras_dup"] * cfg.para_dup_den
-                    > (c["paras_total"] - c["paras_boiler"]) * cfg.para_dup_num
-                ),
-            )
-        )
-    if cfg.near_dedup:
-        # fires for cluster losers only; like para_dup_frac, omitted
-        # (not a vacuous predicate) when the stage is off so the
-        # off-plan stays byte-identical to pipeline 1.2
-        tests.append(("near_dup", c["nd_loser"]))
-    arr = F.array(*[F.when(cond, F.lit(name)) for name, cond in tests])
+    """Ordered reason array of the rules enabled under ``cfg``."""
+    arr = F.array(*[
+        F.when(pred(cfg, c), F.lit(name))
+        for name, enabled, pred in RULES if enabled(cfg)
+    ])
     return F.array_sort(F.filter(arr, lambda x: x.isNotNull()))
 
 
@@ -856,13 +876,12 @@ def curate(pages: DataFrame, cfg: CurateConfig | None = None,
             "n_upper",
             "paras_total",
             "paras_boiler",
-            *(["paras_dup"] if cfg.para_dedup else []),
+            "paras_dup",
+            "_nd_loser",
             "lang_pred",
             "ppx_flag",
         ]
     }
-    if cfg.near_dedup:
-        cols["nd_loser"] = F.col("_nd_loser")
     rv = cfg.rule_versions()
     lineage = F.struct(
         F.col("bucket").cast("string").alias("source_partition"),

@@ -12,10 +12,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-KNOWN_REASONS = [
-    "min_length", "repetition", "word_length", "digit_ratio",
-    "caps_ratio", "boilerplate", "lang", "perplexity",
-]
+from scripts_spark.plans.pipeline import REASONS
+
+KNOWN_REASONS = list(REASONS)
 
 
 def duplicate_ids(decisions: DataFrame, id_col: str = "doc_id") -> DataFrame:

@@ -19,6 +19,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from scripts_spark.functions import text_kernel
+from scripts_spark.operators.sampling import _salted_top_n
 
 
 def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -57,8 +58,9 @@ def _local_df(spark, rows, schema: str):
     zero Python at execution time. dtype=object keeps None → NULL in
     every column, including numeric ones."""
     import pandas as pd
+    from pyspark.sql.types import StructType
 
-    names = [f.strip().split()[0] for f in schema.split(",")]
+    names = StructType.fromDDL(schema).names
     return spark.createDataFrame(
         pd.DataFrame(rows, columns=names, dtype=object), schema
     )
@@ -252,18 +254,17 @@ _SHINGLE_SQL = """
 
 
 
-def _md5_shingles3(d: DataFrame) -> DataFrame:
-    """(doc_id, shingle) — doc-distinct whitespace 3-grams, THE
-    engine-portable shingle construction (Spark twin of _SHINGLE_SQL).
-    minhash_lsh_pairs, ngram_jaccard_pairs and history_near_losers all
-    build on this one definition, so the oracle-critical hash-family
-    INPUT can never fork between queries whose docstrings claim they
-    share it."""
+def _shingle3_array(text):
+    """Doc-distinct whitespace 3-grams of ``text`` as an array (empty
+    below 3 tokens) — THE engine-portable shingle construction (Spark
+    twin of _SHINGLE_SQL). minhash_lsh_pairs, ngram_jaccard_pairs and
+    history_near_losers all build on this one definition, so the
+    oracle-critical shingle INPUT cannot fork between them."""
     # bind_once: without it every t[i] reference re-evaluates the
     # split/filter chain per element — measured 59.7s → 2.4s for this
     # explode alone at 50k docs (r7, guide §1.2)
-    sh = text_kernel.bind_once(
-        F.filter(F.split(F.col("text"), " "), lambda x: x != ""),
+    return text_kernel.bind_once(
+        F.filter(F.split(text, " "), lambda x: x != ""),
         lambda t: F.when(
             F.size(t) >= 3,
             F.array_distinct(
@@ -274,7 +275,11 @@ def _md5_shingles3(d: DataFrame) -> DataFrame:
             ),
         ).otherwise(F.array().cast("array<string>")),
     )
-    return d.select("doc_id", F.explode(sh).alias("shingle"))
+
+
+def _md5_shingles3(d: DataFrame) -> DataFrame:
+    """(doc_id, shingle) rows of _shingle3_array."""
+    return d.select("doc_id", F.explode(_shingle3_array(F.col("text"))).alias("shingle"))
 
 
 def _md5_sig8(sh: DataFrame) -> DataFrame:
@@ -388,8 +393,9 @@ def ngram_jaccard_pairs(spark, sf_dir):
     Round-7 physical form (guide §2.3/§2.4; r6 plan measured 2.6M-row
     window + 350M-row exploded verify join, 56-76s at 50k docs —
     this plan 14-16s in the same windows, bit-identical output):
-    - the per-doc shingle SET is built array-side in one codegen pass
-      (no explode), so prefix extraction is slice(array_sort(shs)) —
+    - the per-doc shingle SET (_shingle3_array, the same construction
+      minhash_lsh_pairs explodes) is built array-side in one codegen
+      pass (no explode), so prefix extraction is slice(array_sort(shs)) —
       the row_number window over the exploded corpus and its sizes
       join are gone (2 exchanges removed);
     - the small (doc_id, shs) frame is spread over 2x defaultParallelism
@@ -413,21 +419,9 @@ def ngram_jaccard_pairs(spark, sf_dir):
       replaces the exploded pair×shingle join + re-aggregation, the
       r6 plan's dominant stage."""
     d = T(spark, sf_dir, "documents")
-    arr = text_kernel.bind_once(
-        F.filter(F.split(F.col("text"), " "), lambda x: x != ""),
-        lambda t: F.when(
-            F.size(t) >= 3,
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(0), F.size(t) - 3),
-                    lambda i: F.concat_ws(" ", t[i], t[i + 1], t[i + 2]),
-                )
-            ),
-        ).otherwise(F.array().cast("array<string>")),
-    )
     n_spread = d.sparkSession.sparkContext.defaultParallelism * 2
     docs = (
-        d.select("doc_id", arr.alias("shs"))
+        d.select("doc_id", _shingle3_array(F.col("text")).alias("shs"))
         .filter(F.size("shs") > 0)
         .repartition(n_spread)
     )
@@ -820,14 +814,11 @@ def first_last_order(spark, sf_dir):
 )
 def stratified_sample(spark, sf_dir):
     """Per-stratum fixed-n deterministic sample (SURVEY R2): ordering by
-    a content hash replaces rand(seed) portably."""
+    a content hash replaces rand(seed) portably. Salted two-stage
+    top-n (operators/sampling._salted_top_n)."""
     d = T(spark, sf_dir, "documents")
-    w = Window.partitionBy("source").orderBy(F.md5(F.col("doc_id").cast("string")), "doc_id")
-    return (
-        d.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("source", "doc_id")
-    )
+    order = [F.md5(F.col("doc_id").cast("string")), F.col("doc_id")]
+    return _salted_top_n(d, ["source"], order, 5, "doc_id").select("source", "doc_id")
 
 
 @q(
@@ -1190,19 +1181,17 @@ def distinct_users(spark, sf_dir):
 def weighted_sample(spark, sf_dir):
     """Weighted stratified sample (SURVEY R1, sample_pages_new.py):
     Efraimidis-Spirakis exponential-sort keys with the uniform derived
-    from md5 — deterministic AND engine-portable (no rand())."""
+    from md5 — deterministic AND engine-portable (no rand()). Salted
+    two-stage top-n (operators/sampling._salted_top_n)."""
     d = T(spark, sf_dir, "documents")
     u = (
         _md5_hash32(F.col("doc_id").cast("string"))
         + 1
     ) / F.lit(4294967297.0)
     key = -F.log(u) / (F.col("n_chars") + 1)
-    w = Window.partitionBy("source").orderBy(key.asc(), "doc_id")
-    return (
-        d.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("source", "doc_id")
-    )
+    return _salted_top_n(
+        d, ["source"], [key.asc(), F.col("doc_id")], 5, "doc_id"
+    ).select("source", "doc_id")
 
 
 @q(
@@ -2826,12 +2815,15 @@ def random_projection(spark, sf_dir):
 
 
 # --- per-partition (bucket) metrics rollup (north rule) -----------------
+from scripts_spark.plans.pipeline import REASONS  # noqa: E402
+
 _MET_ROWS = [
     ("u1", 0, True, []),
     ("u2", 0, False, ["lang", "min_length"]),
     ("u3", 1, False, ["boilerplate"]),
     ("u4", 1, True, []),
     ("u5", 1, False, ["lang", "perplexity", "repetition"]),
+    ("u6", 0, False, ["near_dup", "para_dup_frac"]),
 ]
 _MET_SQL_ROWS = ", ".join(
     "('%s', %d, %s, [%s])"
@@ -2850,8 +2842,7 @@ _MET_SQL_ROWS = ", ".join(
            {", ".join(
              "CAST(SUM(CASE WHEN list_contains(filter_reasons, '%s')"
              " THEN 1 ELSE 0 END) AS BIGINT) AS n_%s" % (r, r)
-             for r in ["min_length", "repetition", "word_length", "digit_ratio",
-                       "caps_ratio", "boilerplate", "lang", "perplexity"])}
+             for r in REASONS)}
     FROM d GROUP BY bucket
     """,
 )
@@ -4580,29 +4571,19 @@ def domain_cap_sample(spark, sf_dir):
     deterministic salted-hash priority order so the capped subset is
     reproducible and append-stable.
 
-    r7 physical form (clears the r6 perf-weak flag; guide §2.5): the
-    r6 plan ranked EVERY row with one row_number window per source —
-    a per-source global sort, serialized on one task per Zipf-hot
-    mega-domain. Now a SALTED TWO-STAGE rank: stage 1 ranks within
-    (source, salt-of-64) and keeps ≤cap rows per salt — each of the
-    true top-cap rows is necessarily within its own salt's top-cap —
-    stage 2 ranks the ≤ 64·cap survivors per source. Bit-identical
-    output (the order (_pri, doc_id) is total); no task ever sorts
-    more than a 1/64 slice of a hot source."""
+    Physical form: the salted two-stage rank of
+    operators/sampling._salted_top_n, so no task sorts more than a
+    1/64 slice of a Zipf-hot source (the order (_pri, doc_id) is
+    total, so the output is bit-identical to one rank window)."""
     d = T(spark, sf_dir, "documents")
-    cap = 12
     pri = _md5_hash32(F.concat(F.lit("dc"), F.col("doc_id").cast("string")))
-    salt = F.pmod(F.xxhash64("doc_id"), F.lit(64))
-    w1 = Window.partitionBy("source", "_salt").orderBy("_pri", "doc_id")
-    w2 = Window.partitionBy("source").orderBy("_pri", "doc_id")
-    return (
-        d.filter(F.col("text").isNotNull())
-        .select("doc_id", "source", pri.alias("_pri"), salt.alias("_salt"))
-        .withColumn("_rk1", F.row_number().over(w1))
-        .filter(F.col("_rk1") <= cap)
-        .withColumn("rank_in_source", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank_in_source") <= cap)
-        .select("doc_id", "source", "rank_in_source")
+    capped = _salted_top_n(
+        d.filter(F.col("text").isNotNull()).select("doc_id", "source", pri.alias("_pri")),
+        ["source"], [F.col("_pri"), F.col("doc_id")], 12, "doc_id",
+        rank_col="rank_in_source",
+    )
+    return capped.select(
+        "doc_id", "source", F.col("rank_in_source").cast("long").alias("rank_in_source")
     )
 
 
@@ -5034,15 +5015,12 @@ def temperature_mix_sample(spark, sf_dir):
     where old assignments must never change. Floor quotas also sum to
     AT MOST the 500 budget, short by up to n_sources - 1.)
 
-    r7 physical form (clears the r6 perf-weak flag; guide §2.5): two
-    tiny aggregates (one row per source) broadcast back, then the
-    quota fill as a SALTED TWO-STAGE rank instead of one rank window
-    per source partition: stage 1 ranks within (source, salt-of-64)
-    and keeps ≤quota per salt — every true quota member is within its
-    own salt's quota-smallest — stage 2 ranks the survivors per
-    source. Bit-identical selection (md5 rank order is collision-free
-    on distinct doc ids); a Zipf-hot source's sort is spread over 64
-    tasks instead of serialized on one."""
+    Physical form: two tiny aggregates (one row per source) broadcast
+    back, then the quota fill as the salted two-stage rank of
+    operators/sampling._salted_top_n with the per-source ``quota``
+    column as n. Bit-identical selection (md5 rank order is
+    collision-free on distinct doc ids); a Zipf-hot source's sort is
+    spread over 64 tasks instead of serialized on one."""
     d = T(spark, sf_dir, "documents")
     n = d.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
     w_ = n.withColumn("wt", F.floor(F.sqrt("n_docs")).cast("long"))
@@ -5051,25 +5029,10 @@ def temperature_mix_sample(spark, sf_dir):
         "source",
         F.floor((F.lit(500) * F.col("wt")) / F.col("z")).cast("long").alias("quota"),
     )
-    salt = F.pmod(F.xxhash64("doc_id"), F.lit(64))
-    rk1 = F.row_number().over(
-        Window.partitionBy("source", "_salt").orderBy(
-            F.md5(F.col("doc_id").cast("string"))
-        )
-    )
-    rk2 = F.row_number().over(
-        Window.partitionBy("source").orderBy(F.md5(F.col("doc_id").cast("string")))
-    )
-    return (
-        d.select("doc_id", "source")
-        .join(F.broadcast(q_), "source")
-        .withColumn("_salt", salt)
-        .withColumn("_rk1", rk1)
-        .filter(F.col("_rk1") <= F.col("quota"))
-        .withColumn("rk", rk2)
-        .filter(F.col("rk") <= F.col("quota"))
-        .select("source", "doc_id")
-    )
+    return _salted_top_n(
+        d.select("doc_id", "source").join(F.broadcast(q_), "source"),
+        ["source"], [F.md5(F.col("doc_id").cast("string"))], F.col("quota"), "doc_id",
+    ).select("source", "doc_id")
 
 
 @q(
@@ -5125,14 +5088,10 @@ def lexical_topk(spark, sf_dir):
     aggregated the full vocabulary and pruned after — the optimized
     plan showed the scan+explode+aggregate subtree TWICE, once for tf
     and once for df; plan-pinned single-scan now.) Per-query top-5 is
-    a SALTED TWO-STAGE rank (r7, clears the r6 perf-weak flag): stage
-    1 ranks within (qid, salt-of-64) partitions and keeps 5 per salt,
-    stage 2 ranks the ≤320 survivors per qid — bit-identical to one
-    rank window (the global top-5 are each top-5 within their own
-    salt; the order (score desc, doc_id) is total), but no qid
-    partition ever holds more than the salted slice, so a
-    stop-word-ish query term cannot serialize the sort on one task
-    (guide §2.5 two-level aggregation applied to top-k)."""
+    the salted two-stage rank of operators/sampling._salted_top_n —
+    bit-identical to one rank window (the order (score desc, doc_id)
+    is total), but a stop-word-ish query term cannot serialize the
+    sort on one task."""
     d = T(spark, sf_dir, "documents")
     q_ = _local_df(spark, 
         [
@@ -5162,21 +5121,9 @@ def lexical_topk(spark, sf_dir):
             )
         )
     )
-    salt = F.pmod(F.xxhash64("doc_id"), F.lit(64))
-    rk1 = F.row_number().over(
-        Window.partitionBy("qid", "_salt").orderBy(F.col("score").desc(), "doc_id")
-    )
-    rk2 = F.row_number().over(
-        Window.partitionBy("qid").orderBy(F.col("score").desc(), "doc_id")
-    )
-    return (
-        sc.withColumn("_salt", salt)
-        .withColumn("_rk1", rk1)
-        .filter(F.col("_rk1") <= 5)
-        .withColumn("rk", rk2)
-        .filter(F.col("rk") <= 5)
-        .select("qid", "doc_id", "score")
-    )
+    return _salted_top_n(
+        sc, ["qid"], [F.col("score").desc(), F.col("doc_id")], 5, "doc_id"
+    ).select("qid", "doc_id", "score")
 
 
 _curate_order()

@@ -37,6 +37,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from scripts_spark.plans.pipeline import REASONS
+
 MANIFEST_SCHEMA = "job_id long, bucket long, n_rows long, n_kept long, commit_seq long"
 
 
@@ -167,14 +169,14 @@ def git_stable_sort(df: DataFrame) -> DataFrame:
 def partition_metrics(decisions: DataFrame) -> DataFrame:
     """Per-partition (bucket) metrics: row counts, keep counts, and one
     column per filter reason — the per-partition visibility the north
-    rule asks for (and the reference's per-year dashboards provide)."""
-    reasons = ["min_length", "repetition", "word_length", "digit_ratio",
-               "caps_ratio", "boilerplate", "lang", "perplexity"]
+    rule asks for (and the reference's per-year dashboards provide).
+    The reason columns follow the pipeline's rule table, opt-in stages
+    included, so the schema does not depend on which stages ran."""
     aggs = [
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.col("keep").cast("long")).alias("n_kept"),
     ] + [
         F.sum(F.array_contains("filter_reasons", r).cast("long")).alias(f"n_{r}")
-        for r in reasons
+        for r in REASONS
     ]
     return decisions.groupBy("bucket").agg(*aggs)

@@ -1,5 +1,4 @@
-"""Arrow model scoring (M1 pattern), multimodal plumbing, and
-structured streaming jobs."""
+"""Structured streaming jobs."""
 
 from __future__ import annotations
 
@@ -9,187 +8,10 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from scripts_spark.functions import model_scoring as MS
-from scripts_spark.operators import multimodal as MM
 from scripts_spark.plans.pipeline import CurateConfig, curate
 from scripts_spark.sources import catalog
 from scripts_spark.sources.pages import PAGES_SCHEMA, pages_df
 from scripts_spark.streaming import jobs as SJ
-
-
-# ------------------------------------------------- model scoring (M1)
-def test_classify_docs_matches_oracle(spark):
-    texts = [
-        ("d1", "herr talman jag vill anföra följande"),
-        ("d2", "protokoll fört vid sammanträdet"),
-        ("d3", ""),
-        ("d4", "a b c a b c a"),
-        ("d5", None),
-    ]
-    df = spark.createDataFrame(texts, "url string, scrubbed_text string")
-    got = {r["url"]: r["pred"] for r in MS.classify_docs(df).collect()}
-    for url, text in texts:
-        assert got[url] == MS.classify_doc_py(text), url
-
-
-def test_vocab_dedup_scoring_scores_each_token_once(spark):
-    # 1000 repetitions of the same tiny vocab: the vocab frame the
-    # model sees must contain each distinct token exactly once
-    df = spark.createDataFrame(
-        [(f"u{i}", "alpha beta gamma " * 50) for i in range(20)],
-        "url string, scrubbed_text string",
-    )
-    from scripts_spark.functions.text_kernel import tokens
-
-    vocab = (
-        df.select(F.explode(tokens(F.col("scrubbed_text"))).alias("token")).distinct()
-    )
-    scored = MS.score_vocab(vocab)
-    assert scored.count() == 3
-    out = MS.classify_docs(df)
-    assert out.count() == 20
-
-
-# ------------------------------------------------------- multimodal
-def test_multimodal_feature_plumbing(spark):
-    rows = [
-        ("m1", "image", b"\x89PNG fake bytes", "image/png", 640, 480, None),
-        ("m2", "audio", b"RIFF fake", "audio/wav", None, None, 4000),
-        ("m3", "image", None, "image/png", None, None, None),
-    ]
-    media = spark.createDataFrame(rows, MM.MEDIA_SCHEMA)
-    feats = {r["media_id"]: r for r in MM.extract_features(media, fake=True).collect()}
-    assert feats["m1"]["n_bytes"] == len(b"\x89PNG fake bytes")
-    assert len(feats["m1"]["features"]) == MM.FEATURE_DIM
-    assert feats["m3"]["features"] is None
-    # determinism: same payload → same features
-    again = {r["media_id"]: r for r in MM.extract_features(media, fake=True).collect()}
-    assert feats["m1"]["features"] == again["m1"]["features"]
-
-
-def test_png_roundtrip_and_real_features(spark):
-    """PNG decode is REAL (stdlib zlib+struct): encode a gradient,
-    decode it back byte-identically, and extract_features(fake=False)
-    returns actual channel statistics through the Spark plumbing."""
-    w, h = 8, 4
-    rgb = bytes(
-        b
-        for y in range(h)
-        for x in range(w)
-        for b in (x * 32 % 256, y * 64 % 256, 200)
-    )
-    png = MM.encode_png(w, h, rgb)
-    assert MM.decode_png(png) == (w, h, rgb)
-    assert MM.decode_image(png)[0] == w
-
-    media = spark.createDataFrame(
-        [("p1", "image", png, "image/png", w, h, None)], MM.MEDIA_SCHEMA
-    )
-    row = MM.extract_features(media, fake=False).first()
-    f = row["features"]
-    assert (f[0], f[1]) == (float(w), float(h))
-    # blue channel is constant 200
-    assert abs(f[4] - 200 / 255) < 1e-6  # mean_b
-    assert abs(f[7] - 200 / 255) < 1e-6  # min_b
-    assert abs(f[10] - 200 / 255) < 1e-6  # max_b
-    assert abs(sum(f[11:16]) - 1.0) < 1e-6  # luma histogram sums to 1
-
-
-def test_png_all_filter_types_defilter():
-    """The decoder must reverse Sub/Up/Average/Paeth rows, not just
-    the encoder's filter-0: build an IDAT with one row per filter."""
-    import struct
-    import zlib
-
-    w, h = 4, 5
-    rows = [bytes((x * 17 + y * 29) % 256 for x in range(w * 3)) for y in range(h)]
-
-    def filt(f, row, prev):
-        out = bytearray([f])
-        for x in range(len(row)):
-            a = row[x - 3] if x >= 3 else 0
-            b = prev[x]
-            c = prev[x - 3] if x >= 3 else 0
-            if f == 0:
-                out.append(row[x])
-            elif f == 1:
-                out.append((row[x] - a) & 0xFF)
-            elif f == 2:
-                out.append((row[x] - b) & 0xFF)
-            elif f == 3:
-                out.append((row[x] - (a + b) // 2) & 0xFF)
-            else:
-                out.append((row[x] - MM._paeth(a, b, c)) & 0xFF)
-        return bytes(out)
-
-    raw = b""
-    prev = bytes(w * 3)
-    for y, f in enumerate([0, 1, 2, 3, 4]):
-        raw += filt(f, rows[y], prev)
-        prev = rows[y]
-
-    def chunk(tag, data):
-        return (
-            struct.pack(">I", len(data)) + tag + data
-            + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
-        )
-
-    png = (
-        MM.PNG_MAGIC
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-    assert MM.decode_png(png) == (w, h, b"".join(rows))
-
-    # Adam7-interlaced data must be refused loudly, not de-filtered as
-    # garbage pixels (round-2 advice)
-    bad = (
-        MM.PNG_MAGIC
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 1))
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-    import pytest
-
-    with pytest.raises(NotImplementedError):
-        MM.decode_png(bad)
-
-
-def test_wav_roundtrip_and_real_features(spark):
-    """PCM WAV decode is REAL: a 100-sample square wave roundtrips and
-    yields exact duration/min/max/zero-crossing features via Spark."""
-    samples = ([12000] * 10 + [-12000] * 10) * 5
-    wav = MM.encode_wav(8000, samples)
-    assert MM.decode_wav(wav) == (8000, 1, samples)
-    assert MM.decode_audio(wav)[0] == 8000
-    media = spark.createDataFrame(
-        [("a1", "audio", wav, "audio/wav", None, None, None)], MM.MEDIA_SCHEMA
-    )
-    f = MM.extract_features(media, fake=False).first()["features"]
-    assert abs(f[0] - 1000 * 100 / 8000) < 1e-6  # duration_ms = 12.5
-    assert (f[1], f[2]) == (8000.0, 1.0)
-    assert abs(f[3] - 12000 / 32768) < 1e-6  # rms of a square wave
-    assert abs(f[4] + 12000 / 32768) < 1e-6 and abs(f[5] - 12000 / 32768) < 1e-6
-
-
-def test_multimodal_undecodable_raises(spark):
-    with pytest.raises(NotImplementedError):
-        MM.decode_image(b"\xff\xd8\xff jpeg-ish")
-    with pytest.raises(NotImplementedError):
-        MM.decode_audio(b"ID3 mp3-ish")
-    media = spark.createDataFrame(
-        [("m1", "image", b"\xff\xd8\xff jpeg-ish", "image/jpeg", None, None, None)],
-        MM.MEDIA_SCHEMA,
-    )
-    with pytest.raises(Exception, match="NotImplementedError|PNG|WAV"):
-        MM.extract_features(media, fake=False).collect()
-
-
-def test_frame_sample_positions(spark):
-    df = spark.createDataFrame([(3500,)], "duration_ms long")
-    out = df.select(MM.frame_sample_positions(F.col("duration_ms")).alias("p")).first()
-    assert out["p"] == [0, 1000, 2000, 3000]
 
 
 # -------------------------------------------------------- streaming

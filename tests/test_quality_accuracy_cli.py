@@ -170,6 +170,40 @@ def test_cli_end_to_end():
         shutil.rmtree(work, ignore_errors=True)
 
 
+def test_cli_check_accepts_opt_in_reasons(spark, tmp_path):
+    """`check` audits reasons against the pipeline's own rule table, so
+    output curated with an opt-in stage passes it."""
+    import os
+
+    from scripts_spark.sources import catalog, pages
+
+    pages.write_pages(spark, str(tmp_path / "pages"), 200, 42)
+    for args in (
+        ["curate", "--input", str(tmp_path / "pages"),
+         "--output", str(tmp_path / "dec"), "--buckets", "4", "--para-dedup"],
+        ["check", "--decisions", str(tmp_path / "dec")],
+    ):
+        r = subprocess.run(
+            [sys.executable, "run_job.py", *args],
+            capture_output=True, text=True, timeout=400,
+            env=dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="2g"),
+        )
+        assert r.returncode == 0, (args[0], r.stdout[-500:], r.stderr[-2000:])
+    assert json.loads(r.stdout.strip().splitlines()[-1]) == {
+        "duplicate_ids": 0, "unknown_reasons": 0, "keep_consistency": 0
+    }
+    reasons = catalog.read_output(spark, str(tmp_path / "dec")).select(
+        F.explode("filter_reasons").alias("r")).distinct().collect()
+    assert "para_dup_frac" in {row["r"] for row in reasons}
+
+
+def test_curate_config_rejects_unknown_modes():
+    for kwargs in ({"scorer": "jion"}, {"repartition_mode": "domian"},
+                   {"near_dedup_mode": "neighbour"}):
+        with pytest.raises(ValueError, match=next(iter(kwargs))):
+            CurateConfig(**kwargs)
+
+
 def test_make_pyfiles():
     subprocess.run([sys.executable, "make_pyfiles.py"], check=True, capture_output=True)
     import zipfile

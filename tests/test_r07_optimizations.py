@@ -9,10 +9,13 @@ shape that cleared the r6 perf-weak flags.
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 import pytest
 from pyspark.sql import functions as F
 
 from scripts_spark.functions.text_kernel import bind_once
+from tests.test_queries import SF_DIR
 
 
 def _plan(df) -> str:
@@ -76,20 +79,67 @@ def test_translate_count_matches_regex_on_edge_chars(spark):
         assert row.r_u == row.t_u
 
 
+def _row_number_partition_specs(plan: str) -> list[str]:
+    """Partition spec of every row_number Window node, in execution
+    order (the formatted plan numbers its nodes leaf-first)."""
+    return [
+        line.split("], [")[1]
+        for line in plan.splitlines()
+        if line.startswith("Arguments: [row_number() windowspecdefinition(")
+    ]
+
+
 @pytest.mark.parametrize(
-    "name", ["domain_cap_sample", "temperature_mix_sample", "lexical_topk"]
+    "name",
+    ["stratified_sample", "weighted_sample", "domain_cap_sample",
+     "temperature_mix_sample", "lexical_topk"],
 )
 def test_salted_two_stage_rank_plan(spark, name):
-    """The r6 perf-weak queries must not sort the full frame by the
-    group key alone: the first (full-frame) rank stage partitions by
+    """The top-n queries must not sort the full frame by the group key
+    alone: the first (full-frame) rank stage partitions by
     (group, _salt), so no Zipf-hot group serializes on one task. The
     group-only window runs after the stage-1 filter (bounded rows)."""
     from scripts_spark.plans import queries as Q
 
-    df = Q.REGISTRY[name](spark, "/root/testdata/sf0.001")
-    plan = _plan(df)
-    assert "_salt" in plan, f"{name}: salted stage missing from plan"
+    df = Q.REGISTRY[name](spark, SF_DIR)
+    specs = _row_number_partition_specs(_plan(df))
+    assert len(specs) == 2, f"{name}: expected two rank windows, got {specs}"
+    salted, grouped = specs
+    assert "_salt" in salted, f"{name}: first window not salted: {salted}"
+    assert "_salt" not in grouped, f"{name}: second window salted: {grouped}"
+    # the second window partitions by the group key(s) alone: the
+    # salted spec minus its _salt column
+    group_keys = [k.split("#")[0] for k in grouped.split(", ")]
+    assert [k.split("#")[0] for k in salted.split(", ")] == group_keys + ["_salt"]
     # results stay oracle-exact — pinned by the parity suite; here just
-    # sanity-check the query still returns rows with the right schema
-    rows = df.limit(5).collect()
-    assert len(rows) > 0
+    # sanity-check the query still returns rows
+    assert len(df.limit(5).collect()) > 0
+
+
+def test_salted_top_n_refuses_working_columns(spark):
+    from scripts_spark.operators.sampling import _salted_top_n
+
+    df = spark.createDataFrame([(1, "a", 7), (2, "a", 8)], "id long, g string, _rn long")
+    with pytest.raises(ValueError, match=r"\['_rn'\]"):
+        _salted_top_n(df, ["g"], [F.col("id")], 1, "id")
+    ok = df.withColumnRenamed("_rn", "v")
+    with pytest.raises(ValueError, match=r"\['v'\]"):
+        _salted_top_n(ok, ["g"], [F.col("id")], 1, "id", rank_col="v")
+    got = _salted_top_n(ok, ["g"], [F.col("id")], 1, "id", rank_col="rk").collect()
+    assert [(r.id, r.v, r.rk) for r in got] == [(1, 7, 1)]
+    assert set(ok.columns) | {"rk"} == set(got[0].asDict())
+
+
+@pytest.mark.parametrize(
+    "ddl, value",
+    [("v string", "x"), ("v decimal(10,2)", Decimal("1.50")),
+     ("v map<string,int>", {"a": 1})],
+)
+def test_local_df_binds_ddl_names(spark, ddl, value):
+    """Literal fixtures bind by the DDL's field names, including types
+    whose spelling contains a comma."""
+    from scripts_spark.plans.queries import _local_df
+
+    df = _local_df(spark, [(1, value)], f"k int, {ddl}")
+    assert df.columns == ["k", "v"]
+    assert df.collect()[0]["v"] == value

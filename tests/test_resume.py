@@ -167,5 +167,9 @@ def test_resume_with_para_dedup_stage(spark, outdir):
         reasons = catalog.read_output(spark, outdir).select(
             F.explode("filter_reasons").alias("r")).distinct().collect()
         assert "para_dup_frac" in {r["r"] for r in reasons}
+        # the committed per-partition metrics count the opt-in reason
+        logged = catalog.metrics_log(spark, outdir).collect()
+        assert sum(r["n_para_dup_frac"] for r in logged) > 0
+        assert all(r["n_near_dup"] == 0 for r in logged)
     finally:
         shutil.rmtree(clean, ignore_errors=True)

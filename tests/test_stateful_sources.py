@@ -1,5 +1,4 @@
-"""applyInPandasWithState custom stateful operator + CSV/JSON source
-round-trips (SURVEY S4/S5)."""
+"""CSV/JSON source round-trips (SURVEY S5)."""
 
 from __future__ import annotations
 
@@ -7,9 +6,6 @@ import shutil
 import tempfile
 
 import pytest
-from pyspark.sql import functions as F
-
-from scripts_spark.streaming import stateful
 
 
 @pytest.fixture()
@@ -17,49 +13,6 @@ def tmpd():
     d = tempfile.mkdtemp()
     yield d
     shutil.rmtree(d, ignore_errors=True)
-
-
-def test_stateful_running_user_stats(spark, tmpd):
-    ev = (
-        spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .filter(F.col("user_id") < 10)
-    )
-    in_dir, ckpt = f"{tmpd}/in", f"{tmpd}/ckpt"
-    ev.write.mode("overwrite").parquet(in_dir)
-
-    schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    stream = spark.readStream.schema(schema).parquet(in_dir)
-    q = (
-        stateful.running_user_stats(stream)
-        .writeStream.format("memory")
-        .queryName("user_stats")
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    # last emitted row per key must equal the batch aggregate
-    got = {
-        r["user_id"]: (r["n_events"], r["sum_cents"])
-        for r in spark.sql(
-            """select user_id, n_events, sum_cents from (
-                 select *, row_number() over (partition by user_id order by n_events desc) rn
-                 from user_stats) where rn = 1"""
-        ).collect()
-    }
-    want = {
-        r["user_id"]: (r["n"], r["cents"])
-        for r in ev.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
-        )
-        .collect()
-    }
-    assert got == want and len(got) > 0
 
 
 def test_csv_roundtrip(spark, tmpd):

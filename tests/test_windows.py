@@ -215,53 +215,6 @@ def test_top_k_per_stratum(spark, segs):
     assert all(r["count"] <= 2 for r in counts)
 
 
-def test_resegment_lifecycle(spark, segs, seg_rows):
-    """SURVEY §3.2 extract→infer→apply parity: classifier relabel per
-    element (oracle: classify_doc_py), then W1/W2/W4 structure
-    recompute, replicated row-at-a-time in Python."""
-    from scripts_spark.functions.model_scoring import classify_doc_py
-    from scripts_spark.plans import resegment as RS
-
-    got = {r["elem_id"]: r for r in RS.resegment(segs).collect()}
-
-    def is_target(r):
-        if r["elem_type"] in ("pb", "docDate"):
-            return False
-        return not (r["elem_type"] == "note" and r["type_attr"] == "speaker")
-
-    def brk(t):
-        return t is not None and "§" in t.lstrip()[:4]
-
-    for url, rows in _by_doc(seg_rows).items():
-        # oracle relabel
-        relabel = {
-            r["pos"]: (classify_doc_py(r["text"]) if is_target(r) else r["elem_type"])
-            for r in rows
-        }
-        # oracle sectionize on the relabeled stream
-        sec, secs = 0, {}
-        for r in rows:
-            sec += 1 if brk(r["text"]) else 0
-            secs.setdefault(sec, []).append(r)
-        for sec_rows in secs.values():
-            first_intro = next(
-                (
-                    r["pos"]
-                    for r in sec_rows
-                    if relabel[r["pos"]] == "note" and r["type_attr"] == "speaker"
-                ),
-                None,
-            )
-            for r in sec_rows:
-                want = relabel[r["pos"]]
-                if want == "u" and (first_intro is None or r["pos"] < first_intro):
-                    want = "note"  # W4 demotion
-                assert got[r["elem_id"]]["elem_type"] == want, (url, r["pos"])
-        # section typing sanity
-        for r in rows:
-            assert got[r["elem_id"]]["section_type"] in ("debateSection", "commentSection")
-
-
 def test_corpus_stats(spark, segs, seg_rows):
     """Stats-dashboard scan parity (generate-markdown.py:100-152):
     pages/speeches/words per protocol-year vs a straight Python count."""
