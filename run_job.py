@@ -94,8 +94,8 @@ def main(argv: list[str] | None = None) -> int:
     m.add_argument("--as-of", type=int, default=None,
                    help="read the snapshot as of this commit_seq")
     m.add_argument("--from-log", action="store_true",
-                   help="read the per-partition _metrics table written "
-                        "at commit time instead of recomputing")
+                   help="read the per-bucket metrics stored in the "
+                        "manifest at commit time instead of recomputing")
 
     sn = sub.add_parser("snapshots")
     sn.add_argument("--decisions", required=True)

@@ -120,9 +120,6 @@ def with_scores(docs: DataFrame, text_col: str = "scrubbed_text") -> DataFrame:
     """Attach lang_score/ppx_sum/n_bigrams columns — no shuffle."""
     u = scores_udf(docs.sparkSession)
     d = docs.withColumn("_sc", u(F.col(text_col)))
-    return (
-        d.withColumn("lang_score", F.col("_sc.lang_score"))
-        .withColumn("ppx_sum", F.col("_sc.ppx_sum"))
-        .withColumn("n_bigrams", F.col("_sc.n_bigrams"))
-        .drop("_sc")
-    )
+    return d.withColumns(
+        {c: F.col(f"_sc.{c}") for c in ("lang_score", "ppx_sum", "n_bigrams")}
+    ).drop("_sc")

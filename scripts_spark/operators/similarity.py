@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from scripts_spark.session import local_frame
+
 
 def _as_double(arr):
     return F.transform(arr, lambda x: x.cast("double"))
@@ -461,16 +463,15 @@ def ivf_centroids_lloyd(emb: DataFrame, n_lists: int = 16, key: str = "vec_id",
                 lambda s: s["sx"].cast("double") / s["n"] / 1000.0,
             ).alias("_new")
         )
-        # n_lists rows: checkpoint keeps the plan flat across passes
-        # (each pass otherwise stacks an assignment+agg subtree under
-        # the next pass's broadcast)
-        cents = (
-            cents.join(refined, "centroid_id", "left")
-            .select(
-                "centroid_id", F.coalesce("_new", "centroid_vec").alias("centroid_vec")
-            )
-            .localCheckpoint()
+        # n_lists rows: a literal frame keeps the plan flat across
+        # passes (each pass otherwise stacks an assignment+agg subtree
+        # under the next pass's broadcast) and, unlike a checkpoint,
+        # leaves no block behind for a JVM GC to reclaim
+        new = cents.join(refined, "centroid_id", "left").select(
+            "centroid_id", F.coalesce("_new", "centroid_vec").alias("centroid_vec")
         )
+        cents = local_frame(emb.sparkSession, [tuple(r) for r in new.collect()],
+                            "centroid_id int, centroid_vec array<double>")
     return cents
 
 

@@ -756,8 +756,7 @@ def curate(pages: DataFrame, cfg: CurateConfig | None = None,
     d = docs.join(F.broadcast(boiler), "domain", "left")
     kept = boiler_kept_col()
     d = (
-        d.withColumn("paras_total", F.size("paras"))
-        .withColumn("kept_paras", kept)
+        d.withColumns({"paras_total": F.size("paras"), "kept_paras": kept})
         .withColumn("paras_boiler", F.col("paras_total") - F.size("kept_paras"))
         .drop("boiler_set", "paras")
     )
@@ -824,20 +823,6 @@ def curate(pages: DataFrame, cfg: CurateConfig | None = None,
     # counts (r7: verified exceptAll-equal at 2M docs, parity suite
     # green), measured ~2x cheaper per pass (guide §1.2).
     n_sep = F.length(st) - F.length(F.translate(st, " \n", ""))
-    d = (
-        d.withColumn(
-            "n_tokens",
-            F.when(F.length(st) == 0, F.lit(0)).otherwise(n_sep + 1).cast("long"),
-        )
-        .withColumn("tok_chars", (F.length(st) - n_sep).cast("long"))
-        .withColumn(
-            "n_distinct",
-            F.when(F.length(st) == 0, F.lit(0))
-            .otherwise(F.size(F.array_distinct(F.split(st, "[ \n]"))))
-            .cast("long"),
-        )
-    )
-
     # translate char sets spelled to match the regex classes EXACTLY:
     # [A-Za-zÀ-þ] is A-Z a-z U+00C0..U+00FE (× and ÷ included — the
     # regex class includes them too), [A-ZÀ-Þ] is A-Z U+00C0..U+00DE
@@ -846,24 +831,21 @@ def curate(pages: DataFrame, cfg: CurateConfig | None = None,
         + "".join(chr(c) for c in range(0xC0, 0xFF))
     )
     _uppers = "ABCDEFGHIJKLMNOPQRSTUVWXYZ" + "".join(chr(c) for c in range(0xC0, 0xDF))
-    d = (
-        d.withColumn("n_chars", F.length(st))
-        .withColumn("n_digits", F.length(st) - F.length(F.translate(st, "0123456789", "")))
-        .withColumn(
-            "n_letters", F.length(st) - F.length(F.translate(st, _letters, ""))
-        )
-        .withColumn(
-            "n_upper", F.length(st) - F.length(F.translate(st, _uppers, ""))
-        )
-        .withColumn("lang_pred", langid.lang_pred_expr(F.col("lang_score")))
-        .withColumn("lang_conf", langid.lang_conf_expr(F.col("lang_score")))
-        .withColumn(
-            "perplexity", perplexity.perplexity_expr(F.col("ppx_sum"), F.col("n_bigrams"))
-        )
-        .withColumn(
-            "ppx_flag", perplexity.ppx_reason_expr(F.col("ppx_sum"), F.col("n_bigrams"))
-        )
-    )
+    d = d.withColumns({
+        "n_tokens": F.when(F.length(st) == 0, F.lit(0)).otherwise(n_sep + 1).cast("long"),
+        "tok_chars": (F.length(st) - n_sep).cast("long"),
+        "n_distinct": F.when(F.length(st) == 0, F.lit(0))
+        .otherwise(F.size(F.array_distinct(F.split(st, "[ \n]"))))
+        .cast("long"),
+        "n_chars": F.length(st),
+        "n_digits": F.length(st) - F.length(F.translate(st, "0123456789", "")),
+        "n_letters": F.length(st) - F.length(F.translate(st, _letters, "")),
+        "n_upper": F.length(st) - F.length(F.translate(st, _uppers, "")),
+        "lang_pred": langid.lang_pred_expr(F.col("lang_score")),
+        "lang_conf": langid.lang_conf_expr(F.col("lang_score")),
+        "perplexity": perplexity.perplexity_expr(F.col("ppx_sum"), F.col("n_bigrams")),
+        "ppx_flag": perplexity.ppx_reason_expr(F.col("ppx_sum"), F.col("n_bigrams")),
+    })
     cols = {
         n: F.col(n)
         for n in [
@@ -890,12 +872,11 @@ def curate(pages: DataFrame, cfg: CurateConfig | None = None,
         ).alias("rule_versions"),
         F.lit(cfg.input_snapshot).alias("input_snapshot"),
     )
-    d = (
-        d.withColumn("filter_reasons", _reasons(cfg, cols))
-        .withColumn("keep", F.size("filter_reasons") == 0)
-        .withColumn("doc_id", ids.doc_id_expr(F.col("url"), st))
-        .withColumn("lineage", lineage)
-    )
+    d = d.withColumn("filter_reasons", _reasons(cfg, cols)).withColumns({
+        "keep": F.size("filter_reasons") == 0,
+        "doc_id": ids.doc_id_expr(F.col("url"), st),
+        "lineage": lineage,
+    })
     return d.select(
         "url",
         "warc_ts",

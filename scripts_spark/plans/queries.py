@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from scripts_spark.functions import text_kernel
 from scripts_spark.operators.sampling import _salted_top_n
+from scripts_spark.session import local_frame
 
 
 def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -43,27 +44,6 @@ def q(name: str, sql: str | None = None):
 
 def _tokens(col):
     return F.filter(F.split(col, " "), lambda t: t != "")
-
-
-def _local_df(spark, rows, schema: str):
-    """Literal fixture rows as a LocalTableScan-backed frame (r7).
-
-    ``spark.createDataFrame(list, schema)`` plans as Scan ExistingRDD —
-    a pickled Python RDD in defaultParallelism slices, and every action
-    pays a Python-worker round trip PER SLICE (measured: a 4-row frame
-    collect()s in ~1.9s; the containment_pages cartesian over two such
-    frames spent ~20s of its 20.9s there — r7 sweep). Routing the same
-    rows through pandas + Arrow plans a pure-JVM LocalTableScan:
-    identical rows and types (the DDL schema binds positionally),
-    zero Python at execution time. dtype=object keeps None → NULL in
-    every column, including numeric ones."""
-    import pandas as pd
-    from pyspark.sql.types import StructType
-
-    names = StructType.fromDDL(schema).names
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=names, dtype=object), schema
-    )
 
 
 def _md5_hash32(col):
@@ -736,7 +716,7 @@ def multival_arbitration(spark, sf_dir):
 def interval_tier_join(spark, sf_dir):
     """Interval (range) join against a broadcast dimension (SURVEY J2)."""
     ev = T(spark, sf_dir, "events")
-    tiers = _local_df(ev.sparkSession, 
+    tiers = local_frame(ev.sparkSession,
         [(0.0, 5.0, "low"), (5.0, 15.0, "mid"), (15.0, 1e9, "high")],
         "lo double, hi double, tier string",
     )
@@ -999,7 +979,7 @@ _VERSIONS_SQL = ", ".join(f"('{v}')" for v in _VERSIONS)
 def semver_sort(spark, sf_dir):
     """Version-aware sort (SURVEY O4, accuracy_version_plot.py:39):
     split-cast (major, minor, patch) ordering, not lexicographic."""
-    df = _local_df(spark, [(v,) for v in _VERSIONS], "version string")
+    df = local_frame(spark, [(v,) for v in _VERSIONS], "version string")
     parts = F.split(F.substring(F.col("version"), 2, 100), "\\.")
     w = Window.orderBy(
         parts[0].cast("int"), parts[1].cast("int"), parts[2].cast("int")
@@ -1058,7 +1038,7 @@ def fuzzy_token_match(spark, sf_dir):
     vocab = (
         d.select(F.explode(_tokens(F.col("text"))).alias("word")).distinct()
     )
-    dim = _local_df(spark, [("table",), ("spark",), ("quer",)], "target string")
+    dim = local_frame(spark, [("table",), ("spark",), ("quer",)], "target string")
     return vocab.join(
         F.broadcast(dim), F.levenshtein(F.col("word"), F.col("target")) <= 1
     ).select("word", "target", F.levenshtein("word", "target").alias("dist"))
@@ -1531,7 +1511,7 @@ def find_toc_status(spark, sf_dir):
     """W13 ToC extraction as an oracle'd query over a fixed element
     table covering the ok / missing_pb / no_toc branches
     (/root/reference/src/ToC/delimit-ToC_2014--.py:25-98)."""
-    segs = _local_df(spark, 
+    segs = local_frame(spark,
         _TOC_ROWS, "url string, pos long, elem_type string, text string"
     )
     return W.find_toc(segs).select("url", "pos", "elem_type", "status", "in_toc")
@@ -1593,8 +1573,8 @@ def intro_join(spark, sf_dir):
     three-branch join, then — only in the hyphen branch — the damaged
     ALLCAPS surname is looked up in a (broadcast) correction table and
     every ALLCAPS run replaced by ' ' + correction."""
-    pairs = _local_df(spark, _INTRO_ROWS, "pair_id string, t1 string, t2 string")
-    corr = _local_df(spark, _CORR_ROWS, "wrong string, correct string")
+    pairs = local_frame(spark, _INTRO_ROWS, "pair_id string, t1 string, t2 string")
+    corr = local_frame(spark, _CORR_ROWS, "wrong string, correct string")
     j = pairs.select(
         "pair_id",
         TK.join_intro_texts(F.col("t1"), F.col("t2")).alias("intro"),
@@ -1656,7 +1636,7 @@ def protocol_ids(spark, sf_dir):
     """Protocol-id surgery (replace_dates.py:20-23 build,
     segmentation_accuracy_estimate.py:77-86 zero-pad) + docDate regex
     rewrite (replace_dates.py:41-42) in one pass."""
-    src = _local_df(spark, 
+    src = local_frame(spark,
         _PROT_ROWS, "year string, id long, xml string, scraped string"
     )
     pid = TK.protocol_id_build(F.col("year"), F.col("id"))
@@ -1724,7 +1704,7 @@ def iort_split(spark, sf_dir):
     (generate_i-ort_testfile.py:15-47): '<surname> i <ort>[, senare
     <ort2>, <ort3> o <ort4> och <ort5>]' rows fan out to one row per
     (surname, ort), with 'åter ' prefixes stripped."""
-    src = _local_df(spark, _IORT_ROWS, "wiki_id string, s string")
+    src = local_frame(spark, _IORT_ROWS, "wiki_id string, s string")
     return src.select(
         "wiki_id", F.explode(TK.iort_pairs(F.col("s"))).alias("p")
     ).select("wiki_id", F.col("p.surname").alias("surname"), F.col("p.iort").alias("iort"))
@@ -1754,7 +1734,7 @@ _ROLE_SQL_ROWS = ", ".join(f"('{i}', '{r}', '{g}')" for i, r, g in _ROLE_ROWS)
 def role_gender(spark, sf_dir):
     """Role-extraction regex + 'Sveriges' strip + gender value map
     (wikidata_query.py:88,92,95)."""
-    src = _local_df(spark, _ROLE_ROWS, "rid string, role string, gender string")
+    src = local_frame(spark, _ROLE_ROWS, "rid string, role string, gender string")
     return src.select(
         "rid",
         TK.role_ledamot(F.col("role")).alias("role_ledamot"),
@@ -2156,7 +2136,7 @@ def section_lifecycle(spark, sf_dir):
     speaker-note presence, pre-intro utterance demotion, and first/last
     prev/next cleanup. One shuffle on url carries all four window
     passes (shared partitioning)."""
-    segs = _local_df(spark, 
+    segs = local_frame(spark,
         _SEG_ROWS,
         "url string, pos long, elem_type string, type_attr string,"
         " text string, prev string, next string",
@@ -2205,8 +2185,8 @@ def containment_pages(spark, sf_dir):
     sentences on pages by substring containment, keep only sentences
     found on exactly one distinct page (the reference's early-exit-at-2
     check has identical semantics)."""
-    sents = _local_df(spark, _SENT_ROWS, "sid string, sentence string")
-    pages = _local_df(spark, _PAGE_ROWS, "page string, page_text string")
+    sents = local_frame(spark, _SENT_ROWS, "sid string, sentence string")
+    pages = local_frame(spark, _PAGE_ROWS, "page string, page_text string")
     return J.containment_join_unique_page(sents, pages).select("sentence", "page")
 
 
@@ -2315,7 +2295,7 @@ def gold_decade_rollup(spark, sf_dir):
     quantiles come from plans/accuracy.beta_ppf on the tiny per-stratum
     aggregate (driver-side like the reference), broadcast-joined back as
     exact micro-unit integers."""
-    docs = _local_df(spark, 
+    docs = local_frame(spark,
         _GOLD_DOCS, "doc_id string, decade long, pred boolean, gold boolean"
     )
     dec = docs.select("doc_id", "decade", "pred")
@@ -2369,7 +2349,7 @@ def version_trend(spark, sf_dir):
     corpus totals + integer-milli accuracy, semver-ordered (O4 sort)
     with deltas vs the previous release. The production substrate is
     plans/stats.snapshot_trend over the commit-snapshot log."""
-    df = _local_df(spark, 
+    df = local_frame(spark,
         _REL_ROWS, "version string, n_protocols long, n_words long, acc_milli long"
     )
     return ST.version_trend(df)
@@ -2412,7 +2392,7 @@ def date_interval_jaccard(spark, sf_dir):
     (/root/reference/src/date_accuracy_estimate.py:36-50): inclusive
     day-interval Jaccard — the only doubles are divisions of exact
     day counts, so values hash identically across engines."""
-    df = _local_df(spark, 
+    df = local_frame(spark,
         _IVJ_ROWS, "id string, s1 string, e1 string, s2 string, e2 string"
     )
     return W.interval_jaccard(df, "s1", "e1", "s2", "e2").select(
@@ -2472,7 +2452,7 @@ def date_range_per_doc(spark, sf_dir):
     date is the LATER 1999-12-31) + W10 min/max range per protocol
     (/root/reference/src/first_date.py:14-18,
     date_accuracy_estimate.py:25-34)."""
-    segs = _local_df(spark, 
+    segs = local_frame(spark,
         _DATE_ROWS, "url string, pos long, elem_type string, when_attr string"
     )
     return W.first_date(segs).join(W.date_range(segs), "url")
@@ -2539,8 +2519,8 @@ def fuzzy_cascade(spark, sf_dir):
     the left_anti residue of earlier stages, so the expensive fuzzy
     stages scan the unmatched tail, not the full fact table — no
     per-row Python at any scale."""
-    facts = _local_df(spark, _FM_FACTS, "fact_id long, name string")
-    dim = _local_df(spark, _FM_DIM, "target string")
+    facts = local_frame(spark, _FM_FACTS, "fact_id long, name string")
+    dim = local_frame(spark, _FM_DIM, "target string")
     stages = [
         ("exact", F.col("name") == F.col("target")),
         ("lower", F.lower(F.col("name")) == F.lower(F.col("target"))),
@@ -2578,7 +2558,7 @@ def tag_after_intro(spark, sf_dir):
     """W7: the reference's one-step 'speaker' latch
     (classify_join_intros.py:44-52 — a flag set on the intro row and
     consumed by the very next element) as a single lag window."""
-    segs = _local_df(spark, 
+    segs = local_frame(spark,
         _LATCH_ROWS,
         "url string, pos long, elem_type string, type_attr string, text string",
     )
@@ -2756,7 +2736,7 @@ def corpus_stats(spark, sf_dir):
     protocols / pages (pb) / speeches (speaker notes) / words per
     protocol-year as ONE partial-agg'd groupBy (plans/stats.corpus_stats)
     instead of the reference's per-file XML walk."""
-    segs = _local_df(spark, 
+    segs = local_frame(spark,
         _CORPUS_ROWS,
         "url string, pos long, elem_type string, type_attr string, text string",
     )
@@ -2849,11 +2829,11 @@ _MET_SQL_ROWS = ", ".join(
 def metrics_rollup(spark, sf_dir):
     """Per-partition metrics (north rule 'per-partition metrics written
     with the commit'): row/keep counts plus one column per filter
-    reason, the exact table catalog.commit_buckets persists alongside
-    every committed bucket (sources/catalog.partition_metrics)."""
+    reason, the exact rows catalog.commit_buckets stores in each
+    committed bucket's manifest row (sources/catalog.partition_metrics)."""
     from scripts_spark.sources.catalog import partition_metrics
 
-    dec = _local_df(spark, 
+    dec = local_frame(spark,
         _MET_ROWS,
         "url string, bucket long, keep boolean, filter_reasons array<string>",
     )
@@ -3233,8 +3213,8 @@ def null_safe_join(spark, sf_dir):
     when absent attributes must pair up instead of dropping. Still a
     hash join (null-safe equality is a valid equi-join key), not a
     nested loop."""
-    left = _local_df(spark, _NSJ_LEFT, "id long, k string")
-    right = _local_df(spark, _NSJ_RIGHT, "k string, v long")
+    left = local_frame(spark, _NSJ_LEFT, "id long, k string")
+    right = local_frame(spark, _NSJ_RIGHT, "k string, v long")
     return left.join(right, left["k"].eqNullSafe(right["k"])).select(
         "id", left["k"].alias("k"), "v"
     )
@@ -3547,8 +3527,8 @@ def pdf_page_locate(spark, sf_dir):
     at the second hit — identical keep set). posexplode is the right
     tool here: pages are a per-document handful, so the explode factor
     is bounded, and the containment join broadcasts the sentence side."""
-    spark_d = _local_df(spark, _PDF_DOCS, "pdf_id string, text string")
-    sents = _local_df(spark, _PDF_SENTS, "sent_id string, sentence string")
+    spark_d = local_frame(spark, _PDF_DOCS, "pdf_id string, text string")
+    sents = local_frame(spark, _PDF_SENTS, "sent_id string, sentence string")
     pages = spark_d.select(
         "pdf_id", F.posexplode(F.split("text", "\f")).alias("p0", "page_text")
     ).select(
@@ -3966,7 +3946,7 @@ def benchmark_contamination(spark, sf_dir):
     Two deterministically planted contaminated docs (an eval prompt
     embedded mid-sentence) guarantee the overlap path is exercised at
     every scale factor — a 0-row pass would be weak evidence."""
-    ev = _local_df(spark, _EVAL_PROMPTS, "eval_id string, prompt string")
+    ev = local_frame(spark, _EVAL_PROMPTS, "eval_id string, prompt string")
     planted = ev.select(
         F.concat(F.lit("contam-"), F.col("eval_id")).alias("doc_id"),
         F.concat(
@@ -4184,7 +4164,7 @@ def value_quantiles(spark, sf_dir):
     r = v.withColumn("rn", F.row_number().over(w)).withColumn(
         "c", F.count(F.lit(1)).over(Window.partitionBy("event_type"))
     )
-    ps = _local_df(spark, [(500,), (900,), (990,)], "p_milli long")
+    ps = local_frame(spark, [(500,), (900,), (990,)], "p_milli long")
     rank = F.greatest(F.lit(1).cast("long"), F.expr("(c * p_milli + 999) div 1000"))
     return (
         r.join(F.broadcast(ps), how="cross")
@@ -5093,7 +5073,7 @@ def lexical_topk(spark, sf_dir):
     is total), but a stop-word-ish query term cannot serialize the
     sort on one task."""
     d = T(spark, sf_dir, "documents")
-    q_ = _local_df(spark, 
+    q_ = local_frame(spark,
         [
             (1, "hash join order"),
             (2, "stream window batch"),

@@ -5,7 +5,7 @@ this sandbox has no Iceberg jar, so the same contract is implemented
 as parquet-per-bucket plus a manifest table (SURVEY.md §7.3 "Iceberg in
 sandbox"). The job-facing API is identical in both modes:
 
-    remaining = anti_join(input, manifest)      # resume
+    done = completed_buckets(manifest)         # resume
     write_bucket(...); append_manifest(bucket)  # commit unit
 
 The commit unit is ``(job_id, bucket)``:
@@ -17,9 +17,12 @@ The commit unit is ``(job_id, bucket)``:
   partition overwrite, so a crash between the data write and the
   manifest append leaves orphan files that the retry REPLACES instead
   of appending next to (no duplicate rows on resume);
-- the manifest append is the commit point; ``read_output`` returns only
-  rows whose (job_id, bucket) has a manifest row, so orphans from a
-  mid-commit crash are invisible even before the retry runs.
+- the manifest append is the commit point, and the manifest row also
+  carries the unit's metrics (row/keep counts and one count per filter
+  reason), so metrics exist exactly for committed units; ``read_output``
+  returns only rows whose (job_id, bucket) has a manifest row, so
+  orphans from a mid-commit crash are invisible even before the retry
+  runs.
 
 A killed run resumes from the last committed unit; reruns are
 idempotent because outputs are deterministic (content-hash ids, seeded
@@ -35,11 +38,14 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from scripts_spark.plans.pipeline import REASONS
+from scripts_spark.session import local_frame
 
-MANIFEST_SCHEMA = "job_id long, bucket long, n_rows long, n_kept long, commit_seq long"
+METRIC_COLS = ("n_rows", "n_kept") + tuple(f"n_{r}" for r in REASONS)
+MANIFEST_SCHEMA = ", ".join(f"{c} long" for c in ("job_id", "bucket", "commit_seq") + METRIC_COLS)
 
 
 def manifest_path(base: str) -> str:
@@ -47,40 +53,59 @@ def manifest_path(base: str) -> str:
 
 
 def read_manifest(spark: SparkSession, base: str) -> DataFrame:
-    p = manifest_path(base)
+    """The manifest, read with its explicit schema (no footer inference
+    over the per-commit files; manifests written before the reason
+    counts moved here read them as NULL). Only a missing manifest reads
+    as empty: a torn or corrupt file must fail the read, not pass for
+    "nothing committed" and trigger a full recommit."""
     try:
-        return spark.read.parquet(p)
-    except Exception:
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
+        return spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path(base))
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return local_frame(spark, [], MANIFEST_SCHEMA)
+
+
+def _committed(spark: SparkSession, base: str, job_id: int) -> tuple[set[int], int]:
+    """One collect of the manifest: ``job_id``'s committed buckets and
+    the next commit_seq."""
+    rows = read_manifest(spark, base).select("job_id", "bucket", "commit_seq").collect()
+    done = {r["bucket"] for r in rows if r["job_id"] == job_id}
+    return done, max((r["commit_seq"] for r in rows), default=-1) + 1
+
+
+def _uncommitted(decisions: DataFrame, done: set[int]) -> DataFrame:
+    return decisions.filter(~F.col("bucket").isin(sorted(done))) if done else decisions
 
 
 def completed_buckets(spark: SparkSession, base: str, job_id: int = 0) -> set[int]:
-    m = read_manifest(spark, base).filter(F.col("job_id") == job_id)
-    return {r["bucket"] for r in m.collect()}
+    return _committed(spark, base, job_id)[0]
 
 
 def remaining_buckets(decisions: DataFrame, base: str, job_id: int = 0) -> DataFrame:
-    """Resume = anti-join against this job's committed-bucket manifest."""
-    m = (
-        read_manifest(decisions.sparkSession, base)
-        .filter(F.col("job_id") == job_id)
-        .select("bucket")
-    )
-    return decisions.join(F.broadcast(m), "bucket", "left_anti")
+    """Resume = this job's decisions minus its committed buckets."""
+    return _uncommitted(decisions, completed_buckets(decisions.sparkSession, base, job_id))
 
 
 def commit_buckets(decisions: DataFrame, base: str, job_id: int = 0) -> dict[str, int]:
-    """Write all not-yet-committed buckets of ``job_id``: data under
-    data/job_id=J/bucket=B via dynamic partition overwrite, then one
-    manifest row per bucket with its metrics. The manifest append is
-    the commit point; a crash before it leaves orphan partition dirs
-    that (a) read_output never surfaces (manifest semi-join) and
-    (b) the resumed run overwrites in place (same deterministic rows)."""
-    # persist the delta: the data write, per-bucket metrics, and the
-    # manifest commit are three actions — without a checkpoint the full
-    # upstream plan (repair + boilerplate + langid + ppx) would run 3x
-    todo = remaining_buckets(decisions, base, job_id).persist()
+    """Write all not-yet-committed buckets of ``job_id``: one manifest
+    read, one data pass, one bookkeeping write. The per-bucket metrics
+    are collected first (filling the cache of the persisted delta), the
+    data goes under data/job_id=J/bucket=B via dynamic partition
+    overwrite from that cache, then one manifest row per bucket carries
+    the metrics and the commit_seq. The manifest append is the commit
+    point; a crash before it leaves orphan partition dirs that
+    (a) read_output never surfaces (manifest semi-join) and (b) the
+    resumed run overwrites in place (same deterministic rows)."""
+    spark = decisions.sparkSession
+    done, seq = _committed(spark, base, job_id)
+    # persisted so the upstream plan (repair + boilerplate + langid +
+    # ppx) runs once for both the metrics collect and the data write
+    todo = _uncommitted(decisions, done).persist()
     try:
+        metrics = partition_metrics(todo).collect()
+        if not metrics:
+            return {"committed_buckets": 0, "rows": 0}
         (
             todo.withColumn("job_id", F.lit(job_id).cast("long"))
             .write.mode("overwrite")
@@ -88,49 +113,29 @@ def commit_buckets(decisions: DataFrame, base: str, job_id: int = 0) -> dict[str
             .partitionBy("job_id", "bucket")
             .parquet(os.path.join(base, "data"))
         )
-        # persist the per-partition metrics table alongside the data
-        # (north rule: per-partition metrics written with the commit);
-        # same dynamic-overwrite unit, so a crash-retry replaces rather
-        # than duplicates, and the manifest semi-join in metrics_log
-        # hides orphans exactly as read_output does for data
-        (
-            partition_metrics(todo)
-            .withColumn("job_id", F.lit(job_id).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("job_id", "bucket")
-            .parquet(os.path.join(base, "_metrics"))
-        )
-        metrics = todo.groupBy("bucket").agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.col("keep").cast("long")).alias("n_kept"),
-        )
-        rows = metrics.collect()
-        if rows:
-            spark = decisions.sparkSession
-            prev = read_manifest(spark, base).agg(F.max("commit_seq")).collect()[0][0]
-            seq = (prev if prev is not None else -1) + 1
-            stamped = [
-                (job_id, r["bucket"], r["n_rows"], r["n_kept"], seq) for r in rows
-            ]
-            spark.createDataFrame(stamped, MANIFEST_SCHEMA).coalesce(1).write.mode(
-                "append"
-            ).parquet(manifest_path(base))
-        return {"committed_buckets": len(rows), "rows": sum(r["n_rows"] for r in rows)}
+        stamped = [(job_id, r["bucket"], seq, *(r[c] for c in METRIC_COLS)) for r in metrics]
+        local_frame(spark, stamped, MANIFEST_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(manifest_path(base))
+        return {"committed_buckets": len(metrics), "rows": sum(r["n_rows"] for r in metrics)}
     finally:
         todo.unpersist()
+
+
+def _visible(spark: SparkSession, base: str, as_of: int | None) -> DataFrame:
+    """Manifest rows committed as of a commit sequence (Iceberg
+    time-travel semantics: commit_seq <= as_of); all when None."""
+    m = read_manifest(spark, base)
+    return m if as_of is None else m.filter(F.col("commit_seq") <= as_of)
 
 
 def read_output(spark: SparkSession, base: str, as_of: int | None = None) -> DataFrame:
     """Committed rows only: semi-join on the (job_id, bucket) commit
     unit, so orphan files from a mid-commit crash never surface.
-    ``as_of`` reads the snapshot as of a commit sequence (Iceberg
-    time-travel semantics on the manifest: commit_seq <= as_of)."""
+    ``as_of`` reads the snapshot as of a commit sequence."""
     out = spark.read.parquet(os.path.join(base, "data"))
-    m = read_manifest(spark, base)
-    if as_of is not None:
-        m = m.filter(F.col("commit_seq") <= as_of)
-    return out.join(F.broadcast(m.select("job_id", "bucket")), ["job_id", "bucket"], "left_semi")
+    m = _visible(spark, base, as_of).select("job_id", "bucket")
+    return out.join(F.broadcast(m), ["job_id", "bucket"], "left_semi")
 
 
 def snapshots(spark: SparkSession, base: str) -> DataFrame:
@@ -148,15 +153,10 @@ def snapshots(spark: SparkSession, base: str) -> DataFrame:
 
 
 def metrics_log(spark: SparkSession, base: str, as_of: int | None = None) -> DataFrame:
-    """The committed per-partition metrics table: one row per
-    (job_id, bucket) with row/keep counts and per-filter-reason counts,
-    written at commit time. Same visibility rule as read_output —
-    only manifest-committed units appear."""
-    m = spark.read.parquet(os.path.join(base, "_metrics"))
-    man = read_manifest(spark, base)
-    if as_of is not None:
-        man = man.filter(F.col("commit_seq") <= as_of)
-    return m.join(F.broadcast(man.select("job_id", "bucket")), ["job_id", "bucket"], "left_semi")
+    """The committed per-partition metrics: one row per (job_id, bucket)
+    with row/keep counts and per-filter-reason counts. They are columns
+    of the unit's manifest row, so only committed units appear."""
+    return _visible(spark, base, as_of).select("job_id", "bucket", *METRIC_COLS)
 
 
 def git_stable_sort(df: DataFrame) -> DataFrame:

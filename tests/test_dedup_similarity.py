@@ -146,7 +146,11 @@ def test_ivf_lloyd_refinement(spark, emb):
         return total / len(assign), assign
 
     seed = similarity.ivf_centroids(emb, 8)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
     lloyd = similarity.ivf_centroids_lloyd(emb, 8, iters=1)
+    # the refined table is a literal frame: nothing left in the block
+    # manager for a later GC to reclaim
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() <= persisted
     obj0, _ = objective(seed)
     obj1, assign1 = objective(lloyd)
     assert obj1 >= obj0 - 1e-9, (obj0, obj1)

@@ -138,8 +138,8 @@ def test_salted_top_n_refuses_working_columns(spark):
 def test_local_df_binds_ddl_names(spark, ddl, value):
     """Literal fixtures bind by the DDL's field names, including types
     whose spelling contains a comma."""
-    from scripts_spark.plans.queries import _local_df
+    from scripts_spark.session import local_frame
 
-    df = _local_df(spark, [(1, value)], f"k int, {ddl}")
+    df = local_frame(spark, [(1, value)], f"k int, {ddl}")
     assert df.columns == ["k", "v"]
     assert df.collect()[0]["v"] == value

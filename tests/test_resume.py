@@ -3,10 +3,13 @@ identical to a single clean run (north rule resumability)."""
 
 from __future__ import annotations
 
+import glob
+import os
 import shutil
 import tempfile
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from scripts_spark.plans.pipeline import CurateConfig, curate
@@ -81,10 +84,69 @@ def test_mid_commit_crash_leaves_no_duplicates(spark, outdir):
     assert out.select("url").distinct().count() == out.count()  # no dups
 
 
+def _files(base):
+    return sorted(glob.glob(os.path.join(base, "**", "*"), recursive=True))
+
+
 def test_recommit_is_noop(spark, outdir):
     catalog.commit_buckets(_decisions(spark), outdir)
+    before = _files(outdir)
     stats = catalog.commit_buckets(_decisions(spark), outdir)
     assert stats["committed_buckets"] == 0 and stats["rows"] == 0
+    assert _files(outdir) == before  # nothing added under data/ or _manifest/
+
+
+def test_corrupt_manifest_fails_loudly(spark, outdir):
+    """A torn manifest must not read as "nothing committed" — that
+    would recommit every bucket at commit_seq 0 and lose the log."""
+    catalog.commit_buckets(_decisions(spark).filter(F.col("bucket") < 4), outdir)
+    for f in glob.glob(os.path.join(outdir, "_manifest", "*.parquet")):
+        with open(f, "wb") as fh:
+            fh.write(b"not a parquet file")
+    with pytest.raises(Py4JJavaError, match="FAILED_READ_FILE"):
+        catalog.commit_buckets(_decisions(spark), outdir)
+
+
+def test_manifest_frames_have_no_python_rdd(spark, outdir, monkeypatch):
+    """The manifest append and the empty-manifest read are JVM-local
+    frames (LocalTableScan), not pickled Python RDDs."""
+    made = []
+
+    def spy(*args):
+        df = real(*args)
+        made.append(df)
+        return df
+
+    real = catalog.local_frame
+    monkeypatch.setattr(catalog, "local_frame", spy)
+    empty = catalog.read_manifest(spark, outdir)
+    catalog.commit_buckets(_decisions(spark), outdir)
+    assert empty.count() == 0 and made[-1].count() == 8  # one row per bucket
+    for df in made:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+
+
+# Spark jobs for one lazy curate() plus its commit into an empty base,
+# measured on the test session (local[4], 8 buckets) once warm. The
+# commit's share is one manifest read, one metrics collect (which runs
+# the curate plan), one data write and one manifest append.
+COMMIT_JOBS_MAX = 11
+
+
+def test_commit_job_count(spark, outdir):
+    # the first curate of a session runs extra one-off jobs; warm up
+    catalog.commit_buckets(_decisions(spark), os.path.join(outdir, "warm"))
+    base = os.path.join(outdir, "counted")
+    sc = spark.sparkContext
+    sc.setJobGroup("test_commit_job_count", "curate + commit")
+    try:
+        catalog.commit_buckets(_decisions(spark), base)
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup("test_commit_job_count")
+    assert 0 < len(jobs) <= COMMIT_JOBS_MAX
+    assert not os.path.exists(os.path.join(base, "_metrics"))
 
 
 def test_partition_metrics(spark):
@@ -111,6 +173,14 @@ def test_metrics_written_at_commit(spark, outdir):
     assert sum(r["n_lang"] for r in rows) > 0
     # time travel applies to metrics too
     assert catalog.metrics_log(spark, outdir, as_of=0).count() == 4
+    # the logged metrics are those of the committed rows, every reason
+    recount = catalog.partition_metrics(catalog.read_output(spark, outdir))
+    want = {r["bucket"]: r.asDict() for r in recount.collect()}
+    assert m.columns == ["job_id", "bucket", *recount.columns[1:]]
+    assert len(recount.columns) == 1 + 2 + 10
+    assert {r["bucket"]: {k: v for k, v in r.asDict().items() if k != "job_id"}
+            for r in rows} == want
+    assert not os.path.exists(os.path.join(outdir, "_metrics"))
 
 
 def test_snapshot_time_travel(spark, outdir):
