@@ -139,7 +139,8 @@ def main(argv: list[str] | None = None) -> int:
         "directory, each micro-batch curated and manifest-committed; "
         "rerun the same command as new crawl drops land (availableNow "
         "catch-up). Optional cross-batch url dedup and cross-batch "
-        "boilerplate state with snapshot compaction.",
+        "boilerplate, paragraph-span and signature state, each "
+        "compacted into a snapshot every --compact-every batches.",
     )
     st.add_argument("--input", required=True)
     st.add_argument("--output", required=True)
@@ -151,15 +152,14 @@ def main(argv: list[str] | None = None) -> int:
     st.add_argument("--boiler-state", default=None,
                     help="state dir for cross-batch boilerplate evidence")
     st.add_argument("--compact-every", type=int, default=16,
-                    help="fold boiler state into a snapshot every K batches")
+                    help="fold every cross-batch state store (boiler, span, "
+                         "signature) into a snapshot every K batches")
     st.add_argument("--para-dedup", action="store_true",
                     help="corpus paragraph-dedup stage per micro-batch")
     st.add_argument("--span-state", default=None,
                     help="state dir for cross-batch paragraph-dedup span "
                          "hashes (implies --para-dedup semantics across "
                          "the whole crawl history; requires --para-dedup)")
-    st.add_argument("--span-compact-every", type=int, default=16,
-                    help="fold span state into a snapshot every K batches")
     st.add_argument("--near-dedup", action="store_true",
                     help="MinHash near-dedup stage per micro-batch")
     st.add_argument("--near-dedup-mode", default="component",
@@ -168,9 +168,6 @@ def main(argv: list[str] | None = None) -> int:
                     help="state dir for cross-batch near-dedup MinHash "
                          "signatures (drops documents near-duplicating "
                          "any PRIOR drop; requires --near-dedup)")
-    st.add_argument("--sig-compact-every", type=int, default=16,
-                    help="fold signature state into a snapshot every K "
-                         "batches")
     st.add_argument("--sig-store-buckets", type=int, default=None,
                     help="band-key-partition the signature snapshots "
                          "into N buckets and prune reads to the "
@@ -217,12 +214,10 @@ def main(argv: list[str] | None = None) -> int:
             max_files_per_trigger=a.max_files_per_trigger,
             dedup_urls_across_batches=a.dedup_urls,
             boiler_state_dir=a.boiler_state,
-            boiler_compact_every=a.compact_every,
             span_state_dir=a.span_state,
-            span_compact_every=a.span_compact_every,
             sig_state_dir=a.sig_state,
-            sig_compact_every=a.sig_compact_every,
             sig_store_buckets=a.sig_store_buckets,
+            compact_every=a.compact_every,
         )
         q.awaitTermination()
         # a valid run over an empty input commits zero batches and never

@@ -1,7 +1,7 @@
 """Structured Streaming entry points.
 
 The reference pipeline is purely batch (SURVEY.md §2.10), so streaming
-here serves two engine-native purposes:
+here serves three engine-native purposes:
 
 1. incremental ingest of new crawl partitions: a file-source stream
    over the pages directory, each micro-batch run through the SAME
@@ -21,6 +21,9 @@ here serves two engine-native purposes:
 from __future__ import annotations
 
 import os
+import shutil
+from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -37,6 +40,7 @@ from scripts_spark.plans.pipeline import (
     span_hash_cols,
 )
 from scripts_spark.sources import catalog
+from scripts_spark.session import local_frame
 from scripts_spark.sources.pages import PAGES_SCHEMA
 
 
@@ -55,12 +59,10 @@ def stream_curate(spark: SparkSession, input_dir: str, out_dir: str,
                   dedup_urls_across_batches: bool = False,
                   dedup_watermark: str = "30 days",
                   boiler_state_dir: str | None = None,
-                  boiler_compact_every: int | None = 16,
                   span_state_dir: str | None = None,
-                  span_compact_every: int | None = 16,
                   sig_state_dir: str | None = None,
-                  sig_compact_every: int | None = 16,
-                  sig_store_buckets: int | None = None):
+                  sig_store_buckets: int | None = None,
+                  compact_every: int | None = 16):
     """File-source stream → batch curate per micro-batch → manifest
     commit. Returns the started StreamingQuery.
 
@@ -114,7 +116,12 @@ def stream_curate(spark: SparkSession, input_dir: str, out_dir: str,
     band keys can match — O(batch × occupancy) instead of O(store)
     per trigger, the layout you'd run against a 10^12-document crawl
     history. The marker pins the layout too, so a store cannot be
-    silently reopened under the other one."""
+    silently reopened under the other one.
+
+    ``compact_every`` (None: never) bounds every store alike: each
+    ``compact_every`` batches a store's tail is folded into one
+    snapshot (_state_view). A state dir that belongs to another
+    checkpoint fails the trigger (_guard_watermark)."""
     cfg = cfg or CurateConfig()
     if span_state_dir is not None and not cfg.para_dedup:
         raise ValueError("span_state_dir requires CurateConfig.para_dedup=True")
@@ -181,7 +188,7 @@ def stream_curate(spark: SparkSession, input_dir: str, out_dir: str,
             if boiler_state_dir is not None:
                 boiler, evidence = _merged_boiler(
                     spark, docs, batch_id, boiler_state_dir, cfg,
-                    compact_every=boiler_compact_every,
+                    compact_every=compact_every,
                 )
             elif any_state:
                 # span/sig evidence and the strip must agree on the
@@ -191,7 +198,7 @@ def stream_curate(spark: SparkSession, input_dir: str, out_dir: str,
             span_hist = None
             if span_state_dir is not None:
                 span_hist = _span_state(
-                    spark, span_state_dir, batch_id, span_compact_every
+                    spark, span_state_dir, batch_id, compact_every
                 )
             sig_hist = None
             if sig_state_dir is not None:
@@ -200,7 +207,7 @@ def stream_curate(spark: SparkSession, input_dir: str, out_dir: str,
                 # the state reads re-check this, but by then the whole
                 # batch would already be signed and materialized on
                 # every doomed restart attempt
-                _guard_watermark(sig_state_dir, "sigs", batch_id)
+                _guard_watermark(sig_state_dir, ["sigs"], batch_id, batch_id - 1)
                 # sign the batch ONCE: the same (url, sig, bks) rows
                 # serve curate's history comparison (and, with
                 # para_dedup off, its in-batch candidates) AND the
@@ -214,12 +221,12 @@ def stream_curate(spark: SparkSession, input_dir: str, out_dir: str,
                     # batch size
                     bb = _batch_buckets(sig_cur, sig_store_buckets)
                     sig_hist = _sig_state_banded(
-                        spark, sig_state_dir, batch_id, sig_compact_every,
+                        spark, sig_state_dir, batch_id, compact_every,
                         bb, sig_store_buckets,
                     )
                 else:
                     sig_hist = _sig_state(
-                        spark, sig_state_dir, batch_id, sig_compact_every
+                        spark, sig_state_dir, batch_id, compact_every
                     )
             dec = curate(batch_df, cfg, boiler_override=boiler, docs=docs,
                          span_history=span_hist, sig_history=sig_hist,
@@ -276,6 +283,54 @@ def _line_hashes(df: DataFrame) -> DataFrame:
 _SCHEMA_CHECKED: set[str] = set()
 
 
+@dataclass(frozen=True)
+class _Store:
+    """One cross-batch evidence table: per-batch rows in
+    ``<state_dir>/<sub>/batch_id=<b>`` (the tail), folded by ``fold``
+    (a sum for counts, a distinct for key sets) into
+    ``<state_dir>/<snap>/through=<w>`` snapshots of row shape
+    ``schema`` (partitioned by ``partition_by``, if set); ``tail`` maps
+    stored tail rows to that shape."""
+
+    sub: str
+    snap: str
+    schema: str
+    fold: Callable[[DataFrame], DataFrame]
+    tail: Callable[[DataFrame], DataFrame] = lambda df: df.drop("batch_id")
+    partition_by: str | None = None
+
+
+_LINES = _Store(
+    "lines", "lines_compacted",
+    "domain string, h1 long, h2 long, line_docs long",
+    lambda v: v.groupBy("domain", "h1", "h2").agg(F.sum("line_docs").alias("line_docs")),
+)
+_DOMAINS = _Store(
+    "domains", "domains_compacted", "domain string, domain_docs long",
+    lambda v: v.groupBy("domain").agg(F.sum("domain_docs").alias("domain_docs")),
+)
+_SPANS = _Store("spans", "spans_compacted", "h1 long, h2 long", DataFrame.distinct)
+_SIGS = _Store(
+    "sigs", "sigs_compacted",
+    "url string, sig array<bigint>, bks array<bigint>", DataFrame.distinct,
+)
+
+
+def _banded_sigs(store_buckets: int) -> _Store:
+    """The banded layout of the signature store: the same compact
+    (url, sig, bks) tail rows, exploded per band on read, and snapshots
+    partitioned by ``bucket = pmod(band_key, store_buckets)``."""
+    return _Store(
+        "sigs", "sigs_banded",
+        "url string, sig array<bigint>, band int, band_key long, bucket int",
+        DataFrame.distinct,
+        tail=lambda df: df.select(
+            "url", "sig", F.posexplode("bks").alias("band", "band_key")
+        ).withColumn("bucket", sig_bucket_col(F.col("band_key"), store_buckets)),
+        partition_by="bucket",
+    )
+
+
 def _compacted_through(state_dir: str) -> int:
     """Compaction watermark: the largest batch_id whose evidence has
     been folded into the compacted snapshot (-1 = no snapshot yet).
@@ -283,8 +338,6 @@ def _compacted_through(state_dir: str) -> int:
     trusts ONLY this marker, so a crash at any point of a compaction
     leaves stale files that are simply ignored (and GC'd by the next
     compaction), never double-counted."""
-    import os
-
     p = f"{state_dir}/COMPACTED_THROUGH"
     if not os.path.exists(p):
         return -1
@@ -353,8 +406,6 @@ def _advance_watermark(state_dir: str, batch_id: int) -> None:
     off this marker, so unlike the evidence writes (whose loss merely
     replays a batch) a torn/unflushed marker after power loss could
     orphan already-GC'd evidence — the one non-idempotent step."""
-    import os
-
     tmp = f"{state_dir}/COMPACTED_THROUGH.tmp"
     with open(tmp, "w") as f:
         f.write(str(batch_id))
@@ -368,79 +419,148 @@ def _advance_watermark(state_dir: str, batch_id: int) -> None:
         os.close(dfd)
 
 
-def _gc_folded(state_dir: str, sub: str, through: int,
-               snap_sub: str | None = None) -> None:
+def _batch_ids(state_dir: str, sub: str) -> list[int]:
+    """The batch ids of the ``batch_id=`` tail partitions on disk."""
+    base = f"{state_dir}/{sub}"
+    names = os.listdir(base) if os.path.isdir(base) else []
+    return [int(d.split("=")[1]) for d in names if d.startswith("batch_id=")]
+
+
+def _gc_folded(state_dir: str, store: _Store, through: int) -> None:
     """Best-effort removal of evidence partitions already folded into
     the snapshot at ``through`` and of superseded snapshots. Failing
     here is harmless — the read path filters them out by the marker —
     so errors are swallowed (at crawl scale these are object-store
-    deletes behind the manifest catalog, same semantics).
-    ``snap_sub`` overrides the snapshot directory name (the banded sig
-    layout keeps its snapshots under ``sigs_banded``)."""
-    import os
-    import shutil
-
-    base = f"{state_dir}/{sub}"
-    if os.path.isdir(base):
-        for d in os.listdir(base):
-            if d.startswith("batch_id=") and int(d.split("=")[1]) <= through:
-                shutil.rmtree(f"{base}/{d}", ignore_errors=True)
-    cbase = f"{state_dir}/{snap_sub or sub + '_compacted'}"
-    if os.path.isdir(cbase):
-        for d in os.listdir(cbase):
+    deletes behind the manifest catalog, same semantics)."""
+    for b in _batch_ids(state_dir, store.sub):
+        if b <= through:
+            shutil.rmtree(f"{state_dir}/{store.sub}/batch_id={b}",
+                          ignore_errors=True)
+    snaps = f"{state_dir}/{store.snap}"
+    if os.path.isdir(snaps):
+        for d in os.listdir(snaps):
             if d.startswith("through=") and int(d.split("=")[1]) < through:
-                shutil.rmtree(f"{cbase}/{d}", ignore_errors=True)
+                shutil.rmtree(f"{snaps}/{d}", ignore_errors=True)
 
 
-def _has_batch_partitions(state_dir: str, sub: str) -> bool:
-    import os
+def _guard_watermark(state_dir: str, subs: list[str], batch_id: int,
+                     upto: int) -> int:
+    """THE watermark guard of every store: the compaction watermark of
+    ``state_dir`` for micro-batch ``batch_id`` reading evidence through
+    batch ``upto``. Batch ids only ever grow, so two states mean a
+    fresh or rewound checkpoint against another run's state and fail
+    fast: ``upto`` behind the watermark (GC already deleted evidence
+    the view needs), or a ``batch_id=`` partition of ``subs`` above
+    an unfolded ``batch_id`` (another run's later evidence, not yet
+    compacted — no replay produces it, and counting it is silently
+    wrong). A batch at the watermark reads only the snapshot and
+    writes nothing, so no tail partition can reach it."""
+    through = _compacted_through(state_dir)
+    fix = f"Resume with the original checkpoint_dir, or clear {state_dir!r}."
+    if upto < through:
+        raise ValueError(
+            f"{'/'.join(subs)} state watermark ({through}) is ahead of "
+            f"micro-batch id {batch_id}: this state_dir was compacted by "
+            f"a different (or further-along) checkpoint. {fix}"
+        )
+    later = max((b for sub in subs for b in _batch_ids(state_dir, sub)),
+                default=-1)
+    if through < batch_id < later:
+        raise ValueError(
+            f"{'/'.join(subs)} state holds evidence of micro-batch {later}, "
+            f"after micro-batch id {batch_id}: this state_dir was written "
+            f"by a different checkpoint. {fix}"
+        )
+    return through
 
-    base = f"{state_dir}/{sub}"
-    return os.path.isdir(base) and any(
-        d.startswith("batch_id=") for d in os.listdir(base)
+
+def _write_evidence(rows: DataFrame, batch_id: int, state_dir: str,
+                    sub: str) -> None:
+    """THE evidence writer: ``rows`` become this batch's own
+    ``batch_id=`` partition of ``<state_dir>/<sub>``, with per-write
+    dynamic overwrite (a writer option, never the session conf) so a
+    crash-replayed batch replaces its partition. A batch at or below
+    the watermark — the replay of the batch that ran the last
+    compaction — is already folded: a strict no-op. The rebalance
+    hint sizes files to the advisory target instead of one file per
+    cached partition."""
+    if batch_id <= _guard_watermark(state_dir, [sub], batch_id, batch_id):
+        return
+    (
+        rows.withColumn("batch_id", F.lit(batch_id))
+        .hint("rebalance")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(f"{state_dir}/{sub}")
     )
 
 
-def _live_state(spark: SparkSession, state_dir: str, sub: str, through: int,
-                cols: list[str], schema: str) -> DataFrame:
-    """The live evidence view: compacted snapshot (if any) + per-batch
-    partitions NEWER than the watermark. Partitions <= the watermark are
-    excluded even if GC hasn't removed them yet — their contents are
-    already inside the snapshot. The tail can be legitimately empty
-    (a replayed already-folded batch right after GC), hence the
-    explicit-schema empty frame instead of a failing schema inference."""
-    if _has_batch_partitions(state_dir, sub):
-        tail = spark.read.parquet(f"{state_dir}/{sub}").filter(
-            F.col("batch_id") > through
-        ).select(*cols)
-    else:
-        tail = spark.createDataFrame([], schema)
-    if through < 0:
-        return tail
-    # explicit schema: a zero-file snapshot (all-empty history fold)
-    # must read back as an empty frame, not an inference error (see
-    # _history_state)
-    snap = spark.read.schema(schema).parquet(
-        f"{state_dir}/{sub}_compacted/through={through}"
-    ).select(*cols)
-    return tail.unionByName(snap)
+def _snapshot(spark: SparkSession, state_dir: str, store: _Store,
+              through: int) -> DataFrame:
+    # explicit schema: an all-empty fold writes a zero-file snapshot,
+    # and inference on it would wedge the dir once the marker moved
+    return spark.read.schema(store.schema).parquet(
+        f"{state_dir}/{store.snap}/through={through}"
+    )
+
+
+def _state_view(spark: SparkSession, state_dir: str, batch_id: int,
+                upto: int, compact_every: int | None,
+                stores: list[_Store]) -> dict[str, DataFrame]:
+    """THE cross-batch state read: per store (keyed by ``sub``), the
+    snapshot at the dir's watermark plus the ``batch_id=`` partitions
+    in (watermark, upto]. ``upto`` is ``batch_id`` for the boiler
+    counts (a batch's own evidence counts towards its strip) and
+    ``batch_id - 1`` for the span and signature histories (a replay's
+    own partition may exist from its crashed attempt; dedup against it
+    would drop the whole batch), so a replay sees exactly what its
+    first attempt saw.
+
+    Once ``upto - watermark >= compact_every`` the view is folded into
+    ``through=upto`` snapshots; the dir's single marker advances once
+    ALL of them are written (a crash before leaves snapshots the
+    marker never points to), then folded tails and superseded
+    snapshots are GC'd. A trigger thus reads one snapshot plus at most
+    ``compact_every`` tail partitions per store."""
+    through = _guard_watermark(state_dir, [s.sub for s in stores],
+                               batch_id, upto)
+    views = {}
+    for s in stores:
+        if any(through < b <= upto for b in _batch_ids(state_dir, s.sub)):
+            tail = s.tail(
+                spark.read.parquet(f"{state_dir}/{s.sub}").filter(
+                    (F.col("batch_id") > through) & (F.col("batch_id") <= upto)
+                )
+            )
+        else:
+            tail = local_frame(spark, [], s.schema)
+        views[s.sub] = (
+            tail if through < 0
+            else tail.unionByName(_snapshot(spark, state_dir, s, through))
+        )
+    if not compact_every or upto - through < compact_every:
+        return views
+    for s in stores:
+        out = s.fold(views[s.sub])
+        w = (
+            out.repartition(s.partition_by).write.partitionBy(s.partition_by)
+            if s.partition_by else out.hint("rebalance").write
+        )
+        w.mode("overwrite").parquet(f"{state_dir}/{s.snap}/through={upto}")
+    _advance_watermark(state_dir, upto)
+    for s in stores:
+        _gc_folded(state_dir, s, upto)
+    return {s.sub: _snapshot(spark, state_dir, s, upto) for s in stores}
 
 
 def _span_state(spark: SparkSession, state_dir: str, batch_id: int,
                 compact_every: int | None) -> DataFrame:
-    """Cross-batch paragraph-dedup history: the distinct (h1, h2) span
-    keys of every post-boiler paragraph processed by micro-batches
-    BEFORE this one, maintained with the boiler state's
-    snapshot/watermark/GC discipline — with one twist: the history is
-    EXCLUSIVE of the current batch. Its own ``batch_id=`` partition
-    may already exist from a crashed attempt, and counting it would
-    drop every paragraph of a replayed batch as "already seen" — so
-    tail reads are bounded above by the current id, the watermark
-    records the last batch FOLDED (b-1 when batch b compacts, never b
-    itself), and a replayed batch sees exactly the history its first
-    attempt saw. Unlike boiler counts (which must include the current
-    batch), first-occurrence dedup wants strictly-prior state, so the
-    exclusive read is the semantics, not just crash hygiene.
+    """Cross-batch paragraph-dedup history: the (h1, h2) span keys of
+    every post-boiler paragraph processed by micro-batches BEFORE this
+    one (see _state_view for why the history excludes the current
+    batch — for first-occurrence dedup the exclusive read is the
+    semantics, not just crash hygiene).
 
     Scale note: like the signature store, the span join scans the
     whole store per trigger; the same snapshot-bucketing evolution
@@ -450,20 +570,16 @@ def _span_state(spark: SparkSession, state_dir: str, batch_id: int,
     far more buckets than its 8 band keys, so pruning only bites for
     trickle batches or very large N — which is exactly the
     incremental-crawl shape this store serves."""
-    return _history_state(
-        spark, state_dir, batch_id, compact_every,
-        sub="spans", schema="h1 long, h2 long", cols=["h1", "h2"],
-    )
+    return _state_view(
+        spark, state_dir, batch_id, batch_id - 1, compact_every, [_SPANS]
+    )["spans"]
 
 
 def _sig_state(spark: SparkSession, state_dir: str, batch_id: int,
                compact_every: int | None) -> DataFrame:
     """Cross-batch near-dup history: the (url, sig, bks) MinHash rows
     of every post-boiler document processed by micro-batches BEFORE
-    this one — the span state's exclusive-read/compaction/GC
-    discipline verbatim (see _span_state for why the history must
-    exclude the current batch on replay), applied to signature rows
-    instead of span keys.
+    this one — the span history's read, applied to signature rows.
 
     Scale note: the candidate join scans the whole store per trigger
     (fine while the store is snapshot + ≤K tail partitions of compact
@@ -474,12 +590,9 @@ def _sig_state(spark: SparkSession, state_dir: str, batch_id: int,
     pmod(band_key, N) with the batch's band-key set pushed down as a
     partition filter — O(batch x occupancy) per trigger instead of
     O(store), same marker/GC machinery."""
-    return _history_state(
-        spark, state_dir, batch_id, compact_every,
-        sub="sigs",
-        schema="url string, sig array<bigint>, bks array<bigint>",
-        cols=["url", "sig", "bks"],
-    )
+    return _state_view(
+        spark, state_dir, batch_id, batch_id - 1, compact_every, [_SIGS]
+    )["sigs"]
 
 
 def sig_bucket_col(band_key: "F.Column | str", store_buckets: int):
@@ -526,131 +639,24 @@ def _sig_state_banded(spark: SparkSession, state_dir: str, batch_id: int,
 
     Per-batch TAIL partitions stay in the compact (url, sig, bks)
     shape the evidence writer emits — they are ≤ compact_every batches
-    and are exploded on the fly, so pruning them would save nothing —
-    while every compaction folds tail + old snapshot into a new banded
-    snapshot. Watermark semantics, exclusive-of-current-batch reads,
-    crash-replay idempotence, and GC are _history_state's verbatim;
-    only the snapshot layout (and the pruned return) differ."""
-    sub = "sigs"
-    through = _guard_watermark(state_dir, sub, batch_id)
-    exploded_schema = (
-        "url string, sig array<bigint>, band int, band_key long, bucket int"
-    )
-    bucket = sig_bucket_col(F.col("band_key"), store_buckets)
-    if _has_batch_partitions(state_dir, sub):
-        tail = (
-            spark.read.parquet(f"{state_dir}/{sub}")
-            .filter(
-                (F.col("batch_id") > through) & (F.col("batch_id") < batch_id)
-            )
-            .select("url", "sig", F.posexplode("bks").alias("band", "band_key"))
-            .withColumn("bucket", bucket)
-        )
-    else:
-        tail = spark.createDataFrame([], exploded_schema)
-    snap = None
-    # explicit schema on snapshot reads: an all-empty-history
-    # compaction writes a zero-file snapshot, and inference on it
-    # would wedge the store (see _history_state)
-    if through >= 0:
-        snap = spark.read.schema(exploded_schema).parquet(
-            f"{state_dir}/{sub}_banded/through={through}"
-        )
-    if _should_compact(batch_id, through, compact_every):
-        merged = tail if snap is None else tail.unionByName(
-            snap.select("url", "sig", "band", "band_key", "bucket")
-        )
-        (
-            merged.distinct()
-            .repartition("bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(f"{state_dir}/{sub}_banded/through={batch_id - 1}")
-        )
-        _advance_watermark(state_dir, batch_id - 1)
-        _gc_folded(state_dir, sub, batch_id - 1, snap_sub=f"{sub}_banded")
-        snap = spark.read.schema(exploded_schema).parquet(
-            f"{state_dir}/{sub}_banded/through={batch_id - 1}"
-        )
-        tail = spark.createDataFrame([], exploded_schema)
-    out = tail.select("url", "sig", "band", "band_key")
-    if snap is None:
-        return out
-    pruned = snap.filter(
+    and are exploded on the fly. The bucket filter applies to the
+    whole view: a row outside the batch's buckets cannot match any of
+    the batch's band keys, and on the snapshot it is a partition
+    filter."""
+    view = _state_view(
+        spark, state_dir, batch_id, batch_id - 1, compact_every,
+        [_banded_sigs(store_buckets)],
+    )["sigs"]
+    return view.filter(
         F.col("bucket").isin([int(b) for b in batch_buckets])
-        if batch_buckets else F.lit(False)
     ).select("url", "sig", "band", "band_key")
-    return out.unionByName(pruned)
-
-
-def _guard_watermark(state_dir: str, sub: str, batch_id: int) -> int:
-    """Shared watermark guard for every history-state read path
-    (compact and banded): returns the compaction watermark, refusing a
-    batch id at or behind it — GC has already deleted the evidence
-    such a batch would need, so proceeding would silently shrink
-    history."""
-    through = _compacted_through(state_dir)
-    if batch_id <= through:
-        raise ValueError(
-            f"{sub} state watermark ({through}) is at or ahead of "
-            f"micro-batch id {batch_id}: this state_dir was compacted "
-            "by a different (or further-along) checkpoint. Resume with "
-            f"the original checkpoint_dir, or clear the {sub} state_dir."
-        )
-    return through
-
-
-def _should_compact(batch_id: int, through: int,
-                    compact_every: int | None) -> bool:
-    """Shared compaction trigger: fold once the unfolded tail reaches
-    ``compact_every`` batches (the current batch itself is never
-    folded — the watermark records batch_id - 1)."""
-    return bool(compact_every) and (batch_id - 1) - through >= compact_every
-
-
-def _history_state(spark: SparkSession, state_dir: str, batch_id: int,
-                   compact_every: int | None, *, sub: str, schema: str,
-                   cols: list[str]) -> DataFrame:
-    through = _guard_watermark(state_dir, sub, batch_id)
-    if _has_batch_partitions(state_dir, sub):
-        tail = (
-            spark.read.parquet(f"{state_dir}/{sub}")
-            .filter(
-                (F.col("batch_id") > through) & (F.col("batch_id") < batch_id)
-            )
-            .select(*cols)
-        )
-    else:
-        tail = spark.createDataFrame([], schema)
-    hist = tail
-    # snapshot reads carry the EXPLICIT schema: a compaction of an
-    # all-empty history legitimately writes a zero-file snapshot
-    # (_SUCCESS only), and schema inference on it would throw forever
-    # after the watermark already advanced — wedging the state dir
-    if through >= 0:
-        hist = tail.unionByName(
-            spark.read.schema(schema).parquet(
-                f"{state_dir}/{sub}_compacted/through={through}"
-            ).select(*cols)
-        )
-    if _should_compact(batch_id, through, compact_every):
-        hist.distinct().hint("rebalance").write.mode("overwrite").parquet(
-            f"{state_dir}/{sub}_compacted/through={batch_id - 1}"
-        )
-        _advance_watermark(state_dir, batch_id - 1)
-        _gc_folded(state_dir, sub, batch_id - 1)
-        hist = spark.read.schema(schema).parquet(
-            f"{state_dir}/{sub}_compacted/through={batch_id - 1}"
-        ).select(*cols)
-    return hist
 
 
 def _write_span_evidence(docs: DataFrame, boiler: DataFrame, batch_id: int,
                          state_dir: str) -> None:
     """Append this batch's post-boiler span keys (distinct 128-bit
     hashes, ~16 bytes/span — never the paragraph strings) as its own
-    ``batch_id=`` partition; per-write dynamic overwrite keeps
-    crash-replay idempotent, mirroring the boiler evidence writes.
+    ``batch_id=`` partition (see _write_evidence).
     Evidence is the PRE-dedup kept paragraphs: spans this batch
     dropped as duplicates are already in history, so the union of
     histories is unchanged and the write needs no dependency on the
@@ -659,40 +665,26 @@ def _write_span_evidence(docs: DataFrame, boiler: DataFrame, batch_id: int,
         F.explode(boiler_kept_col()).alias("para")
     )
     h1, h2 = span_hash_cols(F.col("para"))
-    (
-        para.select(h1.alias("h1"), h2.alias("h2"))
-        .distinct()
-        .withColumn("batch_id", F.lit(batch_id))
-        .hint("rebalance")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(f"{state_dir}/spans")
+    _write_evidence(
+        para.select(h1.alias("h1"), h2.alias("h2")).distinct(),
+        batch_id, state_dir, "spans",
     )
 
 
 def _write_sig_evidence(sig_rows: DataFrame, batch_id: int,
                         state_dir: str) -> None:
     """Append this batch's (url, sig, bks) MinHash rows as its own
-    ``batch_id=`` partition — same dynamic-overwrite crash-replay
-    idempotence as _write_span_evidence. ``sig_rows`` is the
+    ``batch_id=`` partition (see _write_evidence). ``sig_rows`` is the
     near_dup_sig_evidence frame _process computed (and persisted) once
     for the whole trigger; see plans.pipeline.near_dup_sig_evidence
     for what the rows are and why losers are included."""
-    (
-        sig_rows
-        .withColumn("batch_id", F.lit(batch_id))
-        .hint("rebalance")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(f"{state_dir}/sigs")
-    )
+    _write_evidence(sig_rows, batch_id, state_dir, "sigs")
 
 
 def _merged_boiler(spark: SparkSession, docs: DataFrame, batch_id: int,
                    state_dir: str, cfg: CurateConfig,
-                   compact_every: int | None = None) -> DataFrame:
+                   compact_every: int | None = None
+                   ) -> tuple[DataFrame, DataFrame]:
     """Append this batch's boilerplate evidence to the state table,
     then return boiler sets derived from ALL batches' merged counts.
 
@@ -706,42 +698,23 @@ def _merged_boiler(spark: SparkSession, docs: DataFrame, batch_id: int,
     absolute > boiler_min_docs threshold applied hash-side first so
     the join's broadcast side is just the candidate nav/footer lines.
 
-    Idempotent under micro-batch replay: evidence is partitioned by
-    batch_id and written with per-write dynamic partition overwrite
-    (an .option on the writer, same as catalog.commit_buckets — NOT a
-    session-conf mutation, which would leak dynamic mode into later
-    unrelated overwrites), so a replayed batch replaces its own
-    partition.
+    Idempotent under micro-batch replay: the line and domain counts
+    are written through _write_evidence (a replayed batch replaces its
+    own partition; the replay of the batch that ran the last
+    compaction skips its already-folded write), and the merged counts
+    are the sum over the _state_view of batches through this one,
+    compacted every ``compact_every`` batches.
 
     Returns (boiler_sets, persisted_line_docs): line_docs is persisted
     because TWO actions consume it — the state write here, and the
     lazy confirm join when curate runs the strip — and without the
     persist the batch's explode+groupBy aggregation would execute
-    twice per micro-batch. The caller unpersists it after commit.
-
-    ``compact_every`` bounds state growth: without it every micro-batch
-    re-reads ALL ``batch_id=`` partitions and re-aggregates from
-    scratch — after 10^4 micro-batches that is 10^4 small files and a
-    full re-agg per trigger. Every ``compact_every`` batches the merged
-    (domain, h1, h2) → count table is rewritten as one snapshot
-    (``lines_compacted/through=<b>``), the watermark marker advances by
-    atomic rename, and the folded per-batch partitions are dropped; the
-    per-trigger read is then one snapshot + at most ``compact_every``
-    tail partitions. Replay stays idempotent across the horizon: a
-    replayed batch == the watermark (the one batch Structured
-    Streaming can replay after a crash during the compacting trigger)
-    skips its already-folded state write entirely — a strict no-op —
-    while a replayed tail batch dynamic-overwrites its own partition
-    as before; a batch id BELOW the watermark cannot occur in a
-    healthy stream and fails fast (checkpoint/state mismatch, see
-    the guard below). A crash mid-
-    compaction leaves a half-written snapshot the marker never points
-    to; the read path ignores it and the next compaction overwrites it."""
+    twice per micro-batch. The caller unpersists it after commit."""
     # one-time per process: schema inference on the state table costs
     # a listing + footer read per call — pointless on every trigger of
     # a long stream for a migration check whose answer cannot change
     # under this process's own writes
-    if state_dir not in _SCHEMA_CHECKED and _has_batch_partitions(state_dir, "lines"):
+    if state_dir not in _SCHEMA_CHECKED and _batch_ids(state_dir, "lines"):
         legacy = spark.read.parquet(f"{state_dir}/lines")
         if "para" in legacy.columns or "h1" not in legacy.columns:
             raise ValueError(
@@ -750,74 +723,19 @@ def _merged_boiler(spark: SparkSession, docs: DataFrame, batch_id: int,
                 "state_dir or migrate it to (domain, h1, h2, line_docs)"
             )
         _SCHEMA_CHECKED.add(state_dir)
-    through = _compacted_through(state_dir)
-    # batch ids are assigned by the streaming checkpoint and only ever
-    # grow; the single legitimate id <= watermark is a crash-replay of
-    # the batch that RAN the last compaction (== through). Anything
-    # OLDER means this stream's checkpoint does not own this state_dir
-    # (fresh/rewound checkpoint against old state) — silently skipping
-    # writes would freeze boilerplate evidence forever, so fail fast.
-    if batch_id < through:
-        raise ValueError(
-            f"boiler state watermark ({through}) is ahead of micro-batch "
-            f"id {batch_id}: this state_dir was compacted by a different "
-            "(or further-along) checkpoint. Resume with the original "
-            "checkpoint_dir, or clear the boiler state_dir."
-        )
+    # fail before pinning line_docs: only a returned frame is released
+    _guard_watermark(state_dir, ["lines", "domains"], batch_id, batch_id)
     line_docs, dom_docs = boiler_line_evidence(docs, cfg)
     line_docs = line_docs.persist()
-    if batch_id != through:
-        # rebalance before writing: the evidence frame reads from the
-        # persisted cache with the scoring stage's partitioning, which
-        # would emit one near-empty file per cached partition per
-        # micro-batch; the AQE rebalance re-sizes write partitions to
-        # the advisory byte target instead (1 file per batch at test
-        # scale, ~64 MB files at crawl scale)
-        (
-            _line_hashes(line_docs)
-            .select("domain", "h1", "h2", "line_docs")
-            .withColumn("batch_id", F.lit(batch_id))
-            .hint("rebalance")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{state_dir}/lines")
-        )
-        (
-            dom_docs.withColumn("batch_id", F.lit(batch_id))
-            .hint("rebalance")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{state_dir}/domains")
-        )
-    merged_lines = _live_state(
-        spark, state_dir, "lines", through, ["domain", "h1", "h2", "line_docs"],
-        "domain string, h1 long, h2 long, line_docs long",
-    ).groupBy("domain", "h1", "h2").agg(F.sum("line_docs").alias("line_docs"))
-    merged_doms = _live_state(
-        spark, state_dir, "domains", through, ["domain", "domain_docs"],
-        "domain string, domain_docs long",
-    ).groupBy("domain").agg(F.sum("domain_docs").alias("domain_docs"))
-    if compact_every and batch_id - through >= compact_every:
-        merged_lines.hint("rebalance").write.mode("overwrite").parquet(
-            f"{state_dir}/lines_compacted/through={batch_id}"
-        )
-        merged_doms.hint("rebalance").write.mode("overwrite").parquet(
-            f"{state_dir}/domains_compacted/through={batch_id}"
-        )
-        _advance_watermark(state_dir, batch_id)
-        _gc_folded(state_dir, "lines", batch_id)
-        _gc_folded(state_dir, "domains", batch_id)
-        through = batch_id
-        # explicit schema: zero-file snapshots must read back empty,
-        # not wedge on inference (see _history_state)
-        merged_lines = spark.read.schema(
-            "domain string, h1 long, h2 long, line_docs long"
-        ).parquet(f"{state_dir}/lines_compacted/through={through}")
-        merged_doms = spark.read.schema(
-            "domain string, domain_docs long"
-        ).parquet(f"{state_dir}/domains_compacted/through={through}")
+    _write_evidence(
+        _line_hashes(line_docs).select("domain", "h1", "h2", "line_docs"),
+        batch_id, state_dir, "lines",
+    )
+    _write_evidence(dom_docs, batch_id, state_dir, "domains")
+    view = _state_view(spark, state_dir, batch_id, batch_id, compact_every,
+                       [_LINES, _DOMAINS])
+    merged_lines = _LINES.fold(view["lines"])
+    merged_doms = _DOMAINS.fold(view["domains"])
     cand = merged_lines.filter(F.col("line_docs") > cfg.boiler_min_docs)
     confirmed = (
         _line_hashes(line_docs.select("domain", "para"))

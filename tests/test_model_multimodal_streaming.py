@@ -254,16 +254,12 @@ def test_boiler_state_compaction_bounds_files(spark, tmpdirs):
         assert len(snaps) <= 1, (bid, snaps)
 
     def merged():
-        from scripts_spark.streaming.jobs import _live_state
-
-        W = _compacted_through(state_dir)
+        last = n_batches - 1
         return {
             (r["domain"], r["h1"], r["h2"]): r["line_docs"]
-            for r in _live_state(
-                spark, state_dir, "lines", W,
-                ["domain", "h1", "h2", "line_docs"],
-                "domain string, h1 long, h2 long, line_docs long",
-            ).groupBy("domain", "h1", "h2").agg(F.sum("line_docs").alias("line_docs"))
+            for r in SJ._state_view(
+                spark, state_dir, last, last, None, [SJ._LINES],
+            )["lines"].groupBy("domain", "h1", "h2").agg(F.sum("line_docs").alias("line_docs"))
             .collect()
         }
 
@@ -358,7 +354,7 @@ def test_stream_curate_cross_batch_paragraph_dedup(spark, tmpdirs):
     drop-2 (and drop-3) paragraph already recorded by drop 1 — the
     survivor is the corpus-wide first occurrence even across
     micro-batch commits — while unique content is untouched. With
-    span_compact_every=1 every batch also exercises the snapshot /
+    compact_every=1 every batch also exercises the snapshot /
     watermark / GC path, so the history drop 3 dedups against lives
     in a compacted snapshot, not raw batch partitions."""
     import datetime
@@ -391,7 +387,7 @@ def test_stream_curate_cross_batch_paragraph_dedup(spark, tmpdirs):
     for i in range(3):
         drop(i).coalesce(1).write.mode("append").parquet(in_dir)
         q = SJ.stream_curate(spark, in_dir, out_dir, ckpt, cfg,
-                             span_state_dir=span_dir, span_compact_every=1)
+                             span_state_dir=span_dir, compact_every=1)
         q.awaitTermination(120)
 
     out = {r["url"]: r["scrubbed_text"]
@@ -481,7 +477,7 @@ def test_stream_curate_cross_batch_near_dedup(spark, tmpdirs):
     catch it — the url is new; within-batch LSH cannot either — the
     original is in an already-committed batch), while unrelated drop-2
     content is untouched and drop 1 keeps its own decisions. With
-    sig_compact_every=1 the history drop 2 reads lives in a compacted
+    compact_every=1 the history drop 2 reads lives in a compacted
     snapshot, exercising the watermark/GC path for signature rows."""
     import datetime
     import os
@@ -499,7 +495,7 @@ def test_stream_curate_cross_batch_near_dedup(spark, tmpdirs):
         df = spark.createDataFrame(rows, PAGES_SCHEMA)
         df.coalesce(1).write.mode("append").parquet(in_dir)
         q = SJ.stream_curate(spark, in_dir, out_dir, ckpt, cfg,
-                             sig_state_dir=sig_dir, sig_compact_every=1)
+                             sig_state_dir=sig_dir, compact_every=1)
         q.awaitTermination(180)
 
     drop(0, [
@@ -673,7 +669,7 @@ def test_stream_curate_banded_sig_store(spark, tmpdirs):
     three drops where drops 2 and 3 repost drop-1/drop-2 content at
     new urls. Same detection semantics as the compact layout, but the
     compacted snapshots are partitioned by pmod(band_key, N) and each
-    trigger reads only its own buckets — with sig_compact_every=1 the
+    trigger reads only its own buckets — with compact_every=1 the
     history both reposts are caught against lives in a banded
     snapshot, exercising the pruned-read path end-to-end."""
     import datetime
@@ -696,7 +692,7 @@ def test_stream_curate_banded_sig_store(spark, tmpdirs):
         spark.createDataFrame(rows, PAGES_SCHEMA).coalesce(1) \
             .write.mode("append").parquet(in_dir)
         q = SJ.stream_curate(spark, in_dir, out_dir, ckpt, cfg,
-                             sig_state_dir=sig_dir, sig_compact_every=1,
+                             sig_state_dir=sig_dir, compact_every=1,
                              sig_store_buckets=16)
         q.awaitTermination(180)
 
@@ -881,3 +877,130 @@ def test_process_failure_releases_caches(spark, tmpdirs):
         q.awaitTermination(180)
         q.processAllAvailable()
     assert jsc.getPersistentRDDs().size() == baseline
+
+
+def test_state_from_a_later_batch_fails_loudly(spark, tmp_path):
+    """Evidence of a batch AFTER the current one is another
+    checkpoint's state, not yet compacted — no replay produces it. A
+    fresh checkpoint's batch 0 against it must fail before writing
+    anything, instead of counting that evidence (boiler) or ignoring
+    it (histories)."""
+    import datetime
+    import os
+
+    from scripts_spark.plans.pipeline import boilerplate_sets, deduped_docs
+
+    cfg = CurateConfig(num_buckets=2, boiler_min_docs=2, para_dedup=True)
+    boil, spans = str(tmp_path / "boil"), str(tmp_path / "spans")
+
+    def docs(bid):
+        rows = [
+            (f"https://late.example.com/b{bid}p{j}",
+             datetime.datetime(2020, 1, 1), None,
+             "gemensam nav-rad\nunik text " + str(bid * 10 + j), "sv")
+            for j in range(2)
+        ]
+        return deduped_docs(spark.createDataFrame(rows, PAGES_SCHEMA), cfg)
+
+    for bid in range(4):  # run A: batches 0-3, never compacted
+        d = docs(bid)
+        _, ld = SJ._merged_boiler(spark, d, bid, boil, cfg)
+        ld.unpersist()
+        SJ._write_span_evidence(d, boilerplate_sets(d, cfg), bid, spans)
+    before = sorted(os.listdir(boil + "/lines/batch_id=0"))
+    with pytest.raises(ValueError, match="evidence of micro-batch 3"):
+        SJ._merged_boiler(spark, docs(0), 0, boil, cfg)
+    assert sorted(os.listdir(boil + "/lines/batch_id=0")) == before
+    with pytest.raises(ValueError, match="evidence of micro-batch 3"):
+        SJ._span_state(spark, spans, 1, None)
+
+
+def test_empty_state_views_have_no_python_rdd(spark, tmp_path):
+    """A store with no evidence in range reads as an empty
+    LocalTableScan, not spark.createDataFrame([], schema)'s pickled
+    Python RDD (Scan ExistingRDD)."""
+    def check(v):
+        plan = v._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, plan
+        assert v.count() == 0
+
+    check(SJ._span_state(spark, str(tmp_path / "spans"), 0, None))
+    check(SJ._sig_state_banded(spark, str(tmp_path / "sigs"), 0, None, [], 8))
+    for v in SJ._state_view(spark, str(tmp_path / "boil"), 0, 0, None,
+                            [SJ._LINES, SJ._DOMAINS]).values():
+        check(v)
+
+
+def test_stream_curate_all_stores_compaction_equivalence(spark, tmp_path):
+    """Boiler, span and signature state all on under the one
+    compact_every knob: compacting every batch (each view read back
+    from snapshots) commits exactly the decisions of never compacting
+    (each view read from raw batch partitions), and every state dir
+    ends with an advanced marker and one snapshot per table."""
+    import datetime
+    import os
+
+    cfg = CurateConfig(num_buckets=4, boiler_min_docs=2, para_dedup=True,
+                       near_dedup=True, near_dedup_mode="neighbor")
+    NAV = "hem nyheter kontakt arkiv om oss"
+    P = "detta stycke upprepas i varje veckas leverans av samma nyhetsbrev"
+    BODY = ("riksdagen behandlade i dag utskottets omfattande betänkande "
+            "om den nya förvaltningslagen\n"
+            "beslutet fattades efter en lång debatt där flera ledamöter "
+            "yttrade sig om förslagets konsekvenser")
+    TOPICS = ["skolans finansiering", "järnvägens underhåll",
+              "vårdens köer", "polisens resurser", "skogens skydd",
+              "bostädernas hyror"]
+    in_dir = str(tmp_path / "in")
+    for i in range(3):
+        ts = datetime.datetime(2020, 5, 1 + i)
+        rows = [
+            (f"https://eq.example.com/nav{i}{j}", ts, None,
+             f"{NAV}\nen lång artikel om {TOPICS[2 * i + j]} som "
+             f"debatterades i kammaren dag {i}", "sv")
+            for j in (0, 1)
+        ] + [
+            (f"https://eq{i}.example.com/para", ts, None,
+             f"{P}\nhelt eget innehåll nummer {i} om utskottets betänkande",
+             "sv"),
+            (f"https://eq{i}.example.com/repost", ts, None, BODY, "sv"),
+        ]
+        spark.createDataFrame(rows, PAGES_SCHEMA).coalesce(1) \
+            .write.mode("append").parquet(in_dir)
+
+    def run(tag, k):
+        st = {n: str(tmp_path / f"{tag}_{n}") for n in ("boil", "span", "sig")}
+        out = str(tmp_path / f"{tag}_out")
+        q = SJ.stream_curate(
+            spark, in_dir, out, str(tmp_path / f"{tag}_ck"), cfg,
+            max_files_per_trigger=1, boiler_state_dir=st["boil"],
+            span_state_dir=st["span"], sig_state_dir=st["sig"],
+            compact_every=k,
+        )
+        q.awaitTermination(600)
+        dec = {
+            r["url"]: (r["doc_id"], r["keep"], tuple(r["filter_reasons"]),
+                       r["scrubbed_text"])
+            for r in catalog.read_output(spark, out).collect()
+        }
+        return dec, st
+
+    got, st = run("k1", 1)
+    want, _ = run("none", None)
+    assert got == want
+    # every store changed a later drop's decisions
+    assert NAV in got["https://eq.example.com/nav00"][3]
+    assert NAV not in got["https://eq.example.com/nav20"][3]
+    assert P in got["https://eq0.example.com/para"][3]
+    assert P not in got["https://eq2.example.com/para"][3]
+    assert "near_dup" not in got["https://eq0.example.com/repost"][2]
+    assert "near_dup" in got["https://eq2.example.com/repost"][2]
+    # batch 2 folded its own boiler evidence; the histories fold
+    # through the previous batch
+    for d, through, tables in ((st["boil"], 2, ("lines", "domains")),
+                               (st["span"], 1, ("spans",)),
+                               (st["sig"], 1, ("sigs",))):
+        with open(d + "/COMPACTED_THROUGH") as f:
+            assert int(f.read()) == through
+        for t in tables:
+            assert os.listdir(f"{d}/{t}_compacted") == [f"through={through}"]
