@@ -12,8 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from scripts_spark.functions import langmodel, text_kernel
+from scripts_spark.session import local_frame, per_app
 
-_TABLE_CACHE: dict[int, DataFrame] = {}
 _MAP_LITERAL: list = []
 
 
@@ -35,11 +35,11 @@ def cost_map_literal() -> Column:
 
 
 def cost_table_df(spark: SparkSession) -> DataFrame:
-    key = id(spark)
-    if key not in _TABLE_CACHE:
-        rows = [(k, v) for k, v in langmodel.bigram_cost_table().items()]
-        _TABLE_CACHE[key] = spark.createDataFrame(rows, "pair string, cost long")
-    return _TABLE_CACHE[key]
+    """The bigram cost table (pair → cost), a LocalTableScan built once
+    per Spark application."""
+    return per_app(spark, "perplexity.costs", lambda: local_frame(
+        spark, list(langmodel.bigram_cost_table().items()), "pair string, cost long"
+    ))
 
 
 def norm_token_array(text_col: Column) -> Column:

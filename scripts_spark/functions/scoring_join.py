@@ -26,17 +26,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from scripts_spark.functions import langmodel, perplexity, text_kernel
-
-_STOP_CACHE: dict[int, DataFrame] = {}
+from scripts_spark.session import local_frame, per_app
 
 
 def stop_score_df(spark: SparkSession) -> DataFrame:
-    """The word-score model as a broadcast-join table (tl → score)."""
-    key = id(spark)
-    if key not in _STOP_CACHE:
-        rows = [(w, s) for w, s in langmodel.STOP_SCORES.items()]
-        _STOP_CACHE[key] = spark.createDataFrame(rows, "tl string, stop_score long")
-    return _STOP_CACHE[key]
+    """The word-score model as a broadcast-join table (tl → score), a
+    LocalTableScan built once per Spark application."""
+    return per_app(spark, "scoring_join.stop_scores", lambda: local_frame(
+        spark, list(langmodel.STOP_SCORES.items()), "tl string, stop_score long"
+    ))
 
 
 def doc_scores(docs: DataFrame, key: str = "url",

@@ -9,8 +9,12 @@ the sandbox (overridable; on a real cluster this is ~2-3x total cores).
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Hashable
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
+
+T = TypeVar("T")
 
 
 def get_spark(
@@ -78,3 +82,28 @@ def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
     pdf = pd.DataFrame(rows or [(None,) * len(names)], columns=names, dtype=object)
     df = spark.createDataFrame(pdf, schema)
     return df if rows else df.limit(0)
+
+
+# Objects that live in one Spark application — memoized Column trees,
+# model broadcasts, literal model tables — keyed by applicationId, then
+# by the caller's key. Building a Column is a py4j round trip per node,
+# and the engine rebuilds the same trees for every batch job and stream
+# trigger, so they are built once per application instead. Keyed by
+# applicationId, not id(sc): CPython can recycle a stopped context's
+# address for a new one and hand back a dead handle. At most one live
+# context per process, so a new application id drops the whole memo.
+_PER_APP: dict[str, dict[Hashable, object]] = {}
+
+
+def per_app(spark: SparkSession, key: Hashable, build: Callable[[], T]) -> T:
+    """``build()``, memoized per Spark application and ``key``."""
+    app = spark.sparkContext.applicationId
+    memo = _PER_APP.get(app)
+    if memo is None:
+        _PER_APP.clear()
+        memo = _PER_APP.setdefault(app, {})
+    value = memo.get(key)
+    if value is None:
+        # two threads may both build; either result is valid
+        value = memo[key] = build()
+    return value  # type: ignore[return-value]

@@ -24,6 +24,17 @@ The commit unit is ``(job_id, bucket)``:
   orphans from a mid-commit crash are invisible even before the retry
   runs.
 
+Commit metadata lives on the driver, the way Iceberg handles table
+metadata through its FileIO rather than through engine jobs: the
+manifest is a directory of small parquet files that the driver reads
+with pyarrow (one reader, ``_manifest_rows``, behind both the commit's
+bookkeeping and ``read_manifest``) and appends to by writing one file
+under a ``.``-prefixed temporary name and renaming it into place — the
+rename is the commit point. Only the data write is a Spark job. The
+files stay plain parquet with the ``MANIFEST_SCHEMA`` columns, so
+manifests written by Spark (earlier versions of this module) and by the
+driver read alike, either way.
+
 A killed run resumes from the last committed unit; reruns are
 idempotent because outputs are deterministic (content-hash ids, seeded
 everything) — proven by tests/test_resume.py including a simulated
@@ -37,41 +48,85 @@ The reference's analog is download/convert caching + skip-if-exists
 from __future__ import annotations
 
 import os
+import uuid
 
-from pyspark.errors import AnalysisException
+import pyarrow as pa
+import pyarrow.dataset as pads
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from scripts_spark.plans.pipeline import REASONS
-from scripts_spark.session import local_frame
+from scripts_spark.session import local_frame, per_app
 
 METRIC_COLS = ("n_rows", "n_kept") + tuple(f"n_{r}" for r in REASONS)
-MANIFEST_SCHEMA = ", ".join(f"{c} long" for c in ("job_id", "bucket", "commit_seq") + METRIC_COLS)
+MANIFEST_COLS = ("job_id", "bucket", "commit_seq") + METRIC_COLS
+MANIFEST_SCHEMA = ", ".join(f"{c} long" for c in MANIFEST_COLS)
+_MANIFEST_ARROW = pa.schema([(c, pa.int64()) for c in MANIFEST_COLS])
+
+
+class ManifestError(RuntimeError):
+    """A manifest file that cannot be read (torn or corrupt)."""
 
 
 def manifest_path(base: str) -> str:
     return os.path.join(base, "_manifest")
 
 
-def read_manifest(spark: SparkSession, base: str) -> DataFrame:
-    """The manifest, read with its explicit schema (no footer inference
-    over the per-commit files; manifests written before the reason
-    counts moved here read them as NULL). Only a missing manifest reads
-    as empty: a torn or corrupt file must fail the read, not pass for
-    "nothing committed" and trigger a full recommit."""
+def _fs(path: str) -> tuple[pafs.FileSystem, str]:
+    if "://" in path:
+        return pafs.FileSystem.from_uri(path)
+    return pafs.LocalFileSystem(), os.path.abspath(path)
+
+
+def _manifest_rows(base: str) -> list[tuple]:
+    """Every manifest row, as MANIFEST_COLS tuples, read on the driver
+    with the explicit schema: files written before the reason counts
+    moved here read them as NULL, ``_``/``.``-prefixed files (job
+    markers, checksums, uncommitted appends) are skipped as Spark skips
+    them, and a missing manifest has no rows. A torn or corrupt file
+    raises ManifestError naming it — it must not pass for "nothing
+    committed" and trigger a full recommit."""
+    fs, path = _fs(manifest_path(base))
+    if fs.get_file_info(path).type == pafs.FileType.NotFound:
+        return []
+    dataset = pads.dataset(path, schema=_MANIFEST_ARROW, format="parquet", filesystem=fs)
     try:
-        return spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path(base))
-    except AnalysisException as e:
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
-        return local_frame(spark, [], MANIFEST_SCHEMA)
+        t = dataset.to_table(use_threads=False)
+    except (pa.ArrowException, OSError) as e:
+        for frag in dataset.get_fragments():  # find the file to name
+            try:
+                frag.to_table(schema=_MANIFEST_ARROW)
+            except (pa.ArrowException, OSError) as bad:
+                raise ManifestError(f"unreadable manifest file {frag.path}: {bad}") from bad
+        raise ManifestError(f"unreadable manifest {path}: {e}") from e
+    return list(zip(*(t.column(c).to_pylist() for c in MANIFEST_COLS)))
 
 
-def _committed(spark: SparkSession, base: str, job_id: int) -> tuple[set[int], int]:
-    """One collect of the manifest: ``job_id``'s committed buckets and
-    the next commit_seq."""
-    rows = read_manifest(spark, base).select("job_id", "bucket", "commit_seq").collect()
-    done = {r["bucket"] for r in rows if r["job_id"] == job_id}
-    return done, max((r["commit_seq"] for r in rows), default=-1) + 1
+def _append_manifest(base: str, rows: list[tuple]) -> None:
+    """Commit ``rows`` (MANIFEST_COLS tuples) as one new manifest file:
+    written under a ``.``-prefixed name that readers skip, then renamed
+    into place."""
+    fs, path = _fs(manifest_path(base))
+    fs.create_dir(path, recursive=True)
+    name = f"part-{rows[0][2]:05d}-{uuid.uuid4()}.parquet"
+    table = pa.Table.from_pylist([dict(zip(MANIFEST_COLS, r)) for r in rows], _MANIFEST_ARROW)
+    with fs.open_output_stream(f"{path}/.{name}.tmp") as out:
+        pq.write_table(table, out)
+    fs.move(f"{path}/.{name}.tmp", f"{path}/{name}")
+
+
+def read_manifest(spark: SparkSession, base: str) -> DataFrame:
+    """The manifest as a LocalTableScan over the driver's read of it
+    (see _manifest_rows)."""
+    return local_frame(spark, _manifest_rows(base), MANIFEST_SCHEMA)
+
+
+def _committed(base: str, job_id: int) -> tuple[set[int], int]:
+    """``job_id``'s committed buckets and the next commit_seq."""
+    rows = _manifest_rows(base)
+    done = {bucket for j, bucket, *_ in rows if j == job_id}
+    return done, max((seq for _, _, seq, *_ in rows), default=-1) + 1
 
 
 def _uncommitted(decisions: DataFrame, done: set[int]) -> DataFrame:
@@ -79,26 +134,26 @@ def _uncommitted(decisions: DataFrame, done: set[int]) -> DataFrame:
 
 
 def completed_buckets(spark: SparkSession, base: str, job_id: int = 0) -> set[int]:
-    return _committed(spark, base, job_id)[0]
+    return _committed(base, job_id)[0]
 
 
 def remaining_buckets(decisions: DataFrame, base: str, job_id: int = 0) -> DataFrame:
     """Resume = this job's decisions minus its committed buckets."""
-    return _uncommitted(decisions, completed_buckets(decisions.sparkSession, base, job_id))
+    return _uncommitted(decisions, _committed(base, job_id)[0])
 
 
 def commit_buckets(decisions: DataFrame, base: str, job_id: int = 0) -> dict[str, int]:
-    """Write all not-yet-committed buckets of ``job_id``: one manifest
-    read, one data pass, one bookkeeping write. The per-bucket metrics
-    are collected first (filling the cache of the persisted delta), the
-    data goes under data/job_id=J/bucket=B via dynamic partition
-    overwrite from that cache, then one manifest row per bucket carries
-    the metrics and the commit_seq. The manifest append is the commit
-    point; a crash before it leaves orphan partition dirs that
-    (a) read_output never surfaces (manifest semi-join) and (b) the
-    resumed run overwrites in place (same deterministic rows)."""
-    spark = decisions.sparkSession
-    done, seq = _committed(spark, base, job_id)
+    """Write all not-yet-committed buckets of ``job_id``: one driver-side
+    manifest read, one data pass, one driver-side manifest append. The
+    per-bucket metrics are collected first (filling the cache of the
+    persisted delta), the data goes under data/job_id=J/bucket=B via
+    dynamic partition overwrite from that cache, then one manifest file
+    with a row per bucket carries the metrics and the commit_seq. The
+    manifest append is the commit point; a crash before it leaves
+    orphan partition dirs that (a) read_output never surfaces (manifest
+    semi-join) and (b) the resumed run overwrites in place (same
+    deterministic rows)."""
+    done, seq = _committed(base, job_id)
     # persisted so the upstream plan (repair + boilerplate + langid +
     # ppx) runs once for both the metrics collect and the data write
     todo = _uncommitted(decisions, done).persist()
@@ -113,10 +168,9 @@ def commit_buckets(decisions: DataFrame, base: str, job_id: int = 0) -> dict[str
             .partitionBy("job_id", "bucket")
             .parquet(os.path.join(base, "data"))
         )
-        stamped = [(job_id, r["bucket"], seq, *(r[c] for c in METRIC_COLS)) for r in metrics]
-        local_frame(spark, stamped, MANIFEST_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(manifest_path(base))
+        _append_manifest(base, [
+            (job_id, r["bucket"], seq, *(r[c] for c in METRIC_COLS)) for r in metrics
+        ])
         return {"committed_buckets": len(metrics), "rows": sum(r["n_rows"] for r in metrics)}
     finally:
         todo.unpersist()
@@ -172,11 +226,11 @@ def partition_metrics(decisions: DataFrame) -> DataFrame:
     rule asks for (and the reference's per-year dashboards provide).
     The reason columns follow the pipeline's rule table, opt-in stages
     included, so the schema does not depend on which stages ran."""
-    aggs = [
+    aggs = per_app(decisions.sparkSession, "catalog.metric_aggs", lambda: [
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.col("keep").cast("long")).alias("n_kept"),
     ] + [
         F.sum(F.array_contains("filter_reasons", r).cast("long")).alias(f"n_{r}")
         for r in REASONS
-    ]
+    ])
     return decisions.groupBy("bucket").agg(*aggs)

@@ -121,7 +121,16 @@ def stream_curate(spark: SparkSession, input_dir: str, out_dir: str,
     ``compact_every`` (None: never) bounds every store alike: each
     ``compact_every`` batches a store's tail is folded into one
     snapshot (_state_view). A state dir that belongs to another
-    checkpoint fails the trigger (_guard_watermark)."""
+    checkpoint fails the trigger (_guard_watermark).
+
+    Each trigger starts with an empty check (one Spark job) and returns
+    when the batch has no rows. It stays although the commit would
+    write nothing for an empty batch either: with a watermark (url-dedup
+    across batches) every data batch is followed by a no-data batch
+    that advances it, and without the check that batch builds and runs
+    the whole curate plan and the commit's metrics collect on no input —
+    measured 1.4–2.2 s instead of 0.23–0.35 s per no-data trigger on a
+    4-vCPU host, time the next crawl drop would queue behind."""
     cfg = cfg or CurateConfig()
     if span_state_dir is not None and not cfg.para_dedup:
         raise ValueError("span_state_dir requires CurateConfig.para_dedup=True")

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+import re
 import shutil
 import tempfile
 
@@ -79,6 +81,55 @@ def test_stream_curate_cross_batch_url_dedup(spark, tmpdirs):
     out = catalog.read_output(spark, out_dir)
     assert out.count() == n1 + curate(new, cfg).count()
     assert out.select("url").distinct().count() == out.count()
+
+
+# Spark jobs of one url-dedup data trigger on the test session: the
+# empty check, the commit's metrics collect (the AQE stages of the
+# curate plan) and the data write. The manifest is read and appended on
+# the driver.
+DATA_TRIGGER_JOBS = 5
+
+
+def _jobs_per_batch(spark, run_id) -> dict[int, int]:
+    """Spark jobs of one streaming run, by micro-batch id (read from
+    the batch description each job carries)."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    per: dict[int, int] = {}
+    for j in sc.statusTracker().getJobIdsForGroup(str(run_id)):
+        b = int(re.search(r"batch = (\d+)", str(store.job(j).description())).group(1))
+        per[b] = per.get(b, 0) + 1
+    return per
+
+
+def test_url_dedup_trigger_job_counts(spark, tmpdirs):
+    """A url-dedup data trigger runs DATA_TRIGGER_JOBS Spark jobs. The
+    no-data trigger that follows it (the watermark advance) runs one:
+    the empty check, which stays because without it that trigger would
+    run the whole curate plan and commit on empty input. It writes
+    nothing under the output dir."""
+    in_dir, out_dir, ckpt, _ = tmpdirs
+    cfg = CurateConfig(num_buckets=8)
+    jobs, rows = {}, {}
+    for k in range(2):  # the second data trigger has a manifest to read
+        pages_df(spark, 80, partitions=1, start=80 * k).write.mode("append").parquet(in_dir)
+        q = SJ.stream_curate(spark, in_dir, out_dir, ckpt, cfg,
+                             dedup_urls_across_batches=True)
+        q.awaitTermination(120)
+        jobs.update(_jobs_per_batch(spark, q.runId))
+        rows.update((p["batchId"], p["numInputRows"]) for p in q.recentProgress
+                    if "addBatch" in p["durationMs"])
+    data = sorted(b for b, n in rows.items() if n > 0)
+    empty = sorted(b for b, n in rows.items() if n == 0)
+    assert data == [0, 2] and 1 in empty
+    assert jobs[2] <= DATA_TRIGGER_JOBS
+    assert {b: jobs[b] for b in empty} == {b: 1 for b in empty}
+    committed = {r["job_id"] for r in catalog.read_manifest(spark, out_dir).collect()}
+    assert committed == set(data)
+    written = {n for n in os.listdir(os.path.join(out_dir, "data")) if n.startswith("job_id=")}
+    assert written == {f"job_id={b}" for b in data}
+    manifests = [n for n in os.listdir(catalog.manifest_path(out_dir)) if n.endswith(".parquet")]
+    assert len(manifests) == len(data)
 
 
 def test_windowed_event_counts_stream(spark, tmpdirs):

@@ -8,8 +8,17 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from scripts_spark.functions import scoring_join
 from scripts_spark.plans import queries as Q
-from scripts_spark.plans.pipeline import CurateConfig, curate
+from scripts_spark.plans.pipeline import (
+    CurateConfig,
+    boiler_line_evidence,
+    boiler_sets_from_counts,
+    boilerplate_sets,
+    curate,
+    deduped_docs,
+    drain_curate_persisted,
+)
 from scripts_spark.sources.pages import pages_df
 
 SF = "/root/testdata/sf0.001"
@@ -55,8 +64,9 @@ def test_semi_and_anti_joins(spark):
 def test_curate_shuffle_budget(spark):
     """The pipeline's shuffle count is a scale budget: url-dedup
     groupBy (map-side combined), salted repartition, boilerplate
-    hash-pass agg + candidate recount + domain agg + broadcasts, and
-    the final decision join against the doc frame. Alert on growth.
+    hash-pass agg (domain doc counts ride along as sentinel rows) +
+    candidate recount + per-domain window + broadcasts, and the final
+    decision join against the doc frame. Alert on growth.
 
     Note the budget counts EXCHANGES, not bytes: the boilerplate
     two-pass deliberately trades one wide (domain, paragraph-string)
@@ -113,6 +123,64 @@ def test_curate_parallelism_not_capped_by_buckets(spark):
 def test_curate_boiler_broadcast(spark):
     dec = curate(pages_df(spark, 50, partitions=2), CurateConfig(num_buckets=4))
     assert "BroadcastHashJoin" in _plan(dec)
+
+
+def _aggregations_over_cache(plan: str) -> int:
+    """Partial aggregations fed by an InMemoryTableScan within one
+    stage (no exchange in between) — i.e. passes over a cached frame
+    that end in an aggregation."""
+    nodes = [l for l in plan.splitlines() if "+- " in l]
+    depth = [l.index("+- ") for l in nodes]
+    n = 0
+    for i, l in enumerate(nodes):
+        if "InMemoryTableScan" not in l:
+            continue
+        d = depth[i]
+        for j in range(i - 1, -1, -1):
+            if depth[j] >= d:
+                continue
+            d = depth[j]
+            if "Exchange" in nodes[j]:
+                break
+            if "partial_" in nodes[j]:
+                n += 1
+                break
+    return n
+
+
+def test_boilerplate_two_passes_over_docs(spark):
+    """The boilerplate stage reads the cached docs in two aggregations:
+    the hash pass, whose per-doc sentinel rows also count each domain's
+    docs, and the candidate recount — no separate domain-count pass. Its
+    sets equal the unfused exact counts' (boiler_line_evidence, the
+    streaming evidence path)."""
+    cfg = CurateConfig(num_buckets=4)
+    docs = deduped_docs(pages_df(spark, 200, partitions=2), cfg).persist()
+    try:
+        got = boilerplate_sets(docs, cfg)
+        assert _aggregations_over_cache(_plan(got)) == 2
+        want = boiler_sets_from_counts(*boiler_line_evidence(docs, cfg), cfg)
+
+        def sets(df):
+            return {r["domain"]: frozenset(r["boiler_set"]) for r in df.collect()}
+
+        assert sets(got) == sets(want) and sets(want)
+    finally:
+        docs.unpersist()
+
+
+def test_join_scorer_model_tables_are_local(spark):
+    """The join scorer's model tables are LocalTableScans (no pickled
+    Python RDD to scan per slice), one per Spark application."""
+    dec = curate(pages_df(spark, 50, partitions=2),
+                 CurateConfig(num_buckets=4, scorer="join"))
+    try:
+        plan = _plan(dec)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+        other = spark.newSession()
+        assert scoring_join.stop_score_df(other) is scoring_join.stop_score_df(spark)
+    finally:
+        drain_curate_persisted()
 
 
 def test_minhash_no_vocab_broadcast(spark):

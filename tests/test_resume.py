@@ -3,13 +3,13 @@ identical to a single clean run (north rule resumability)."""
 
 from __future__ import annotations
 
-import glob
 import os
+import re
 import shutil
 import tempfile
+import threading
 
 import pytest
-from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from scripts_spark.plans.pipeline import CurateConfig, curate
@@ -85,7 +85,9 @@ def test_mid_commit_crash_leaves_no_duplicates(spark, outdir):
 
 
 def _files(base):
-    return sorted(glob.glob(os.path.join(base, "**", "*"), recursive=True))
+    """Every file under ``base``, hidden ones (checksums, temporary
+    manifest files) included."""
+    return sorted(os.path.join(d, n) for d, _, names in os.walk(base) for n in names)
 
 
 def test_recommit_is_noop(spark, outdir):
@@ -98,40 +100,75 @@ def test_recommit_is_noop(spark, outdir):
 
 def test_corrupt_manifest_fails_loudly(spark, outdir):
     """A torn manifest must not read as "nothing committed" — that
-    would recommit every bucket at commit_seq 0 and lose the log."""
+    would recommit every bucket at commit_seq 0 and lose the log. The
+    commit fails on the catalog's error naming the file, before it
+    writes anything."""
     catalog.commit_buckets(_decisions(spark).filter(F.col("bucket") < 4), outdir)
-    for f in glob.glob(os.path.join(outdir, "_manifest", "*.parquet")):
-        with open(f, "wb") as fh:
-            fh.write(b"not a parquet file")
-    with pytest.raises(Py4JJavaError, match="FAILED_READ_FILE"):
+    torn = [f for f in _files(os.path.join(outdir, "_manifest")) if f.endswith(".parquet")]
+    assert len(torn) == 1
+    with open(torn[0], "wb") as fh:
+        fh.write(b"not a parquet file")
+    before = _files(outdir)
+    with pytest.raises(catalog.ManifestError, match=re.escape(torn[0])):
         catalog.commit_buckets(_decisions(spark), outdir)
+    assert _files(outdir) == before  # nothing new under data/ or _manifest/
 
 
 def test_manifest_frames_have_no_python_rdd(spark, outdir, monkeypatch):
-    """The manifest append and the empty-manifest read are JVM-local
-    frames (LocalTableScan), not pickled Python RDDs."""
-    made = []
+    """The manifest reads as a JVM-local frame (LocalTableScan), empty
+    or not, never a pickled Python RDD, and its append launches no
+    Spark job."""
+    sc = spark.sparkContext
+    real = catalog._append_manifest
 
-    def spy(*args):
-        df = real(*args)
-        made.append(df)
-        return df
+    def in_group(*args):
+        sc.setJobGroup("manifest_append", "manifest append")
+        try:
+            real(*args)
+        finally:
+            sc._jsc.clearJobGroup()
 
-    real = catalog.local_frame
-    monkeypatch.setattr(catalog, "local_frame", spy)
+    monkeypatch.setattr(catalog, "_append_manifest", in_group)
     empty = catalog.read_manifest(spark, outdir)
     catalog.commit_buckets(_decisions(spark), outdir)
-    assert empty.count() == 0 and made[-1].count() == 8  # one row per bucket
-    for df in made:
+    full = catalog.read_manifest(spark, outdir)
+    assert empty.count() == 0 and full.count() == 8  # one row per bucket
+    assert list(sc.statusTracker().getJobIdsForGroup("manifest_append")) == []
+    for df in (empty, full):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "LocalTableScan" in plan and "ExistingRDD" not in plan
 
 
+def test_manifest_reads_spark_written_files(spark, outdir):
+    """A _manifest/ written by Spark — as earlier versions of the
+    catalog wrote it: part files, _SUCCESS and .crc files, one file
+    from before the reason counts moved into the manifest — reads back
+    with identical rows, NULL for the columns a file lacks, and the
+    next commit continues its commit_seq."""
+    full = [(0, b, 0, 10 + b, b, *range(len(catalog.METRIC_COLS) - 2))
+            for b in range(2)]
+    spark.createDataFrame(full, catalog.MANIFEST_SCHEMA).coalesce(1).write.parquet(
+        catalog.manifest_path(outdir))
+    old = "job_id long, bucket long, n_rows long, n_kept long, commit_seq long"
+    spark.createDataFrame([(0, 2, 30, 3, 1)], old).coalesce(1).write.mode(
+        "append").parquet(catalog.manifest_path(outdir))
+    names = os.listdir(catalog.manifest_path(outdir))
+    assert "_SUCCESS" in names and any(n.startswith(".") for n in names)
+    want = full + [(0, 2, 1, 30, 3) + (None,) * (len(catalog.METRIC_COLS) - 2)]
+    assert sorted(catalog._manifest_rows(outdir)) == sorted(want)
+    got = catalog.read_manifest(spark, outdir).collect()
+    assert sorted(tuple(r) for r in got) == sorted(want)
+    assert catalog.completed_buckets(spark, outdir) == {0, 1, 2}
+    catalog.commit_buckets(_decisions(spark).filter(F.col("bucket") == 5), outdir)
+    seqs = {r["bucket"]: r["commit_seq"] for r in catalog.read_manifest(spark, outdir).collect()}
+    assert seqs == {0: 0, 1: 0, 2: 1, 5: 2}
+
+
 # Spark jobs for one lazy curate() plus its commit into an empty base,
 # measured on the test session (local[4], 8 buckets) once warm. The
-# commit's share is one manifest read, one metrics collect (which runs
-# the curate plan), one data write and one manifest append.
-COMMIT_JOBS_MAX = 11
+# commit's share is one metrics collect (which runs the curate plan)
+# and one data write; the manifest read and append are driver-side.
+COMMIT_JOBS_MAX = 9
 
 
 def test_commit_job_count(spark, outdir):
@@ -147,6 +184,32 @@ def test_commit_job_count(spark, outdir):
     jobs = sc.statusTracker().getJobIdsForGroup("test_commit_job_count")
     assert 0 < len(jobs) <= COMMIT_JOBS_MAX
     assert not os.path.exists(os.path.join(base, "_metrics"))
+
+
+# py4j round trips of one warm curate() on the test session, counted at
+# the gateway client: the measured count plus 10%. Every pure Column
+# tree is memoized per (config, application) and each stage is a few
+# selects, so a warm build sends only the DataFrame operations.
+CURATE_ROUND_TRIPS_MAX = 236  # measured: 215
+
+
+def test_curate_round_trips(spark, monkeypatch):
+    pages = pages_df(spark, 300, partitions=4)
+    curate(pages, CFG)  # builds the memoized Column trees
+    client = spark.sparkContext._gateway._gateway_client
+    real, sent, me = client.send_command, [], threading.get_ident()
+
+    def counting(*args, **kwargs):
+        # py4j's finalizer thread sends object deletes on its own
+        # connection, whenever it runs; count this thread's calls only
+        if threading.get_ident() == me:
+            sent.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    curate(pages, CFG)
+    monkeypatch.undo()
+    assert 0 < len(sent) <= CURATE_ROUND_TRIPS_MAX
 
 
 def test_partition_metrics(spark):
