@@ -9,56 +9,9 @@ uniqueness, so the audit becomes a cheap invariant check.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import Column, functions as F
-
-BASE58_ALPHABET = "123456789ABCDEFGHJKLMNPQRSTUVWXYZabcdefghijkmnopqrstuvwxyz"
 
 
 def doc_id_expr(url: Column, text: Column) -> Column:
     """Content-hash id: hex sha256 of url + '\\n' + scrubbed text."""
     return F.sha2(F.concat_ws("\n", url, text), 256)
-
-
-def base58_encode_py(b: bytes) -> str:
-    """Reference-parity base58 (bitcoin alphabet), for the uuid-suffix
-    ordinal sort at /root/reference/src/sample_paragraphs.py:45-46."""
-    n = int.from_bytes(b, "big")
-    out = []
-    while n > 0:
-        n, r = divmod(n, 58)
-        out.append(BASE58_ALPHABET[r])
-    pad = 0
-    for byte in b:
-        if byte == 0:
-            pad += 1
-        else:
-            break
-    return "1" * pad + "".join(reversed(out))
-
-
-def base58_decode_py(s: str) -> int:
-    n = 0
-    for c in s:
-        n = n * 58 + BASE58_ALPHABET.index(c)
-    return n
-
-
-def base58_sha256_udf():
-    """Vectorized base58(sha256(s)) pandas UDF — only for bit-parity id
-    formats; the pipeline itself uses the pure-expression hex form.
-    Built lazily (decorating needs an active SparkSession)."""
-
-    def _fn(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        import hashlib
-
-        for s in it:
-            yield s.map(
-                lambda v: base58_encode_py(hashlib.sha256(v.encode("utf-8")).digest())
-                if v is not None
-                else None
-            )
-
-    return F.pandas_udf(_fn, "string")

@@ -1,85 +1,14 @@
-"""Language-ID via vocabulary-deduplicated token scoring.
+"""Language decision from a document's integer language score.
 
-Architecture = the reference's big optimization made distributed: the
-``prob_dict`` per-word memo in classify_paragraph
-(/root/reference/src/cur-prot/reclassify.py:40-47) becomes
-
-    explode tokens → per-doc (token, count) partial agg
-    → DISTINCT vocabulary → score each word ONCE
-    → join scores back → per-doc long sum + decision
-
-which turns O(total tokens) scoring work into O(distinct tokens) — the
-single biggest throughput lever at web scale (SURVEY.md §4). The word
-score here is a cheap expression (broadcast map lookup + char
-heuristics), but the plan shape is exactly what a real fastText
-mapInPandas scorer plugs into: only `_score_vocab` changes.
-
-Scores are integers ⇒ the per-doc sum is an exact long (no float-order
-nondeterminism across partitions).
+The score itself (the sum of per-token word scores, exact long) comes
+from the model scorers: the Arrow UDF in scoring_udf.py or the
+explode+join form in scoring_join.py. These two expressions are the
+Spark twins of ``langmodel.lang_decision`` and ``langmodel.lang_conf``.
 """
 
 from __future__ import annotations
 
-from itertools import chain
-
-from pyspark.sql import Column, DataFrame, functions as F
-
-from scripts_spark.functions import langmodel, text_kernel
-
-
-_STOP_MAP_CACHE: list = []
-
-
-def _stop_score_map() -> Column:
-    """The broadcast model: word → integer score, as a map literal.
-    Built as one sql expr string (a per-element F.lit costs a py4j
-    round-trip each — pure driver overhead)."""
-    if not _STOP_MAP_CACHE:
-        parts = []
-        for w, s in langmodel.STOP_SCORES.items():
-            ww = w.replace("\\", "\\\\").replace("'", "\\'")
-            parts.append(f"'{ww}',{int(s)}")
-        _STOP_MAP_CACHE.append(F.expr("map(" + ",".join(parts) + ")"))
-    return _STOP_MAP_CACHE[0]
-
-
-def token_score_expr(tok: Column) -> Column:
-    """Mirror of langmodel.token_score_py as a Column expression."""
-    tl = text_kernel.token_normalize(tok)
-    heur = F.when(tl.rlike("[åäö]"), F.lit(2)).otherwise(F.lit(0)) + F.when(
-        tl.rlike("[wz]"), F.lit(-1)
-    ).otherwise(F.lit(0))
-    return F.when(tl == "", F.lit(0)).otherwise(
-        F.coalesce(_stop_score_map()[tl], heur)
-    )
-
-
-def token_stats(docs: DataFrame, key: str = "url", text_col: str = "scrubbed_text") -> DataFrame:
-    """Per-doc token statistics + language score via vocab-dedup scoring.
-
-    Returns one row per ``key``: n_tokens, n_distinct, tok_chars,
-    lang_score (all exact longs). Docs with zero tokens are absent
-    (left-join + coalesce(0) at the call site).
-    """
-    tok_counts = (
-        docs.select(F.col(key), F.explode(text_kernel.tokens(F.col(text_col))).alias("token"))
-        .groupBy(key, "token")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    # score each distinct word once (the prob_dict memo, distributed)
-    vocab = tok_counts.select("token").distinct().withColumn(
-        "score", token_score_expr(F.col("token")).cast("long")
-    )
-    return (
-        tok_counts.join(vocab, "token")
-        .groupBy(key)
-        .agg(
-            F.sum("cnt").alias("n_tokens"),
-            F.count(F.lit(1)).alias("n_distinct"),
-            F.sum(F.length("token") * F.col("cnt")).alias("tok_chars"),
-            F.sum(F.col("score") * F.col("cnt")).alias("lang_score"),
-        )
-    )
+from pyspark.sql import Column, functions as F
 
 
 def lang_pred_expr(score: Column) -> Column:

@@ -66,6 +66,8 @@ KERNEL_VERSIONS = {
     "protocol_id": "1.0",
     "docdate_rewrite": "1.0",
     "iort_pairs": "1.0",
+    # no kernel left behind this entry; it stays because the lineage
+    # bytes (and so every output digest) include it
     "fold_names": "1.0",
 }
 
@@ -182,17 +184,6 @@ def scrub_all(col: Column) -> Column:
     """PII then toxicity — the pipeline's full redaction pass; the
     order is part of the rule version."""
     return scrub_toxicity(scrub_pii(col))
-
-
-def repair_and_scrub(raw: Column) -> Column:
-    """The full per-paragraph text chain, in pipeline order:
-
-    dollar_signs -> join_soft_hyphens -> fix_capitalized_dashes ->
-    scrub_pii -> scrub_toxicity, mirroring the reference post-pipeline
-    stage order (/root/reference/src/cur-prot/post-pipeline.py:135-146
-    runs dollar_sign_replace then fix_capitalized_dashes).
-    """
-    return scrub_all(fix_capitalized_dashes(join_soft_hyphens(dollar_signs(raw))))
 
 
 # --- word-frequency token normalization -----------------------------
@@ -369,17 +360,3 @@ def gender_map(col: Column) -> Column:
         .when(col == "man", F.lit("man"))
         .otherwise(F.lit(None).cast("string"))
     )
-
-
-# --- name cleaning for fuzzy matching ---------------------------------
-# The reference cleans names before matching (fuzzy_matching.py:35,56
-# via match_mp.clean_names): lowercase, fold the Scandinavian/accented
-# letters to ASCII, drop everything but [a-z ], collapse whitespace.
-_FOLD_SRC = "åäæöøéèêëüûáàâíìîóòôýÿç"
-_FOLD_DST = "aaaooeeeeuuaaaiiioooyyc"
-
-
-def fold_names(col: Column) -> Column:
-    out = F.translate(F.lower(col), _FOLD_SRC, _FOLD_DST)
-    out = F.regexp_replace(out, "[^a-z ]", " ")
-    return normalize_ws(out)

@@ -1,6 +1,6 @@
-"""Deduplication operators for the training-data pipeline: exact,
-MinHash+LSH, SimHash, n-gram Jaccard verification, and
-connected-components grouping of the detected pairs.
+"""Deduplication operators for the training-data pipeline: exact
+paragraph (span) dedup, MinHash+LSH, SimHash, n-gram Jaccard
+verification, and connected-components grouping of the detected pairs.
 
 Scale design: every method is explode→agg→self-join-on-small-key; no
 driver-side collection, no O(n²) pair enumeration outside LSH buckets.
@@ -32,14 +32,6 @@ def word_shingles(text_col: Column, k: int = 3) -> Column:
             ),
         ).otherwise(F.array().cast("array<string>")),
     )
-
-
-def exact_duplicates(df: DataFrame, key: str, text_col: str = "text") -> DataFrame:
-    """Exact dedup via content hash: returns (key, group_key, is_canonical)
-    where is_canonical marks the deterministic survivor (min key)."""
-    h = df.select(F.col(key), F.xxhash64(F.col(text_col)).alias("group_key"))
-    w = Window.partitionBy("group_key").orderBy(key)
-    return h.withColumn("is_canonical", F.row_number().over(w) == 1)
 
 
 def _span_array(t: Column, span: int) -> Column:
@@ -433,6 +425,13 @@ def simhash_near_pairs(fp: DataFrame, key: str, max_hamming: int = 3,
     return pairs.filter(F.col("hamming") <= max_hamming)
 
 
+def release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks behind a localCheckpoint()ed frame now rather
+    than at whatever JVM GC lets Spark's cleaner find it unreachable.
+    The frame cannot be read afterwards."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def connected_components(pairs: DataFrame, key_a: str = "key_a",
                          key_b: str = "key_b", max_iter: int = 25) -> DataFrame:
     """Near-dup GROUPS from pair output: connected components by
@@ -449,7 +448,10 @@ def connected_components(pairs: DataFrame, key_a: str = "key_a",
     exact count of changed labels. For pathological diameters the
     large-star/small-star CC algorithm halves rounds, but near-dup
     graphs never get there. Returns (node, group) with group = min key
-    in the component; only keys that appear in ``pairs`` are returned."""
+    in the component; only keys that appear in ``pairs`` are returned.
+    The returned frame is a local checkpoint, the only one of the
+    function's checkpoints left; release_checkpoint frees it once the
+    caller is done with it."""
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     edges = pairs.select(F.col(key_a).alias("a"), F.col(key_b).alias("b"))
@@ -484,6 +486,7 @@ def connected_components(pairs: DataFrame, key_a: str = "key_a",
             .filter(F.col("n.group") != F.col("o.group"))
             .count()
         )
+        release_checkpoint(labels)
         labels = new_labels
         if changed == 0:
             break
@@ -495,4 +498,5 @@ def connected_components(pairs: DataFrame, key_a: str = "key_a",
             f"({changed} labels still changing); raise max_iter — the "
             "component diameter exceeds it"
         )
+    release_checkpoint(edges)
     return labels

@@ -1,23 +1,13 @@
-"""Join operators beyond plain equi-joins: interval (point-in-range)
-joins, the fuzzy-match cascade, and multi-match arbitration —
-SURVEY.md §2.3 J2/J3/J8.
+"""Join operators beyond plain equi-joins: the fuzzy-match cascade,
+unique-page substring containment and the as-of join — SURVEY.md §2.3
+J3/J5 and the custom-operator family. The interval join (J2) and
+multi-match arbitration (J8) are registry queries (interval_tier_join,
+multival_arbitration).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
-
-
-def interval_join(facts: DataFrame, dim: DataFrame, point: Column,
-                  start: Column, end: Column, how: str = "inner",
-                  inclusive_end: bool = False) -> DataFrame:
-    """Point-in-interval join, dimension broadcast (SURVEY J2 —
-    fuzzy_matching.py:84, mp-coverage.py:175-178: start <= p < end).
-    Broadcasting the dim turns the non-equi join into a BNLJ over a
-    small in-memory side — the only sane physical plan for range
-    predicates at scale (no shuffle of the fact table)."""
-    cond = (point >= start) & ((point <= end) if inclusive_end else (point < end))
-    return facts.join(F.broadcast(dim), cond, how)
 
 
 def fuzzy_match_cascade(facts: DataFrame, dim: DataFrame, fact_key: str,
@@ -66,41 +56,19 @@ def fuzzy_match_cascade(facts: DataFrame, dim: DataFrame, fact_key: str,
     return best.unionByName(missing.select(best.columns))
 
 
-def lookup_with_arbitration(facts: DataFrame, dim: DataFrame, on: str,
-                            value_col: str, multi_label: str = "Multival") -> DataFrame:
-    """SURVEY J8 (add-catalog-dob.py:10-17): left join; null if absent,
-    the value if unique, `multi_label` if ambiguous."""
-    agg = dim.groupBy(on).agg(
-        F.count_distinct(value_col).alias("_n"), F.min(value_col).alias("_v")
-    )
-    out = facts.join(F.broadcast(agg), on, "left")
-    return out.withColumn(
-        value_col,
-        F.when(F.col("_n").isNull(), F.lit(None))
-        .when(F.col("_n") > 1, F.lit(multi_label))
-        .otherwise(F.col("_v")),
-    ).drop("_n", "_v")
-
-
-def _unique_page_arb(hits: DataFrame, sent_col: str, page_id: str) -> DataFrame:
-    """J5 arbitration shared by both containment forms: keep sentences
-    found on exactly one distinct page (the reference's early-exit-at-2
-    check has identical semantics)."""
-    arb = hits.groupBy(sent_col).agg(
-        F.count_distinct(page_id).alias("n_pages"), F.min(page_id).alias(page_id)
-    )
-    return arb.filter(F.col("n_pages") == 1).drop("n_pages")
-
-
 def containment_join_unique_page(sentences: DataFrame, pages: DataFrame,
                                  sent_col: str = "sentence",
                                  page_text: str = "page_text",
                                  page_id: str = "page") -> DataFrame:
     """SURVEY J5 (add_modern_pagenumbers.py:102-123): locate sentences
     on pages by substring containment; keep only sentences found on
-    exactly one distinct page."""
+    exactly one distinct page (the reference's early-exit-at-2 check
+    has identical semantics)."""
     hits = sentences.join(pages, F.col(page_text).contains(F.col(sent_col)))
-    return _unique_page_arb(hits, sent_col, page_id)
+    arb = hits.groupBy(sent_col).agg(
+        F.count_distinct(page_id).alias("n_pages"), F.min(page_id).alias(page_id)
+    )
+    return arb.filter(F.col("n_pages") == 1).drop("n_pages")
 
 
 def asof_join(left: DataFrame, right: DataFrame, key: str, ts: str,
@@ -151,56 +119,3 @@ def asof_join(left: DataFrame, right: DataFrame, key: str, ts: str,
     for c in value_cols:
         out = out.withColumn(f"{c}{suffix}", F.col("_r_row")[c])
     return out.drop("_r_row")
-
-
-def containment_join_unique_page_indexed(sentences: DataFrame, pages: DataFrame,
-                                         sent_col: str = "sentence",
-                                         page_text: str = "page_text",
-                                         page_id: str = "page") -> DataFrame:
-    """Scale form of containment_join_unique_page: identical output,
-    built as candidate-prune + exact-verify instead of an all-pairs
-    contains() BNLJ (which is quadratic in corpus size — fine for the
-    reference's per-protocol page counts, a scale-killer at 10^12
-    pages).
-
-    Blocking key: any INTERNAL whitespace token of the sentence — if a
-    page contains the sentence as a substring, every internal token is
-    flanked by the sentence's own single spaces, so it also appears as
-    an exact ' '-delimited token of the page text. The longest internal
-    token (ties: lexicographic) is the most selective, and the
-    candidate join is then a plain EQUI-join between that token and the
-    page's exploded distinct token set — shuffle-partitionable, no
-    cross product. contains() then re-verifies each candidate exactly,
-    so false candidates cost only the verify. Sentences with < 3
-    tokens (no internal token) fall back to the broadcast contains()
-    join — broadcastable because such sentences are the rare
-    degenerate tail."""
-    toks = F.filter(F.split(F.col(sent_col), " "), lambda t: t != "")
-    inner = F.slice(toks, 2, F.greatest(F.size(toks) - 2, F.lit(0)))
-    block = F.array_max(
-        F.transform(inner, lambda t: F.struct(F.length(t).alias("l"), t.alias("t")))
-    )["t"]
-    s = sentences.withColumn("_blk", block)
-    s_idx = s.filter(F.col("_blk").isNotNull())
-    s_tail = s.filter(F.col("_blk").isNull()).drop("_blk")
-
-    page_toks = pages.select(
-        page_id, page_text,
-        F.explode(
-            F.array_distinct(F.filter(F.split(F.col(page_text), " "), lambda t: t != ""))
-        ).alias("_blk"),
-    )
-    cand = s_idx.join(page_toks, "_blk").filter(
-        F.col(page_text).contains(F.col(sent_col))
-    ).drop("_blk")
-    # broadcast the TAIL (the rare <3-token sentences), not the page
-    # corpus — pages is the side the main path exists to avoid
-    # materializing; hinting it for broadcast would OOM the driver at
-    # scale and defeat the operator's purpose
-    tail_hits = F.broadcast(s_tail).join(
-        pages, F.col(page_text).contains(F.col(sent_col))
-    )
-    hits = cand.select(sent_col, page_id).unionByName(
-        tail_hits.select(sent_col, page_id)
-    )
-    return _unique_page_arb(hits, sent_col, page_id)

@@ -1,4 +1,5 @@
-"""Deterministic sampling operators — SURVEY.md §2.9 R1/R2/R4.
+"""Deterministic sampling operators — SURVEY.md §2.9 R2, and the salted
+top-n that the registry's samplers share.
 
 All sampling is derived from content hashes or fixed seeds; reruns and
 retries produce identical samples (the reference seeds its RNG from
@@ -56,36 +57,4 @@ def stratified_fixed_n(df: DataFrame, strata: list[str], n: int,
     """R2: n rows per stratum, hash-ordered (sample_intros.py:37-43)."""
     return _salted_top_n(
         df, strata, [hash_order(F.col(id_col), seed=seed), F.col(id_col)], n, id_col
-    )
-
-
-def weighted_stratum_sample(df: DataFrame, stratum: str, weight: str,
-                            id_col: str, n: int, seed: int = 0) -> DataFrame:
-    """R1: weighted sample without replacement per stratum via the
-    exponential-sort trick (weighted reservoir sampling, Efraimidis-
-    Spirakis): key = -ln(u)/w with u derived deterministically from
-    the id hash; smallest n keys win. Distributed: salted two-stage
-    top-n (see _salted_top_n), no driver loop (reference:
-    sample_pages_new.py:41-69 decade loop)."""
-    u = (F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(2**31)) + 1).cast(
-        "double"
-    ) / F.lit(float(2**31 + 1))
-    key = -F.log(u) / F.col(weight).cast("double")
-    return _salted_top_n(df, [stratum], [key.asc(), F.col(id_col)], n, id_col)
-
-
-def deterministic_shuffle(df: DataFrame, id_col: str, seed: int = 0) -> DataFrame:
-    """R4: seeded shuffle = global sort by hash (fuzzy_matching.py:71-73)."""
-    return df.orderBy(hash_order(F.col(id_col), seed=seed), id_col)
-
-
-def head_tail_slice(df: DataFrame, strata: list[str], order_col: Column,
-                    head: int, tail: int) -> DataFrame:
-    """R3: rows [head, tail) per stratum in a deterministic order
-    (sample_paragraphs.py:99-118 uuid-ordinal slice)."""
-    w = Window.partitionBy(*strata).orderBy(order_col)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter((F.col("_rn") > head) & (F.col("_rn") <= tail))
-        .drop("_rn")
     )

@@ -1,142 +1,22 @@
-"""Similarity search over an embedding column (array<float>).
+"""Similarity operators over an embedding column (array<float>).
 
-- brute-force cosine top-k: the exact baseline; one pass, no shuffle
-  beyond the final top-k;
-- random-hyperplane LSH buckets: the scale path — signature join
-  prunes the candidate set before exact cosine verification. Plane
-  weights are a deterministic ±1 matrix (blake2b bit streams), applied
-  as one numpy matmul per Arrow batch inside mapInPandas: bucketing is
-  a narrow map with zero shuffle.
+- banded hyperplane LSH near-pairs: candidate pairs only inside
+  matching (band, bucket) groups, verified by exact integer dot
+  products over milli-quantized vectors; the plane signs are an
+  md5-derived ±1 matrix that the DuckDB oracle can embed verbatim;
+- IVF partitioning: deterministic seeded centroids and the
+  nearest-centroid assignment of every vector.
+
+Exact top-k lives in the registry (`ann_topk`, `embedding_near_pairs`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
-
-from scripts_spark.session import local_frame
+from pyspark.sql import DataFrame, Window, functions as F
 
 
 def _as_double(arr):
     return F.transform(arr, lambda x: x.cast("double"))
-
-
-def cosine_cols(a, b):
-    """(dot, norm_a, norm_b) column triple for two double arrays."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, x: acc + x * x))
-    return dot, na, nb
-
-
-def brute_force_topk(emb: DataFrame, query_vec: list[float], k: int = 10,
-                     key: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Exact cosine top-k against a literal query vector."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    v = _as_double(F.col(vec_col))
-    dot, nv, nq = cosine_cols(v, q)
-    sim = F.when((nv > 0) & (nq > 0), dot / (nv * nq)).otherwise(F.lit(0.0))
-    return (
-        emb.select(F.col(key), sim.alias("cosine"))
-        .orderBy(F.desc("cosine"), key)
-        .limit(k)
-    )
-
-
-def plane_matrix(dim: int, planes: int):
-    """Deterministic ±1 hyperplane matrix (planes × dim), derived from
-    blake2b("plane:<p>") bit streams — no RNG state, reruns identical,
-    and identical for corpus rows and the query vector. Tiny
-    (30 × 768 ≈ 180 KB at the largest sizing), so it ships to every
-    task inside the mapInPandas closure — a broadcast in all but name."""
-    import hashlib
-
-    import numpy as np
-
-    rows = []
-    for p in range(planes):
-        bits: list[int] = []
-        counter = 0
-        while len(bits) < dim:
-            h = hashlib.blake2b(
-                b"plane:%d:%d" % (p, counter), digest_size=32
-            ).digest()
-            for byte in h:
-                for b in range(8):
-                    bits.append(1.0 if (byte >> b) & 1 else -1.0)
-            counter += 1
-        rows.append(bits[:dim])
-    return np.asarray(rows, dtype=np.float64)
-
-
-def _pack_signs(V, M):
-    """numpy: sign bits of V @ Mᵀ packed into one int64 per row."""
-    import numpy as np
-
-    proj = V @ M.T  # (n, planes)
-    bits = (proj > 0).astype(np.int64)
-    return (bits << np.arange(M.shape[0], dtype=np.int64)).sum(axis=1)
-
-
-def lsh_bucket(emb: DataFrame, dim: int, planes: int, key: str = "vec_id",
-               vec_col: str = "embedding") -> DataFrame:
-    """Bucket key per vector: sign bits of the plane projections,
-    computed as ONE numpy matmul per Arrow batch in mapInPandas —
-    a narrow (zero-shuffle) map over the embedding scan.
-
-    Replaces the round-3 posexplode→broadcast-join→groupBy form, whose
-    exchange carried n×dim exploded (key, d, v) rows — at 10^12 docs ×
-    768 dims that shuffle dwarfed every other stage (r3 verdict,
-    'What's wrong' #1). Here nothing crosses the wire but the input
-    batches already being scanned, and the per-batch cost is a BLAS
-    matmul instead of dim interpreted row ops per vector."""
-    import pandas as pd
-
-    M = plane_matrix(dim, planes)
-    key_dt = emb.schema[key].dataType.simpleString()
-
-    def _part(batches):
-        import numpy as np
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            yield pd.DataFrame({key: pdf[key], "bucket": _pack_signs(V, M)})
-
-    # null / wrong-length vectors get no bucket (JVM-side filter, so
-    # the numpy matmul always sees a rectangular batch) — same net
-    # behavior as the old posexplode form, which produced no rows for
-    # them, instead of an inhomogeneous-shape crash inside the UDF
-    clean = emb.filter(F.col(vec_col).isNotNull() & (F.size(vec_col) == dim))
-    return clean.select(key, vec_col).mapInPandas(
-        _part, schema=f"{key} {key_dt}, bucket long"
-    )
-
-
-def query_bucket(query_vec: list[float], planes: int) -> int:
-    """The same sign-bit bucket for a single driver-side query vector —
-    no Spark job needed (the r3 form ran a 1-row collect())."""
-    import numpy as np
-
-    M = plane_matrix(len(query_vec), planes)
-    return int(_pack_signs(np.asarray([query_vec], dtype=np.float64), M)[0])
-
-
-def ann_topk_lsh(emb: DataFrame, query_vec: list[float], k: int = 10,
-                 planes: int = 8, probe_hamming: int = 1,
-                 key: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Approximate top-k: restrict exact cosine to LSH buckets within
-    ``probe_hamming`` sign-bit flips of the query's bucket
-    (multi-probe LSH — recall recovers what single-bucket probing
-    loses on near-orthogonal vectors, at 1+planes bucket probes)."""
-    dim = len(query_vec)
-    buckets = lsh_bucket(emb, dim, planes, key, vec_col)
-    qbucket = query_bucket(query_vec, planes)
-    near = F.bit_count(F.col("bucket").bitwiseXOR(F.lit(qbucket))) <= probe_hamming
-    cand = emb.join(buckets.filter(near).select(key), key, "left_semi")
-    return brute_force_topk(cand, query_vec, k, key, vec_col)
 
 
 def planes_for(n_rows: int, target_bucket_rows: int = 32,
@@ -153,56 +33,10 @@ def planes_for(n_rows: int, target_bucket_rows: int = 32,
     return max(min_planes, min(max_planes, math.ceil(math.log2(n_rows / target_bucket_rows))))
 
 
-def pairwise_topk(emb: DataFrame, k: int = 5, key: str = "vec_id",
-                  vec_col: str = "embedding", planes: int | None = None,
-                  target_bucket_rows: int = 32) -> DataFrame:
-    """All-pairs ANN: bucket self-join then per-key top-k by cosine —
-    the shape used for embedding-cosine near-dup detection.
-
-    Scale properties (round-3 hardening):
-    - ``planes`` defaults to log2(n / target_bucket_rows) so expected
-      bucket occupancy — hence candidate pairs per bucket — stays
-      bounded as the corpus grows (one count() job to size it);
-    - the per-pair cosine is a milli-quantized INTEGER dot (same
-      ``_quantized`` kernel as ivf_assign) with per-vector norms²
-      precomputed once BEFORE the self-join, so each candidate pair
-      costs one long-array dot, not two float norm folds."""
-    if planes is None:
-        planes = planes_for(emb.count(), target_bucket_rows)
-    dim = emb.select(F.size(vec_col)).first()[0]
-    b = lsh_bucket(emb, dim, planes, key, vec_col)
-    zero = F.lit(0).cast("long")
-    n2 = F.aggregate(F.col("_q"), zero, lambda acc, v: acc + v * v)
-    e = (
-        emb.select(F.col(key), _quantized(F.col(vec_col)).alias("_q"))
-        .withColumn("_n2", n2)
-        .join(b, key)
-    )
-    a, c = e.alias("a"), e.alias("b")
-    dot = F.aggregate(
-        F.zip_with(F.col("a._q"), F.col("b._q"), lambda x, y: x * y),
-        zero,
-        lambda acc, v: acc + v,
-    )
-    norm = F.sqrt(F.col("a._n2").cast("double") * F.col("b._n2").cast("double"))
-    sim = F.when(norm > 0, dot.cast("double") / norm).otherwise(F.lit(0.0))
-    pairs = a.join(
-        c,
-        (F.col("a.bucket") == F.col("b.bucket")) & (F.col(f"a.{key}") < F.col(f"b.{key}")),
-    ).select(
-        F.col(f"a.{key}").alias("key_a"),
-        F.col(f"b.{key}").alias("key_b"),
-        sim.alias("cosine"),
-    )
-    w_k = Window.partitionBy("key_a").orderBy(F.desc("cosine"), "key_b")
-    return pairs.withColumn("rn", F.row_number().over(w_k)).filter(F.col("rn") <= k).drop("rn")
-
-
 def md5_sign_matrix(dim: int, planes: int) -> list[list[int]]:
     """Deterministic ±1 hyperplane matrix as plain Python ints, derived
-    from md5("plane:<p>:<ctr>") bit streams. Same role as plane_matrix
-    (blake2b/numpy) but md5-derived and literal-valued so BOTH engines
-    of an oracle pair can share the exact constant — the bucketed
+    from md5("plane:<p>:<ctr>") bit streams: literal-valued, so BOTH
+    engines of an oracle pair can share the exact constant — the bucketed
     near-pair query embeds these signs in the Spark plan and in the
     generated DuckDB SQL."""
     import hashlib
@@ -306,7 +140,7 @@ def banded_near_pairs(emb: DataFrame, bands: int = 8, band_planes: int | None = 
     embedding_near_pairs): pairs are enumerated ONLY inside matching
     (band, bucket) groups, an equi-join, never an unbounded theta join.
 
-    Shape (mirrors pairwise_topk, plus MinHash-style OR-amplification):
+    Shape (hyperplane buckets plus MinHash-style OR-amplification):
     1. milli-quantize each vector once; n2 = |q|² (exact longs);
     2. ``bands`` × ``band_planes`` sign-bit projections against the
        md5-derived ±1 planes — pure JVM array folds over the quantized
@@ -434,173 +268,3 @@ def ivf_assign(emb: DataFrame, centroids: DataFrame, key: str = "vec_id",
             )
         )
     )
-
-
-def ivf_centroids_lloyd(emb: DataFrame, n_lists: int = 16, key: str = "vec_id",
-                        vec_col: str = "embedding", iters: int = 1) -> DataFrame:
-    """IVF index build beyond k-means-0: ``iters`` Lloyd refinement
-    passes over the seeded centroids. Each pass assigns every vector
-    (ivf_assign's quantized-integer argmax) and recomputes each centroid
-    as its cluster mean — computed from EXACT long sums of the
-    milli-quantized components, so the result is bit-deterministic
-    under any partitioning (no float-sum-order hazard). Empty clusters
-    keep their previous centroid. Each pass is one assignment pass +
-    one (centroid_id, dim) agg — both partial-agg'd, both scale."""
-    cents = ivf_centroids(emb, n_lists, key, vec_col)
-    for _ in range(iters):
-        assign = ivf_assign(emb, cents, key, vec_col)
-        ex = (
-            emb.select(F.col(key), _quantized(F.col(vec_col)).alias("_q"))
-            .join(assign, key)
-            .select("centroid_id", F.posexplode("_q").alias("d", "x"))
-        )
-        m = ex.groupBy("centroid_id", "d").agg(
-            F.sum("x").alias("sx"), F.count(F.lit(1)).alias("n")
-        )
-        refined = m.groupBy("centroid_id").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("d", "sx", "n"))),
-                lambda s: s["sx"].cast("double") / s["n"] / 1000.0,
-            ).alias("_new")
-        )
-        # n_lists rows: a literal frame keeps the plan flat across
-        # passes (each pass otherwise stacks an assignment+agg subtree
-        # under the next pass's broadcast) and, unlike a checkpoint,
-        # leaves no block behind for a JVM GC to reclaim
-        new = cents.join(refined, "centroid_id", "left").select(
-            "centroid_id", F.coalesce("_new", "centroid_vec").alias("centroid_vec")
-        )
-        cents = local_frame(emb.sparkSession, [tuple(r) for r in new.collect()],
-                            "centroid_id int, centroid_vec array<double>")
-    return cents
-
-
-def _probe_lists(centroid_rows, query_vec: list[float], n_probe: int) -> list[int]:
-    """Rank centroids vs the query on the driver (n_lists rows,
-    trivial) and return the n_probe nearest centroid_ids."""
-    import math
-
-    qn = math.sqrt(sum(x * x for x in query_vec)) or 1.0
-    scored = []
-    for r in centroid_rows:
-        cv = r["centroid_vec"]
-        cn = math.sqrt(sum(x * x for x in cv)) or 1.0
-        dot = sum(a * b for a, b in zip(query_vec, cv))
-        scored.append((dot / (qn * cn), r["centroid_id"]))
-    return [cid for _, cid in sorted(scored, key=lambda t: (-t[0], t[1]))[:n_probe]]
-
-
-def ann_topk_ivf(emb: DataFrame, query_vec: list[float], k: int = 10,
-                 n_lists: int = 16, n_probe: int = 4,
-                 key: str = "vec_id", vec_col: str = "embedding",
-                 centroids: DataFrame | None = None) -> DataFrame:
-    """IVF approximate top-k, assignment computed inline: probe the
-    n_probe centroid lists nearest the query and run exact cosine only
-    inside them. At scale the assignment is computed once and stored —
-    see build_ivf_index / ann_topk_ivf_indexed for that form."""
-    cents = centroids if centroids is not None else ivf_centroids(emb, n_lists, key, vec_col)
-    assign = ivf_assign(emb, cents, key, vec_col)
-    probe = _probe_lists(cents.collect(), query_vec, n_probe)
-    cand = emb.join(
-        assign.filter(F.col("centroid_id").isin(probe)).select(key), key, "left_semi"
-    )
-    return brute_force_topk(cand, query_vec, k, key, vec_col)
-
-
-def build_ivf_index(emb: DataFrame, index_dir: str, n_lists: int = 16,
-                    iters: int = 0, key: str = "vec_id",
-                    vec_col: str = "embedding") -> DataFrame:
-    """Materialize the IVF index: one assignment pass over the corpus,
-    vectors written PARTITIONED BY centroid_id (plus the centroid
-    table). Build cost is paid once; every query then reads only its
-    probed partitions — the 'stored index column / partition key' shape
-    the inline form's docstring promises at 10^12 rows. With ``iters``
-    > 0 the centroids get that many Lloyd refinement passes first."""
-    cents = (
-        ivf_centroids_lloyd(emb, n_lists, key, vec_col, iters)
-        if iters
-        else ivf_centroids(emb, n_lists, key, vec_col)
-    )
-    assign = ivf_assign(emb, cents, key, vec_col)
-    (
-        emb.join(assign, key)
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(f"{index_dir}/vectors")
-    )
-    cents.write.mode("overwrite").parquet(f"{index_dir}/centroids")
-    return cents
-
-
-def append_ivf_index(spark: SparkSession, emb: DataFrame, index_dir: str,
-                     key: str = "vec_id", vec_col: str = "embedding") -> int:
-    """Incremental IVF maintenance: instead of rebuilding the whole
-    partitioned store for every new crawl drop, assign ONLY the vectors
-    not already indexed — a left_anti join of the input against the
-    store's key column (a column-pruned parquet scan: nothing but the
-    8-byte keys is read) — against the EXISTING centroid table, and
-    append their rows to the matching centroid_id partitions.
-
-    Centroids stay FIXED across appends by design: re-training them
-    would silently invalidate every stored assignment; when drift
-    warrants it, that is an explicit full build_ivf_index rebuild.
-    Returns the number of appended rows (0 = idempotent no-op, so a
-    replayed append is safe). The query path (ann_topk_ivf_indexed)
-    is unchanged — appended files land inside the partition dirs the
-    probe already prunes on.
-
-    INSERT-ONLY semantics, deliberately: dedup is by ``key`` alone, so
-    a re-crawled document whose embedding CHANGED is skipped and the
-    stored vector stays authoritative until the next full rebuild —
-    the same no-update contract as an append-only crawl store. Callers
-    that must pick up vector mutations should key the store by
-    (key, content_hash) upstream or schedule rebuilds; silently
-    rewriting partition files per changed row would break concurrent
-    readers and replay idempotence."""
-    # Missing-store detection goes through the reader itself (not
-    # os.path, which would reject every non-local index_dir — an
-    # hdfs:// or s3a:// store is invisible to the driver's local
-    # filesystem even though the parquet reader handles it fine); the
-    # reader's opaque PATH_NOT_FOUND is translated into the clear
-    # build-first message.
-    try:
-        cents = spark.read.parquet(f"{index_dir}/centroids")
-        existing = spark.read.parquet(f"{index_dir}/vectors").select(key)
-    except Exception as exc:  # AnalysisException: PATH_NOT_FOUND
-        if "PATH_NOT_FOUND" not in str(exc) and "Path does not exist" not in str(exc):
-            raise
-        raise FileNotFoundError(
-            f"no IVF index at {index_dir!r}: run build_ivf_index first "
-            "(append_ivf_index only extends an existing store)"
-        ) from exc
-    new = emb.join(existing, key, "left_anti")
-    # persist: count() and the append both consume the anti-join +
-    # assignment lineage — without it the store scan, anti-join and
-    # centroid argmax would execute twice per append
-    out = new.join(ivf_assign(new, cents, key, vec_col), key).persist()
-    try:
-        n = out.count()
-        if n:
-            out.write.mode("append").partitionBy("centroid_id").parquet(
-                f"{index_dir}/vectors"
-            )
-    finally:
-        out.unpersist()
-    return n
-
-
-def ann_topk_ivf_indexed(spark: SparkSession, index_dir: str,
-                         query_vec: list[float], k: int = 10, n_probe: int = 4,
-                         key: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Query path over the STORED IVF index: rank centroids driver-side
-    (n_lists rows), then scan ONLY the n_probe matching partitions —
-    the centroid_id filter is a partition-directory prune, so the query
-    touches n_probe/n_lists of the data at the FILE LISTING level
-    (plan-asserted in tests/test_plans.py), never deserializing the
-    rest. This is the clustered-pruning alternative to hyperplane LSH."""
-    cents = spark.read.parquet(f"{index_dir}/centroids").collect()
-    probe = _probe_lists(cents, query_vec, n_probe)
-    vecs = spark.read.parquet(f"{index_dir}/vectors").filter(
-        F.col("centroid_id").isin(probe)
-    )
-    return brute_force_topk(vecs, query_vec, k, key, vec_col)

@@ -1,5 +1,9 @@
 """Document-order (window) operators over the segments shape
-``(url, pos, elem_type, ...)`` — SURVEY.md §2.5 W1–W15.
+``(url, pos, elem_type, ...)`` — SURVEY.md §2.5 W1–W4, W7, W9–W11
+and W13. The run merge (W5), next-element pairing (W6), running
+attribution (W8), running page cursor (W12) and top-k per stratum
+(W14) are registry queries (merge_runs, lead_pairing,
+running_attribution, running_cursor, top_events_per_user).
 
 The reference expresses all of these as mutable Python scans over lxml
 trees; here every one is a window function over ``(url, pos)`` —
@@ -72,47 +76,6 @@ def demote_pre_intro(segs: DataFrame) -> DataFrame:
     )
 
 
-def merge_consecutive(segs: DataFrame, merge_type: str = "u") -> DataFrame:
-    """W5: gaps-and-islands merge of consecutive ``merge_type`` rows —
-    any other type breaks the run (merge_utterances.py:10-24). Returns
-    one row per run with texts collected in document order."""
-    run_id = F.sum((F.col("elem_type") != merge_type).cast("long")).over(
-        _doc_w().rowsBetween(Window.unboundedPreceding, 0)
-    )
-    runs = segs.withColumn("run_id", run_id)
-    merged = (
-        runs.filter(F.col("elem_type") == merge_type)
-        .groupBy("url", "run_id")
-        .agg(
-            F.min("pos").alias("pos"),
-            F.first("elem_type").alias("elem_type"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "text"))), lambda s: s["text"]
-                ),
-                " ",
-            ).alias("text"),
-            F.count(F.lit(1)).alias("n_merged"),
-        )
-    )
-    others = runs.filter(F.col("elem_type") != merge_type).select(
-        "url", "run_id", "pos", "elem_type", "text", F.lit(1).alias("n_merged")
-    )
-    return merged.select(*others.columns).unionByName(others)
-
-
-def pair_with_next(segs: DataFrame) -> DataFrame:
-    """W6: (element, following element) pairs (classify_join_intros.py:32-57)."""
-    return segs.select(
-        "url",
-        "pos",
-        F.col("elem_id").alias("xml_id1"),
-        F.col("text").alias("text1"),
-        F.lead("elem_id").over(_doc_w()).alias("xml_id2"),
-        F.lead("text").over(_doc_w()).alias("text2"),
-    ).filter(F.col("xml_id2").isNotNull())
-
-
 def tag_after_intro(segs: DataFrame, is_intro: Column) -> DataFrame:
     """W7: mark the element immediately following a speaker intro —
     the reference's one-step 'speaker' latch
@@ -121,28 +84,6 @@ def tag_after_intro(segs: DataFrame, is_intro: Column) -> DataFrame:
     return segs.withColumn(
         "after_intro",
         F.coalesce(F.lag(is_intro.cast("boolean")).over(_doc_w()), F.lit(False)),
-    )
-
-
-def running_attribution(segs: DataFrame, is_intro: Column) -> DataFrame:
-    """W8: each element carries the text of the nearest preceding
-    intro (sample_intros.py:14-34)."""
-    prev_w = _doc_w().rowsBetween(Window.unboundedPreceding, -1)
-    return segs.withColumn(
-        "intro_text",
-        F.last(F.when(is_intro, F.col("text")), ignorenulls=True).over(prev_w),
-    )
-
-
-def running_page_cursor(segs: DataFrame) -> DataFrame:
-    """W12: pb rows set the current page; following rows inherit it
-    (sample_pages_new.py:99-118)."""
-    cur_w = _doc_w().rowsBetween(Window.unboundedPreceding, 0)
-    return segs.withColumn(
-        "page",
-        F.last(
-            F.when(F.col("elem_type") == "pb", F.col("facs")), ignorenulls=True
-        ).over(cur_w),
     )
 
 
@@ -179,12 +120,6 @@ def interval_jaccard(df: DataFrame, s1: str, e1: str, s2: str, e2: str) -> DataF
         .withColumn("overlaps", F.col("jaccard") > 0)
         .withColumn("contains", (a <= c) & (d <= b))
     )
-
-
-def top_k_per_stratum(df: DataFrame, strata: list[str], order_by: list[Column], k: int) -> DataFrame:
-    """W14: deterministic top-k slice per stratum."""
-    w = Window.partitionBy(*strata).orderBy(*order_by)
-    return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= k).drop("_rn")
 
 
 def find_toc(segs: DataFrame) -> DataFrame:

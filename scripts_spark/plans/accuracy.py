@@ -206,29 +206,3 @@ def confusion_matrix(scored: DataFrame, gold_col: str = "gold",
     return scored.groupBy(
         F.col(gold_col).alias("gold"), F.col(pred_col).alias("pred")
     ).agg(F.count(F.lit(1)).alias("n"))
-
-
-def per_class_metrics(scored: DataFrame, gold_col: str = "gold",
-                      pred_col: str = "pred") -> DataFrame:
-    """Per-class precision/recall/F1 on top of the confusion pivot.
-    Exact-integer counts; the divisions are the only doubles."""
-    cm = confusion_matrix(scored, gold_col, pred_col)
-    tp = cm.filter(F.col("gold") == F.col("pred")).select(
-        F.col("gold").alias("clazz"), F.col("n").alias("tp")
-    )
-    gold_n = cm.groupBy(F.col("gold").alias("clazz")).agg(F.sum("n").alias("n_gold"))
-    pred_n = cm.groupBy(F.col("pred").alias("clazz")).agg(F.sum("n").alias("n_pred"))
-    out = (
-        gold_n.join(pred_n, "clazz", "full")
-        .join(tp, "clazz", "left")
-        .fillna(0, ["tp", "n_gold", "n_pred"])
-    )
-    prec = F.when(F.col("n_pred") > 0, F.col("tp") / F.col("n_pred")).otherwise(F.lit(0.0))
-    rec = F.when(F.col("n_gold") > 0, F.col("tp") / F.col("n_gold")).otherwise(F.lit(0.0))
-    f1 = F.when(
-        (prec + rec) > 0, 2 * prec * rec / (prec + rec)
-    ).otherwise(F.lit(0.0))
-    return out.select(
-        "clazz", "n_gold", "n_pred", "tp",
-        prec.alias("precision"), rec.alias("recall"), f1.alias("f1"),
-    )

@@ -82,7 +82,6 @@ class CurateConfig:
     # num_buckets, which is only the commit/manifest unit.
     target_partitions: int | None = None
     input_snapshot: str = "fixture-v1"
-    persist_intermediate: bool = True
     scorer: str = "arrow"  # "arrow" | "join"
     # "salted" (production): repartition on (url-hash bucket, intra-
     # bucket salt) — uniform under ANY domain distribution. "domain":
@@ -567,6 +566,7 @@ def _near_dup_losers(d: DataFrame, cfg: CurateConfig,
     ).select("key_a", "key_b")
     if cfg.near_dedup_mode == "component":
         comp = D.connected_components(pairs)
+        _CURATE_CHECKPOINTS.append(comp)
         batch_losers = comp.filter(F.col("node") != F.col("group")).select(
             F.col("node").alias("url"), F.col("group").alias("near_dup_of")
         )
@@ -755,15 +755,24 @@ def _reasons(cfg: CurateConfig, c: dict[str, Column]) -> Column:
 # exactly these instead of spark.catalog.clearCache() — which evicts
 # EVERY cached frame in the shared session, including the caller's own.
 _CURATE_PERSISTED: list[DataFrame] = []
+# the connected-components labels of component-mode near-dedup: a local
+# checkpoint, which unpersist() does not free
+_CURATE_CHECKPOINTS: list[DataFrame] = []
 
 
 def drain_curate_persisted() -> None:
     """Unpersist every frame curate() cached internally since the
-    last drain. Call after the decision frame has been fully
-    materialized (written/collected); draining earlier is safe but
-    recomputes the post-boiler chain on the next action."""
+    last drain, and free its connected-components checkpoints. Call
+    after the decision frame has been fully materialized
+    (written/collected); draining earlier is safe for the cached
+    frames (the next action recomputes the post-boiler chain) but not
+    for a component-mode near-dedup frame, whose labels are gone."""
+    from scripts_spark.operators import dedup as D
+
     while _CURATE_PERSISTED:
         _CURATE_PERSISTED.pop().unpersist()
+    while _CURATE_CHECKPOINTS:
+        D.release_checkpoint(_CURATE_CHECKPOINTS.pop())
 
 
 def curate(pages: DataFrame, cfg: CurateConfig | None = None,
@@ -802,7 +811,7 @@ def curate(pages: DataFrame, cfg: CurateConfig | None = None,
         # confirm passes, and the main decision branch) — without the
         # persist each would recompute the scan + url-dedup window +
         # repair chain
-        if cfg.persist_intermediate and boiler_override is None:
+        if boiler_override is None:
             docs = docs.persist()
             _CURATE_PERSISTED.append(docs)
     boiler = boilerplate_sets(docs, cfg) if boiler_override is None else boiler_override
@@ -829,9 +838,8 @@ def curate(pages: DataFrame, cfg: CurateConfig | None = None,
         # the losers frame re-reads d (self-similarity is cross-doc by
         # nature); persist the post-boiler frame so the repair + strip
         # chain isn't recomputed for the signature/verify branches
-        if cfg.persist_intermediate:
-            d = d.persist()
-            _CURATE_PERSISTED.append(d)
+        d = d.persist()
+        _CURATE_PERSISTED.append(d)
         losers = _near_dup_losers(d, cfg, sig_history=sig_history,
                                   cur_sig_rows=sig_current)
         d = d.join(losers.select("url", F.lit(True).alias("_nd_loser")), "url", "left")
@@ -850,9 +858,8 @@ def curate(pages: DataFrame, cfg: CurateConfig | None = None,
     #   it. (Map literals were measured and rejected: Spark map lookup
     #   is a linear scan — 135s vs 10s.)
     if cfg.scorer != "arrow":
-        if cfg.persist_intermediate:
-            d = d.persist()
-            _CURATE_PERSISTED.append(d)
+        d = d.persist()
+        _CURATE_PERSISTED.append(d)
         d = d.join(scoring_join.doc_scores(d), "url", "left").select(*c.join_scores)
     return d.select(*c.stats).select(*c.reasons).select(*c.final)
 

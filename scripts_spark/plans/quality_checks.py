@@ -1,11 +1,12 @@
-"""Data-quality / invariant check jobs (SURVEY.md §2.4 A8–A10, §5).
+"""Data-quality / invariant check jobs behind ``run_job.py check``
+(SURVEY.md §2.4 A8, §5).
 
 The reference audits its corpus with standalone scripts (duplicate
-uuid check at /root/reference/src/ck-duplicate-uuids.py:13-27,
-coverage-tolerance test at src/stats-dashboard/mp-coverage.py:33-41);
-here each check is a DataFrame job returning the VIOLATIONS (empty
-result = pass), so the same checks run in CI, post-commit audits, or
-ad hoc.
+uuid check at /root/reference/src/ck-duplicate-uuids.py:13-27); here
+each check is a DataFrame job returning the VIOLATIONS (empty result =
+pass), so the same checks run in CI, post-commit audits, or ad hoc.
+The coverage-tolerance (A9) and non-empty-share (A10) checks are
+registry queries (coverage_tolerance, props_nonempty_share).
 """
 
 from __future__ import annotations
@@ -42,30 +43,6 @@ def keep_consistency(decisions: DataFrame) -> DataFrame:
         (F.col("keep") & (F.size("filter_reasons") > 0))
         | (~F.col("keep") & (F.size("filter_reasons") == 0))
     ).select("url", "keep", "filter_reasons")
-
-
-def coverage_tolerance(metrics: DataFrame, baseline: DataFrame,
-                       on: list[str], value: str = "n_kept",
-                       tol_num: int = 1, tol_den: int = 10) -> DataFrame:
-    """A9 (mp-coverage.py pattern): current vs baseline counts per
-    stratum; returns rows outside ±tol (integer cross-multiplied).
-    status: 'pass' exact, 'almost' within tolerance, 'fail' outside —
-    only 'fail' rows are returned."""
-    b = baseline.select(*on, F.col(value).alias("_baseline"))
-    j = metrics.select(*on, F.col(value).alias("_current")).join(b, on, "inner")
-    lo_ok = F.col("_current") * tol_den >= F.col("_baseline") * (tol_den - tol_num)
-    hi_ok = F.col("_current") * tol_den <= F.col("_baseline") * (tol_den + tol_num)
-    return j.filter(~(lo_ok & hi_ok))
-
-
-def non_empty_share(decisions: DataFrame, col: str) -> DataFrame:
-    """A10 (redetect.py:49-51): share of non-empty values — a metric
-    frame, not a violation frame."""
-    return decisions.agg(
-        F.avg((F.length(F.coalesce(F.col(col), F.lit(""))) > 0).cast("int")).alias(
-            f"share_nonempty_{col}"
-        )
-    )
 
 
 def run_all(decisions: DataFrame) -> dict[str, int]:

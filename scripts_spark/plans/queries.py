@@ -609,7 +609,7 @@ def lead_pairing(spark, sf_dir):
     """,
 )
 def tumbling_window(spark, sf_dir):
-    """Tumbling time-window agg — the batch shape of the streaming job."""
+    """Tumbling time-window agg: hourly counts and value sums per event type."""
     ev = T(spark, sf_dir, "events")
     return ev.groupBy(
         F.date_trunc("hour", "ts").alias("window_start"), "event_type"
@@ -1197,8 +1197,8 @@ def embedding_near_pairs(spark, sf_dir):
     similarity ceiling is ~0.51) with milli-quantized INTEGER
     arithmetic: the threshold test is 400·dot² ≥ 81·|a|²·|b|²,
     exact in both engines (no float sums, no sqrt). Brute-force
-    all-pairs is the oracle-checkable baseline; the LSH-bucketed scale
-    path is operators/similarity.pairwise_topk.
+    all-pairs is the oracle-checkable baseline; the banded-LSH scale
+    path is bucketed_near_pairs (operators/similarity.banded_near_pairs).
 
     Physical form (round 4): quantize + norm once per vector, then one
     vec_id-range pair join with an array-side integer dot per pair —
@@ -2472,8 +2472,7 @@ def seeded_shuffle_head(spark, sf_dir):
     fuzzy_matching.py:71-73) + R3 head slice, with the portable md5
     hash family so both engines shuffle identically. orderBy().limit()
     compiles to TakeOrderedAndProject — per-partition top-K, no global
-    sort (the production form, sampling.deterministic_shuffle, uses
-    xxhash64 with the same shape)."""
+    sort."""
     d = T(spark, sf_dir, "documents")
     key = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("|7")))
     return d.select("doc_id").orderBy(key, "doc_id").limit(20)
@@ -2771,9 +2770,9 @@ def random_projection(spark, sf_dir):
     milli-quantized INTEGER components, so every projected coordinate
     is an exact long in both engines. One explode + one partial-agg'd
     groupBy; the sign function is computed inline (no plane table to
-    join, nothing broadcast). The production ANN bucketing path uses
-    the same deterministic-±1-plane idea as a per-batch numpy matmul
-    (operators/similarity.plane_matrix / lsh_bucket)."""
+    join, nothing broadcast). The banded near-pair path
+    (operators/similarity.banded_near_pairs) projects onto
+    deterministic ±1 planes the same way."""
     e = T(spark, sf_dir, "embeddings")
     x = e.select(
         "vec_id", F.posexplode("embedding").alias("i", "v")

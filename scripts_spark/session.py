@@ -45,8 +45,8 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # Arrow transfer for the few pandas UDFs (base58 parity, model
-        # scoring); batch size amortizes per-batch overhead.
+        # Arrow transfer for the pandas UDFs (model scoring); batch size
+        # amortizes per-batch overhead.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # Broadcast threshold: dimension tables (stopword maps, bigram

@@ -5,8 +5,12 @@ this sandbox has no Iceberg jar, so the same contract is implemented
 as parquet-per-bucket plus a manifest table (SURVEY.md §7.3 "Iceberg in
 sandbox"). The job-facing API is identical in both modes:
 
-    done = completed_buckets(manifest)         # resume
-    write_bucket(...); append_manifest(bucket)  # commit unit
+    commit_buckets(decisions, base, job_id)  # resume + commit
+    read_output(spark, base)                  # committed rows only
+
+``commit_buckets`` writes every bucket of the job that the manifest
+does not list yet and then commits them; ``completed_buckets`` names
+the committed ones.
 
 The commit unit is ``(job_id, bucket)``:
 
@@ -63,6 +67,10 @@ METRIC_COLS = ("n_rows", "n_kept") + tuple(f"n_{r}" for r in REASONS)
 MANIFEST_COLS = ("job_id", "bucket", "commit_seq") + METRIC_COLS
 MANIFEST_SCHEMA = ", ".join(f"{c} long" for c in MANIFEST_COLS)
 _MANIFEST_ARROW = pa.schema([(c, pa.int64()) for c in MANIFEST_COLS])
+# An append that leaves more manifest data files than this folds them
+# all into one file. Every commit reads the whole manifest, so without
+# the fold a stream's commits would slow as it ages.
+FOLD_AFTER = 64
 
 
 class ManifestError(RuntimeError):
@@ -79,18 +87,26 @@ def _fs(path: str) -> tuple[pafs.FileSystem, str]:
     return pafs.LocalFileSystem(), os.path.abspath(path)
 
 
-def _manifest_rows(base: str) -> list[tuple]:
-    """Every manifest row, as MANIFEST_COLS tuples, read on the driver
-    with the explicit schema: files written before the reason counts
-    moved here read them as NULL, ``_``/``.``-prefixed files (job
+def _data_files(fs: pafs.FileSystem, path: str) -> list[str]:
+    """The manifest's data files. ``_``/``.``-prefixed files (job
     markers, checksums, uncommitted appends) are skipped as Spark skips
-    them, and a missing manifest has no rows. A torn or corrupt file
-    raises ManifestError naming it — it must not pass for "nothing
-    committed" and trigger a full recommit."""
-    fs, path = _fs(manifest_path(base))
-    if fs.get_file_info(path).type == pafs.FileType.NotFound:
-        return []
-    dataset = pads.dataset(path, schema=_MANIFEST_ARROW, format="parquet", filesystem=fs)
+    them."""
+    return sorted(
+        i.path for i in fs.get_file_info(pafs.FileSelector(path))
+        if i.type == pafs.FileType.File and not i.base_name.startswith(("_", "."))
+    )
+
+
+def _read_rows(fs: pafs.FileSystem, files: list[str]) -> list[tuple]:
+    """The rows of ``files`` as MANIFEST_COLS tuples, read with the
+    explicit schema: files written before the reason counts moved here
+    read them as NULL. A torn or corrupt file raises ManifestError
+    naming it — it must not pass for "nothing committed" and trigger a
+    full recommit. Exact duplicate rows are dropped: a fold stopped
+    before its deletes leaves every folded row twice, and a
+    (job_id, bucket, commit_seq) row is unique, so this reads the
+    same rows."""
+    dataset = pads.dataset(files, schema=_MANIFEST_ARROW, format="parquet", filesystem=fs)
     try:
         t = dataset.to_table(use_threads=False)
     except (pa.ArrowException, OSError) as e:
@@ -99,21 +115,45 @@ def _manifest_rows(base: str) -> list[tuple]:
                 frag.to_table(schema=_MANIFEST_ARROW)
             except (pa.ArrowException, OSError) as bad:
                 raise ManifestError(f"unreadable manifest file {frag.path}: {bad}") from bad
-        raise ManifestError(f"unreadable manifest {path}: {e}") from e
-    return list(zip(*(t.column(c).to_pylist() for c in MANIFEST_COLS)))
+        raise ManifestError(f"unreadable manifest: {e}") from e
+    return list(dict.fromkeys(zip(*(t.column(c).to_pylist() for c in MANIFEST_COLS))))
 
 
-def _append_manifest(base: str, rows: list[tuple]) -> None:
-    """Commit ``rows`` (MANIFEST_COLS tuples) as one new manifest file:
-    written under a ``.``-prefixed name that readers skip, then renamed
-    into place."""
+def _manifest_rows(base: str) -> list[tuple]:
+    """Every manifest row, read on the driver (see _read_rows); a
+    missing manifest has no rows."""
     fs, path = _fs(manifest_path(base))
-    fs.create_dir(path, recursive=True)
-    name = f"part-{rows[0][2]:05d}-{uuid.uuid4()}.parquet"
+    if fs.get_file_info(path).type == pafs.FileType.NotFound:
+        return []
+    return _read_rows(fs, _data_files(fs, path))
+
+
+def _write_renamed(fs: pafs.FileSystem, path: str, name: str, rows: list[tuple]) -> None:
+    """Write ``rows`` as ``path/name``: under a ``.``-prefixed name that
+    readers skip, then renamed into place."""
     table = pa.Table.from_pylist([dict(zip(MANIFEST_COLS, r)) for r in rows], _MANIFEST_ARROW)
     with fs.open_output_stream(f"{path}/.{name}.tmp") as out:
         pq.write_table(table, out)
     fs.move(f"{path}/.{name}.tmp", f"{path}/{name}")
+
+
+def _append_manifest(base: str, rows: list[tuple]) -> None:
+    """Commit ``rows`` (MANIFEST_COLS tuples) as one new manifest file;
+    its rename is the commit point. When that leaves more than
+    FOLD_AFTER data files, fold them: every row goes into one file,
+    renamed into place, then the folded files are deleted. A fold
+    stopped before its deletes reads the same rows (see _read_rows),
+    and the next append folds again."""
+    fs, path = _fs(manifest_path(base))
+    fs.create_dir(path, recursive=True)
+    _write_renamed(fs, path, f"part-{rows[0][2]:05d}-{uuid.uuid4()}.parquet", rows)
+    files = _data_files(fs, path)
+    if len(files) > FOLD_AFTER:
+        folded = _read_rows(fs, files)
+        seq = max(r[2] for r in folded)
+        _write_renamed(fs, path, f"fold-{seq:05d}-{uuid.uuid4()}.parquet", folded)
+        for f in files:
+            fs.delete_file(f)
 
 
 def read_manifest(spark: SparkSession, base: str) -> DataFrame:
@@ -135,11 +175,6 @@ def _uncommitted(decisions: DataFrame, done: set[int]) -> DataFrame:
 
 def completed_buckets(spark: SparkSession, base: str, job_id: int = 0) -> set[int]:
     return _committed(base, job_id)[0]
-
-
-def remaining_buckets(decisions: DataFrame, base: str, job_id: int = 0) -> DataFrame:
-    """Resume = this job's decisions minus its committed buckets."""
-    return _uncommitted(decisions, _committed(base, job_id)[0])
 
 
 def commit_buckets(decisions: DataFrame, base: str, job_id: int = 0) -> dict[str, int]:

@@ -1,21 +1,15 @@
-"""Structured Streaming entry points.
+"""Structured Streaming entry point: incremental ingest of crawl drops.
 
-The reference pipeline is purely batch (SURVEY.md §2.10), so streaming
-here serves three engine-native purposes:
-
-1. incremental ingest of new crawl partitions: a file-source stream
-   over the pages directory, each micro-batch run through the SAME
-   batch `curate` plan via foreachBatch and committed through the
-   manifest catalog (exactly-once per bucket; the micro-batch is the
-   resume unit). Cross-document statistics (domain boilerplate) are
-   computed within the micro-batch — documented approximation for
-   late-arriving pages of a domain.
-2. watermarked tumbling-window metrics over an event stream — the
-   streaming twin of the `tumbling_window` batch query.
-3. custom stateful operators via applyInPandasWithState
-   (running_domain_stats): explicit per-key GroupState carried across
-   micro-batches; idle-timeout state eviction is opt-in for continuous
-   streams (availableNow runs never terminate with a timeout set).
+The reference pipeline is purely batch (SURVEY.md §2.10). Here a
+file-source stream over the pages directory runs each micro-batch
+through the SAME batch `curate` plan via foreachBatch and commits it
+through the manifest catalog (exactly-once per bucket; the micro-batch
+is the resume unit). Cross-document statistics are computed within the
+micro-batch unless cross-batch state is asked for: url dedup across
+batches (a watermarked dropDuplicatesWithinWatermark) and the
+boilerplate, paragraph-span and near-dup signature stores, which share
+one evidence writer, one watermark guard and one compaction routine
+(see stream_curate).
 """
 
 from __future__ import annotations
@@ -752,124 +746,3 @@ def _merged_boiler(spark: SparkSession, docs: DataFrame, batch_id: int,
         .select("domain", "para", "line_docs")
     )
     return boiler_sets_from_counts(confirmed, merged_doms, cfg), line_docs
-
-
-def windowed_event_counts(events: DataFrame, window: str = "1 hour",
-                          watermark: str = "2 hours") -> DataFrame:
-    """Watermarked tumbling-window counts — late rows beyond the
-    watermark are dropped, state is bounded."""
-    ev = events.withColumn("ts", F.col("ts").cast("timestamp"))  # NTZ → TS for watermark
-    return (
-        ev.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("sum_value_cents"),
-        )
-        .select(
-            F.col("win.start").cast("timestamp_ntz").alias("window_start"),
-            "event_type",
-            "n",
-            "sum_value_cents",
-        )
-    )
-
-
-def run_windowed_counts(spark: SparkSession, input_dir: str, checkpoint_dir: str,
-                        table_name: str, schema: str,
-                        window: str = "1 hour") -> "StreamingQuery":
-    """File-source events stream → windowed counts → in-memory sink
-    (complete mode), processing everything available then stopping."""
-    ev = spark.readStream.schema(schema).parquet(input_dir)
-    agg = windowed_event_counts(ev, window=window)
-    return (
-        agg.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def running_domain_stats(pages: DataFrame,
-                         idle_timeout_ms: int | None = None) -> DataFrame:
-    """Custom stateful streaming operator via applyInPandasWithState
-    (the engine-native form the task brief names for operators the
-    built-in aggregations can't express): per-domain RUNNING totals —
-    documents seen, Swedish-tagged documents, total text bytes —
-    carried across micro-batches in explicit GroupState rather than
-    recomputed from history.
-
-    Each micro-batch emits one updated row per domain touched in that
-    batch (update-mode semantics); state is three longs per domain —
-    bounded by the domain universe, not the stream length. Restart-safe
-    via the query checkpoint like all stateful operators.
-
-    ``idle_timeout_ms`` (continuous streams only): evict a domain's
-    state after that much processing-time inactivity, so an abandoned
-    domain does not pin memory forever. Leave None for availableNow /
-    catch-up runs — a processing-time timeout makes Spark keep the
-    query alive for no-data timeout sweeps, so an availableNow run
-    never self-terminates (measured: a 2-row batch 4.8s with NoTimeout
-    vs awaitTermination-capped minutes with a timeout set)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = (
-        "domain string, docs_seen long, sv_docs long, text_bytes long"
-    )
-    state_schema = "docs_seen long, sv_docs long, text_bytes long"
-
-    def _update(key, batches, state: GroupState):
-        (domain,) = key
-        if state.hasTimedOut:
-            state.remove()
-            return
-        docs, sv, nbytes = state.get if state.exists else (0, 0, 0)
-        for pdf in batches:
-            docs += len(pdf)
-            sv += int((pdf["lang"] == "sv").sum())
-            nbytes += int(pdf["text"].fillna("").str.encode("utf-8").str.len().sum())
-        state.update((docs, sv, nbytes))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
-        yield pd.DataFrame(
-            {"domain": [domain], "docs_seen": [docs], "sv_docs": [sv],
-             "text_bytes": [nbytes]}
-        )
-
-    from scripts_spark.sources.pages import domain_of
-
-    # project BEFORE the groupBy exchange: _update reads only lang and
-    # text, and shuffling + Arrow-serializing the html blob per page is
-    # the exact cost the batch pipeline was rewritten to avoid (BENCH.md
-    # round-2 note). domain_of is the shared batch-pipeline key, so the
-    # streaming stats join cleanly against domain-keyed batch outputs.
-    return (
-        pages.select(domain_of(F.col("url")).alias("domain"), "lang", "text")
-        .groupBy("domain")
-        .applyInPandasWithState(
-            _update, out_schema, state_schema, "update",
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout_ms is not None
-            else GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def run_domain_stats(spark: SparkSession, input_dir: str, checkpoint_dir: str,
-                     table_name: str,
-                     max_files_per_trigger: int | None = None) -> "StreamingQuery":
-    """File-source pages stream → running_domain_stats → in-memory
-    sink (update mode), processing everything available then stopping."""
-    pages = read_pages_stream(spark, input_dir, max_files_per_trigger)
-    agg = running_domain_stats(pages)
-    return (
-        agg.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

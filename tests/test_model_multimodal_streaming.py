@@ -132,27 +132,6 @@ def test_url_dedup_trigger_job_counts(spark, tmpdirs):
     assert len(manifests) == len(data)
 
 
-def test_windowed_event_counts_stream(spark, tmpdirs):
-    in_dir, _, ckpt, _ = tmpdirs
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    ev.write.mode("overwrite").parquet(in_dir)
-    schema = "event_id long, ts timestamp_ntz, user_id long, event_type string, value double, props string"
-    q = SJ.run_windowed_counts(spark, in_dir, ckpt, "win_counts", schema)
-    q.awaitTermination(120)
-    got = spark.sql("select * from win_counts")
-    # must equal the batch tumbling-window aggregation
-    batch = (
-        ev.groupBy(F.date_trunc("hour", "ts").alias("window_start"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("sum_value_cents"),
-        )
-    )
-    g = {(str(r["window_start"]), r["event_type"]): (r["n"], r["sum_value_cents"]) for r in got.collect()}
-    w = {(str(r["window_start"]), r["event_type"]): (r["n"], r["sum_value_cents"]) for r in batch.collect()}
-    assert g == w
-
-
 def test_stream_curate_cross_batch_boilerplate(spark, tmpdirs):
     """A nav line appearing in 2 docs per micro-batch (threshold: > 2
     docs) is invisible to per-batch boilerplate detection but must be
@@ -367,36 +346,6 @@ def test_boiler_state_legacy_schema_fails_fast(spark, tmpdirs):
     docs = deduped_docs(spark.createDataFrame(rows, PAGES_SCHEMA), cfg)
     with pytest.raises(ValueError, match="state format changed"):
         _merged_boiler(spark, docs, 1, state_dir, cfg)
-
-
-def test_running_domain_stats_stateful(spark, tmpdirs):
-    """applyInPandasWithState carries per-domain running totals ACROSS
-    micro-batches: with one file per trigger, the second batch's
-    emitted row must include the first batch's counts from GroupState,
-    not just its own."""
-    import datetime
-
-    in_dir, _, ckpt, _ = tmpdirs
-    def rows(i):
-        return [
-            (f"https://stat.example.com/p{i}{j}", datetime.datetime(2020, 1, 1 + i),
-             None, "text nummer " + str(i * 10 + j), "sv" if j == 0 else "en")
-            for j in (0, 1)
-        ]
-
-    spark.createDataFrame(rows(1), PAGES_SCHEMA).coalesce(1).write.mode("append").parquet(in_dir)
-    spark.createDataFrame(rows(2), PAGES_SCHEMA).coalesce(1).write.mode("append").parquet(in_dir)
-    q = SJ.run_domain_stats(spark, in_dir, ckpt, "domstats", max_files_per_trigger=1)
-    q.awaitTermination(180)
-
-    upd = spark.table("domstats").filter(F.col("domain") == "stat.example.com")
-    per_batch = sorted(r["docs_seen"] for r in upd.collect())
-    # update-mode sink holds one emitted row per micro-batch the domain
-    # appeared in: first batch totals 2 docs, second batch 4 CUMULATIVE
-    assert per_batch == [2, 4], per_batch
-    final = upd.orderBy(F.desc("docs_seen")).first()
-    assert final["sv_docs"] == 2          # one sv doc per batch
-    assert final["text_bytes"] > 0
 
 
 def test_stream_curate_cross_batch_paragraph_dedup(spark, tmpdirs):

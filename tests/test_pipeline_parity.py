@@ -321,8 +321,7 @@ def test_near_dedup_neighbor_mode_is_lazy(spark):
     out = pipeline.curate(
         df,
         pipeline.CurateConfig(
-            num_buckets=4, near_dedup=True, near_dedup_mode="neighbor",
-            persist_intermediate=False,
+            num_buckets=4, near_dedup=True, near_dedup_mode="neighbor"
         ),
     )
     after = tracker.getJobIdsForGroup(None)

@@ -337,25 +337,6 @@ def test_approx_percentile_tolerance(spark):
         assert abs(e - a) <= 0.1 * spread, (exact, approx)
 
 
-def test_lsh_bucket_zero_shuffle(spark):
-    """LSH bucketing must be a NARROW map over the embedding scan:
-    one numpy matmul per Arrow batch, nothing exploded, nothing
-    shuffled (r3 verdict flagged the old posexplode→join→groupBy form
-    as the pipeline's biggest at-scale exchange)."""
-    from scripts_spark.operators import similarity
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    dim = emb.select(F.size("embedding")).first()[0]
-    b = similarity.lsh_bucket(emb, dim, planes=8)
-    plan = _plan(b)
-    assert "Exchange" not in plan, plan
-    assert "Generate" not in plan, plan  # no posexplode of (key, d, v)
-    # and the full multi-probe query keeps the bucket stage narrow:
-    # its only exchanges belong to the final semi-join / top-k
-    q = similarity.ann_topk_lsh(emb, [0.1] * dim, k=5, planes=8)
-    assert "Generate" not in _plan(q)
-
-
 def test_bucketed_near_pairs_no_unbounded_pair_join(spark):
     """The oracle'd scale path for embedding near-dup pairs must
     enumerate pairs ONLY through the band-bucket equi self-join — no
@@ -370,90 +351,6 @@ def test_bucketed_near_pairs_no_unbounded_pair_join(spark):
     # and the bucket computation itself is pure JVM expression work:
     # no Python workers anywhere in this query
     assert "Python" not in plan, plan
-
-
-def test_ivf_stored_index_partition_pruning(spark, tmp_path):
-    """The stored-index IVF query path must prune at the partition-
-    directory level: only the n_probe probed centroid_id partitions
-    appear in the scan, and the answer matches the inline-assignment
-    form over the same centroids."""
-    from scripts_spark.operators import similarity
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    idx = str(tmp_path / "ivf")
-    cents = similarity.build_ivf_index(emb, idx, n_lists=8)
-    dim = emb.select(F.size("embedding")).first()[0]
-    qv = [0.05 * ((i % 7) - 3) for i in range(dim)]
-
-    got = similarity.ann_topk_ivf_indexed(spark, idx, qv, k=5, n_probe=2)
-    plan = _formatted(got)
-    # partition pruning proof: the centroid_id predicate is a partition
-    # filter on the scan (not a post-scan Filter over all rows)
-    assert "centroid_id" in plan and "PartitionFilters" in plan, plan
-    probed = similarity._probe_lists(
-        spark.read.parquet(f"{idx}/centroids").collect(), qv, 2
-    )
-    files = {
-        f.name for f in __import__("pathlib").Path(f"{idx}/vectors").iterdir()
-        if f.name.startswith("centroid_id=")
-    }
-    assert len(files) == 8  # index holds all lists...
-    # ...and the executed scan read only the probed ones: parse the
-    # actual IN-list (bare substring matching on single-digit ids
-    # would pass vacuously against expression ids like centroid_id#123)
-    import re
-
-    scanned = [l for l in plan.splitlines() if "PartitionFilters" in l]
-    assert scanned, plan
-    m = re.search(r"centroid_id#?\d* IN \(([^)]*)\)", scanned[0])
-    assert m, scanned[0]
-    in_list = {int(x) for x in m.group(1).split(",")}
-    assert in_list == set(probed), (in_list, probed)
-
-    inline = similarity.ann_topk_ivf(
-        emb, qv, k=5, n_lists=8, n_probe=2,
-        centroids=spark.read.parquet(f"{idx}/centroids"),
-    )
-    assert [r.asDict() for r in got.collect()] == [r.asDict() for r in inline.collect()]
-
-
-def test_ivf_index_incremental_append(spark, tmp_path):
-    """append_ivf_index must index ONLY rows not already stored (a
-    second append of the same input is a 0-row no-op), keep every
-    stored assignment consistent with ivf_assign against the FIXED
-    centroid table, and leave the query path unchanged."""
-    from scripts_spark.operators import similarity
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    idx = str(tmp_path / "ivf_inc")
-    similarity.build_ivf_index(emb.filter(F.col("vec_id") < 250), idx, n_lists=8)
-    n = similarity.append_ivf_index(spark, emb, idx)
-    n_total = emb.count()
-    assert n == n_total - 250, n
-    assert similarity.append_ivf_index(spark, emb, idx) == 0  # idempotent
-    stored = spark.read.parquet(f"{idx}/vectors")
-    assert stored.count() == n_total
-    cents = spark.read.parquet(f"{idx}/centroids")
-    expect = {
-        r["vec_id"]: r["centroid_id"]
-        for r in similarity.ivf_assign(emb, cents).collect()
-    }
-    got = {
-        r["vec_id"]: r["centroid_id"]
-        for r in stored.select("vec_id", "centroid_id").collect()
-    }
-    assert got == expect
-    dim = emb.select(F.size("embedding")).first()[0]
-    qv = [0.05 * ((i % 7) - 3) for i in range(dim)]
-    a = similarity.ann_topk_ivf_indexed(spark, idx, qv, k=5, n_probe=2)
-    b = similarity.ann_topk_ivf(emb, qv, k=5, n_lists=8, n_probe=2, centroids=cents)
-    assert [r.asDict() for r in a.collect()] == [r.asDict() for r in b.collect()]
-    # append before any build must fail with a clear instruction, not
-    # an opaque parquet path-not-found
-    import pytest as _pytest
-
-    with _pytest.raises(FileNotFoundError, match="build_ivf_index first"):
-        similarity.append_ivf_index(spark, emb, str(tmp_path / "never_built"))
 
 
 def test_paragraph_dedup_single_pass(spark):

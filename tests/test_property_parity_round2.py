@@ -123,14 +123,12 @@ def test_fuzz_protocol_surgery(spark):
         pid.alias("b"),
         tk.protocol_id_pad(pid).alias("p"),
         tk.docdate_rewrite(F.col("xml"), F.col("d")).alias("x"),
-        tk.fold_names(F.col("y")).alias("f"),
     ).collect()
     for (y, n, xml, d), r in zip(rows, got):
         b = ora.protocol_id_build(y, n)
         assert r["b"] == b
         assert r["p"] == ora.protocol_id_pad(b)
         assert r["x"] == ora.docdate_rewrite(xml, d), (xml, d)
-        assert r["f"] == ora.fold_names(y)
 
 
 def test_allcaps_unicode_boundary(spark):

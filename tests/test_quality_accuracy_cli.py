@@ -48,13 +48,6 @@ def test_quality_checks_catch_violations(spark):
     assert quality_checks.keep_consistency(bad).count() == 1
 
 
-def test_coverage_tolerance(spark):
-    cur = spark.createDataFrame([("a", 100), ("b", 95), ("c", 50)], "s string, n_kept long")
-    base = spark.createDataFrame([("a", 100), ("b", 100), ("c", 100)], "s string, n_kept long")
-    bad = quality_checks.coverage_tolerance(cur, base, ["s"])
-    assert {r["s"] for r in bad.collect()} == {"c"}  # b within ±10%
-
-
 def test_beta_ppf_sanity():
     # symmetric case: Beta(2,2) median = 0.5
     assert abs(accuracy.beta_ppf(0.5, 2, 2) - 0.5) < 1e-6

@@ -164,6 +164,59 @@ def test_manifest_reads_spark_written_files(spark, outdir):
     assert seqs == {0: 0, 1: 0, 2: 1, 5: 2}
 
 
+def _manifest_row(seq):
+    """A one-bucket commit's manifest row with distinct metric values."""
+    return (seq % 3, seq % 8, seq, *range(seq, seq + len(catalog.METRIC_COLS)))
+
+
+def _manifest_files(base):
+    return sorted(os.listdir(catalog.manifest_path(base)))
+
+
+def test_manifest_fold_bounds_files(outdir):
+    """150 driver-side appends: an append that leaves more than
+    FOLD_AFTER data files folds them into one, so the manifest never
+    holds more than FOLD_AFTER files between commits, reads the same
+    rows as the unfolded sequence, and commit_seq continues."""
+    want = []
+    for seq in range(150):
+        catalog._append_manifest(outdir, [_manifest_row(seq)])
+        want.append(_manifest_row(seq))
+        assert len(_manifest_files(outdir)) <= catalog.FOLD_AFTER, seq
+    names = _manifest_files(outdir)
+    assert all(not n.startswith(".") for n in names)  # no temp file left
+    assert sum(n.startswith("fold-") for n in names) == 1
+    assert sorted(catalog._manifest_rows(outdir)) == sorted(want)
+    assert catalog._committed(outdir, 0) == ({b % 8 for b in range(0, 150, 3)}, 150)
+
+
+def test_manifest_fold_interrupted_before_deletes(outdir, monkeypatch):
+    """A fold stopped after its rename but before deleting the files it
+    folded leaves every row twice on disk; reads drop the duplicates,
+    and the next append finishes the fold."""
+    real = catalog._write_renamed
+
+    def crash_after_fold(fs, path, name, rows):
+        real(fs, path, name, rows)
+        if name.startswith("fold-"):
+            raise OSError("killed before the fold's deletes")
+
+    monkeypatch.setattr(catalog, "_write_renamed", crash_after_fold)
+    want = [_manifest_row(seq) for seq in range(catalog.FOLD_AFTER + 1)]
+    for row in want[:-1]:
+        catalog._append_manifest(outdir, [row])
+    with pytest.raises(OSError, match="before the fold's deletes"):
+        catalog._append_manifest(outdir, [want[-1]])
+    names = _manifest_files(outdir)
+    assert len(names) == catalog.FOLD_AFTER + 2  # the folded files and the fold
+    assert catalog._manifest_rows(outdir) == want
+    monkeypatch.undo()
+    want.append(_manifest_row(len(want)))
+    catalog._append_manifest(outdir, [want[-1]])
+    assert [n.split("-")[0] for n in _manifest_files(outdir)] == ["fold"]
+    assert catalog._manifest_rows(outdir) == want
+
+
 # Spark jobs for one lazy curate() plus its commit into an empty base,
 # measured on the test session (local[4], 8 buckets) once warm. The
 # commit's share is one metrics collect (which runs the curate plan)

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from scripts_spark.functions import text_kernel as tk
 from scripts_spark.oracle import textoracle as ora
+from scripts_spark.plans.pipeline import _repair_line
 from scripts_spark.sources import pages
 
 GOLDEN = [
@@ -81,8 +82,13 @@ def test_scrub_pii(spark):
     assert got == [ora.scrub_pii(v) for v in GOLDEN]
 
 
+def _chain(raw):
+    """The pipeline's per-paragraph chain: repair, then redact."""
+    return tk.scrub_all(_repair_line(raw))
+
+
 def test_full_chain(spark):
-    got = _spark_one(spark, tk.repair_and_scrub, GOLDEN)
+    got = _spark_one(spark, _chain, GOLDEN)
     assert got == [ora.repair_and_scrub(v) for v in GOLDEN]
 
 
@@ -97,7 +103,7 @@ def test_chain_on_generated_paragraphs(spark):
     for r in pages.gen_rows(range(400)):
         paras.extend((r["text"] or "").split("\n"))
     paras = [p for p in paras if p]
-    got = _spark_one(spark, tk.repair_and_scrub, paras)
+    got = _spark_one(spark, _chain, paras)
     exp = [ora.repair_and_scrub(p) for p in paras]
     assert got == exp
 

@@ -1,4 +1,4 @@
-"""Window operators (SURVEY W1–W14) vs straight-line Python oracles
+"""Window operators (SURVEY W1–W4, W7, W9–W11) vs straight-line Python oracles
 over the synthetic segments fixture."""
 
 from __future__ import annotations
@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from scripts_spark.operators import windows as W
-from scripts_spark.sources import segments as seg_src
+from tests import segments as seg_src
 
 N_DOCS = 40
 
@@ -95,50 +95,6 @@ def test_demote_pre_intro(spark, segs, seg_rows):
             assert got[(url, r["pos"])] == want
 
 
-def test_merge_consecutive(spark, segs, seg_rows):
-    df = W.merge_consecutive(segs, "u")
-    got = sorted(
-        (r["url"], r["pos"], r["text"], r["n_merged"])
-        for r in df.filter(F.col("elem_type") == "u").collect()
-    )
-    want = []
-    for url, rows in _by_doc(seg_rows).items():
-        for is_u, grp in itertools.groupby(rows, key=lambda r: r["elem_type"] == "u"):
-            grp = list(grp)
-            if is_u:
-                want.append(
-                    (url, grp[0]["pos"], " ".join(r["text"] for r in grp), len(grp))
-                )
-    assert got == sorted(want)
-    # non-u rows pass through unchanged
-    n_other = sum(1 for r in seg_rows if r["elem_type"] != "u")
-    assert df.filter(F.col("elem_type") != "u").count() == n_other
-
-
-def test_running_page_cursor(spark, segs, seg_rows):
-    got = {(r["url"], r["pos"]): r["page"] for r in W.running_page_cursor(segs).collect()}
-    for url, rows in _by_doc(seg_rows).items():
-        page = None
-        for r in rows:
-            if r["elem_type"] == "pb":
-                page = r["facs"]
-            assert got[(url, r["pos"])] == page
-
-
-def test_running_attribution(spark, segs, seg_rows):
-    is_intro = (F.col("elem_type") == "note") & (F.col("type_attr") == "speaker")
-    got = {
-        (r["url"], r["pos"]): r["intro_text"]
-        for r in W.running_attribution(segs, is_intro).collect()
-    }
-    for url, rows in _by_doc(seg_rows).items():
-        cur = None
-        for r in rows:
-            assert got[(url, r["pos"])] == cur
-            if r["elem_type"] == "note" and r["type_attr"] == "speaker":
-                cur = r["text"]
-
-
 def test_tag_after_intro(spark, segs, seg_rows):
     is_intro = (F.col("elem_type") == "note") & (F.col("type_attr") == "speaker")
     got = {
@@ -150,17 +106,6 @@ def test_tag_after_intro(spark, segs, seg_rows):
         for r in rows:
             assert got[(url, r["pos"])] == prev_was_intro
             prev_was_intro = r["elem_type"] == "note" and r["type_attr"] == "speaker"
-
-
-def test_pair_with_next(spark, segs, seg_rows):
-    got = sorted(
-        (r["url"], r["xml_id1"], r["xml_id2"]) for r in W.pair_with_next(segs).collect()
-    )
-    want = []
-    for url, rows in _by_doc(seg_rows).items():
-        for a, b in zip(rows, rows[1:]):
-            want.append((url, a["elem_id"], b["elem_id"]))
-    assert got == sorted(want)
 
 
 def test_first_date_and_range(spark, segs, seg_rows):
@@ -205,14 +150,6 @@ def test_clean_first_last(spark, segs, seg_rows):
                 want_prev = None if k == 0 else r["prev"]
                 want_next = None if k == len(rs) - 1 else r["next"]
                 assert got[(url, r["pos"])] == (want_prev, want_next)
-
-
-def test_top_k_per_stratum(spark, segs):
-    df = W.top_k_per_stratum(
-        segs, ["url"], [F.col("pos").desc()], 2
-    )
-    counts = df.groupBy("url").count().collect()
-    assert all(r["count"] <= 2 for r in counts)
 
 
 def test_corpus_stats(spark, segs, seg_rows):
