@@ -4,7 +4,7 @@ one pandas UDF pass over the scrubbed text.
 This is the north-star architecture (BASELINE.json): the frozen model
 tables (word scores, bigram costs) ship to executors as a Spark
 broadcast, and scoring runs inside an Arrow-batched pandas UDF with a
-per-worker token memo — the reference's ``prob_dict`` cache
+per-task token memo — the reference's ``prob_dict`` cache
 (/root/reference/src/cur-prot/reclassify.py:40-47) made distributed.
 
 Why this beats the JVM explode+join path (both are implemented;
@@ -34,7 +34,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from scripts_spark.functions import langmodel
 from scripts_spark.oracle import textoracle
-from scripts_spark.session import per_app
+from scripts_spark.session import drop_zip_finders, per_app
 
 SCORE_COLS = ("lang_score", "ppx_sum", "n_bigrams")
 SCORE_SCHEMA = ", ".join(f"{c} long" for c in SCORE_COLS)
@@ -96,6 +96,7 @@ def scores_udf(spark: SparkSession) -> "function":
     bc = _model_broadcast(spark)
 
     def _udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         stop_scores, bigram = bc.value
         token_memo: dict[str, tuple[str, int]] = {}
         for s in it:

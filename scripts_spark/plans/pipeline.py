@@ -5,7 +5,7 @@ Re-expresses the reference post-pipeline
 (/root/reference/src/cur-prot/post-pipeline.py:135-146 — eleven full
 corpus passes, one subprocess each) as a single declarative plan:
 
-    scan → url-dedup (map-side-combined min) → salted repartition →
+    scan → url-dedup (map-side-combined min) → bucket layout by id →
     per-row paragraph repair (array-side, zero shuffle) →
     domain-boilerplate detection (the one genuine cross-doc agg) →
     broadcast boiler-set back → per-row strip + PII scrub +
@@ -24,9 +24,11 @@ Scale design (100 TB / 1000 executors):
   and literals cap out long before a real LM table would fit anyway.
   The Arrow pandas-UDF scorer (functions/scoring_udf.py) is the
   default form of the same seam;
-- plus the url-dedup window and the explicit salted bucket
-  repartition (north rule). Every shuffle partial-aggregates map-side
-  and scales with cores; AQE coalesces/splits at runtime;
+- plus the url-dedup window and the explicit bucket layout
+  (north rule): each (bucket, salt-slice) key is placed in its own
+  partition by id, so every partition does work. Every shuffle
+  partial-aggregates map-side and scales with cores; AQE
+  coalesces/splits at runtime;
 - all keep/drop thresholds are integer cross-multiplications; langid
   and perplexity sums are exact longs — no float-order
   nondeterminism anywhere.
@@ -49,11 +51,13 @@ from scripts_spark.session import per_app
 from scripts_spark.sources.pages import domain_of
 
 PIPELINE_VERSION = "1.2"  # 1.2: toxicity lexicon scrub after PII
-# The opt-in paragraph-dedup and near-dedup stages do NOT bump this:
-# with them off, row semantics (and the physical plan, byte-for-byte)
-# are exactly 1.2 — bench plan-identity digests depend on that — and
-# with a stage on, the lineage carries its own "para_dedup" /
-# "near_dedup" rule-version key.
+# Only a change of row semantics bumps this; physical-layout changes
+# (such as the bucket layout exchange placing rows by partition id)
+# keep every row and digest and do not. The opt-in paragraph-dedup
+# and near-dedup stages do NOT bump it either: with them off, row
+# semantics and lineage literals are exactly 1.2, and with a stage on,
+# the lineage carries its own "para_dedup" / "near_dedup" rule-version
+# key.
 
 
 @dataclass(frozen=True)
@@ -77,14 +81,17 @@ class CurateConfig:
     boiler_doc_den: int = 2
     num_buckets: int = 64
     salt: int = 0
-    # physical shuffle partitions for the scoring stage; None → sized
-    # at runtime to max(num_buckets, 4x cores). Independent of
-    # num_buckets, which is only the commit/manifest unit.
+    # physical partitions of the layout exchange (and so the tasks of
+    # every stage after url-dedup); None → sized at runtime to
+    # max(num_buckets, 4x cores). Independent of num_buckets, which is
+    # only the commit/manifest unit: at >= num_buckets partitions each
+    # bucket owns its own run of them, at fewer they share.
     target_partitions: int | None = None
     input_snapshot: str = "fixture-v1"
     scorer: str = "arrow"  # "arrow" | "join"
-    # "salted" (production): repartition on (url-hash bucket, intra-
-    # bucket salt) — uniform under ANY domain distribution. "domain":
+    # "salted" (production): place each (url-hash bucket, intra-bucket
+    # salt) key in its own partition by id (_partition_id) — uniform
+    # under ANY domain distribution, no partition left empty. "domain":
     # the naive co-locate-by-domain exchange, kept ONLY as the skew
     # bench's control arm (bench.py _skew_block) so the salt's
     # flattening effect on a Zipfian hot-domain input is a measured
@@ -154,10 +161,10 @@ class CurateConfig:
             f"len{self.min_chars}-rep{self.rep_num}/{self.rep_den}"
             f"-ppx{langmodel.PPX_THRESHOLD_MILLI}"
         )
-        # only recorded when the stage is ON: with it off the whole
-        # plan (lineage literals included) must stay byte-identical to
-        # pipeline 1.2, so bench plan-identity digests vs a
-        # previous-round control clone read true
+        # only recorded when the stage is ON: with it off the lineage
+        # literals, and so the plan, carry nothing of it, so bench
+        # plan-identity digests vs a control clone that lacks the stage
+        # read true
         if self.text_from_html:
             rv["text_from_html"] = f"on-{html_extract.EXTRACT_SPEC_VERSION}"
         if self.para_dedup:
@@ -180,13 +187,41 @@ def _repair_line(line: Column) -> Column:
 
 
 def _target_partitions(spark: SparkSession, cfg: CurateConfig) -> int:
-    """Physical parallelism for the scoring stage: decoupled from
-    num_buckets (the commit/manifest unit), sized to ~4x cores so the
-    stage scales with the cluster instead of capping at 64 tasks."""
+    """Partitions of the layout exchange, i.e. the tasks of every
+    stage after url-dedup: decoupled from num_buckets (the
+    commit/manifest unit), sized to ~4x cores so the stage scales with
+    the cluster instead of capping at 64 tasks. _partition_id fills
+    each of them."""
     if cfg.target_partitions is not None:
         return cfg.target_partitions
     cores = spark.sparkContext.defaultParallelism
     return max(cfg.num_buckets, 4 * cores)
+
+
+def _partition_id(url: Column, num_buckets: int, n_parts: int, salt: int) -> Column:
+    """The layout exchange's target partition of each row: bucket b
+    owns a run of partitions and an intra-bucket salt (a second url
+    hash) picks one of them, so one hot bucket (Zipfian domain skew)
+    spreads over its whole run instead of serializing a stage.
+
+    Placed by id (``repartitionById``), not hashed: hashing the
+    (bucket, salt) pair again collides keys — 64 buckets over 64
+    partitions use 42 of them, and 2 buckets over 2 can share one,
+    leaving a core idle for every stage after url-dedup. With
+    n_parts >= num_buckets every partition holds exactly one
+    (bucket, slice) key — the first n_parts % num_buckets buckets own
+    one slice more than the rest; with fewer partitions than buckets,
+    bucket b goes to partition b mod n_parts, so partitions differ by
+    at most one bucket."""
+    bucket = F.col("bucket")
+    q, r = divmod(n_parts, num_buckets)
+    if q == 0:
+        return bucket.cast("int")
+    slices, start = F.lit(q), bucket * q
+    if r:
+        slices = slices + (bucket < r).cast("int")
+        start = start + F.least(bucket, F.lit(r))
+    return (start + F.pmod(F.xxhash64(url, F.lit(salt + 1)), slices)).cast("int")
 
 
 # Plan building is driver time that every batch job and every stream
@@ -208,13 +243,11 @@ def _dedup_cols(spark: SparkSession, cfg: CurateConfig) -> SimpleNamespace:
         if cfg.repartition_mode == "domain":
             # skew-probe control arm only — a hot domain serializes the
             # whole downstream narrow chain into one task
-            layout = [F.col("domain")]
+            domain = F.col("domain")
+            layout = lambda df: df.repartition(n_parts, domain)
         else:
-            intra_salt = F.pmod(
-                F.xxhash64(url, F.lit(cfg.salt + 1)),
-                F.lit(max(1, n_parts // cfg.num_buckets)),
-            )
-            layout = [F.col("bucket"), intra_salt]
+            pid = _partition_id(url, cfg.num_buckets, n_parts, cfg.salt)
+            layout = lambda df: df.repartitionById(n_parts, pid)
         repaired = F.filter(
             F.transform(F.split(F.col("text"), "\n"), _repair_line), lambda p: p != ""
         )
@@ -231,7 +264,6 @@ def _dedup_cols(spark: SparkSession, cfg: CurateConfig) -> SimpleNamespace:
                 F.pmod(F.xxhash64(url, F.lit(cfg.salt)), F.lit(cfg.num_buckets)).alias("bucket"),
                 domain_of(url).alias("domain"),
             ],
-            n_parts=n_parts,
             layout=layout,
             # shed the wide inputs immediately: raw text does not travel
             # past the repair pass
@@ -243,8 +275,8 @@ def _dedup_cols(spark: SparkSession, cfg: CurateConfig) -> SimpleNamespace:
 
 def deduped_docs(pages: DataFrame, cfg: CurateConfig) -> DataFrame:
     """url-dedup (deterministic winner: min (warc_ts, coalesce(text,''))),
-    salted bucket assignment + explicit repartition, repaired paragraph
-    array.
+    bucket assignment + exact placement by partition id, repaired
+    paragraph array.
 
     Scale notes:
     - the html payload is projected OUT before the dedup shuffle — the
@@ -256,9 +288,11 @@ def deduped_docs(pages: DataFrame, cfg: CurateConfig) -> DataFrame:
       of every duplicate crossing the wire;
     - text is coalesced to '' INSIDE the min so null and empty text
       rank identically to the oracle (pipeline_oracle maps None→'');
-    - the post-dedup repartition spreads each bucket over
-      target_partitions/num_buckets intra-bucket salt slices, so one
-      hot bucket (Zipfian domain skew) cannot serialize a stage.
+    - the post-dedup layout exchange (``repartitionById``, Spark >=
+      4.1) spreads each bucket over its own run of target_partitions /
+      num_buckets partitions, one intra-bucket salt slice each, so one
+      hot bucket (Zipfian domain skew) cannot serialize a stage and no
+      partition sits empty (see _partition_id).
 
     cfg.text_from_html applies HERE (not in curate()) so EVERY path
     that builds docs — batch curate, streaming's own deduped_docs
@@ -270,7 +304,7 @@ def deduped_docs(pages: DataFrame, cfg: CurateConfig) -> DataFrame:
         .groupBy(c.url)
         .agg(c.best)
         .select(*c.keyed)
-        .repartition(c.n_parts, *c.layout)
+        .transform(c.layout)
         .select(*c.out)
     )
 
@@ -690,8 +724,8 @@ def _always(cfg: CurateConfig) -> bool:
 # from it. Table order is the emission order of the filter_reasons
 # array expression — the output array is array_sort'ed, but the plan
 # bytes follow this order. A rule whose stage is off adds NO
-# expression (not a vacuous lit(False)), so the default plan stays
-# byte-identical to pipeline 1.2; the column references of its stage
+# expression (not a vacuous lit(False)), so the default plan carries
+# nothing of it; the column references of its stage
 # (paras_dup, _nd_loser) then stay unresolved and never enter the plan.
 RULES = (
     ("min_length", _always, lambda cfg, c: c["n_chars"] < cfg.min_chars),
@@ -847,7 +881,7 @@ def curate(pages: DataFrame, cfg: CurateConfig | None = None,
     # langid + perplexity scoring. Two interchangeable physical forms
     # with identical results (both pinned to the oracle):
     # - "arrow" (default): broadcast model tables inside an Arrow
-    #   pandas UDF with a per-worker token memo — zero shuffle, and
+    #   pandas UDF with a per-task token memo — zero shuffle, and
     #   ~9x faster than the explode path at local[32] (dict lookups
     #   vs 20M-row explode + window + joins + re-agg with GC churn).
     #   The UDF call sits inside the stats projection (c.stats), so the

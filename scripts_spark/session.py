@@ -9,6 +9,8 @@ the sandbox (overridable; on a real cluster this is ~2-3x total cores).
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 from collections.abc import Callable, Hashable
 from typing import TypeVar
 
@@ -82,6 +84,26 @@ def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
     pdf = pd.DataFrame(rows or [(None,) * len(names)], columns=names, dtype=object)
     df = spark.createDataFrame(pdf, schema)
     return df if rows else df.limit(0)
+
+
+def drop_zip_finders() -> None:
+    """Forget this Python worker's cached ``zipimporter`` finders.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` at the
+    start of every task (``pyspark/worker_util.setup_spark_files``). On
+    Python 3.11 each cached zipimporter answers by re-reading its whole
+    archive directory: 16 finders over pyspark.zip, the py4j zip and
+    spark-core's jar, about 80 ms per task on a 4-vCPU host.
+    ``sys.path_importer_cache`` is only a cache: an import that needs
+    one of these paths again builds a fresh finder from zipimport's own
+    directory cache, without reading the archive. So a worker that
+    calls this first thing in a task skips the re-read in every later
+    task it runs (workers are reused), until an import recreates them.
+    """
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            cache.pop(path, None)
 
 
 # Objects that live in one Spark application — memoized Column trees,

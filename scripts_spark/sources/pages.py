@@ -31,6 +31,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from scripts_spark.session import drop_zip_finders
+
 PAGES_SCHEMA = StructType(
     [
         StructField("url", StringType(), False),
@@ -256,6 +258,7 @@ def pages_df(spark: SparkSession, n: int, seed: int = 42, partitions: int | None
     rng = spark.range(start, start + n, 1, parts)
 
     def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for b in batches:
             yield pd.DataFrame(gen_rows(b["id"].tolist(), seed))
 

@@ -103,21 +103,36 @@ def test_curate_prunes_html_at_scan(spark, tmp_path):
     assert "html:" not in _plan(dec)
 
 
-def test_curate_parallelism_not_capped_by_buckets(spark):
-    """Physical parallelism is decoupled from the commit unit: with
-    num_buckets=4 the scoring stage still fans out to target_partitions
-    tasks (hot buckets are split by the intra-bucket salt)."""
-    cfg = CurateConfig(num_buckets=4, target_partitions=16)
-    dec = curate(pages_df(spark, 200, partitions=4), cfg)
+def test_deduped_docs_exact_placement(spark):
+    """The layout exchange places each (bucket, salt-slice) key in its
+    own partition by id. With target_partitions >= num_buckets every
+    partition is used and holds exactly one bucket, and the buckets'
+    slice counts differ by at most one; with fewer partitions than
+    buckets, the buckets per partition differ by at most one. Physical
+    parallelism stays decoupled from the commit unit: 4 buckets still
+    fan the scoring stage out to 16 tasks."""
+    pages = pages_df(spark, 600, partitions=4)
+    for n_buckets, target in ((2, 2), (8, 8), (4, 16), (4, 10), (8, 4)):
+        d = deduped_docs(pages, CurateConfig(num_buckets=n_buckets, target_partitions=target))
+        assert "shufflepartitionidpassthrough" in _plan(d)
+        assert d.rdd.getNumPartitions() == target
+        rows = (
+            d.groupBy(F.spark_partition_id().alias("pid"))
+            .agg(F.collect_set("bucket").alias("buckets"))
+            .collect()
+        )
+        where = {r["pid"]: set(r["buckets"]) for r in rows}
+        assert set().union(*where.values()) == set(range(n_buckets)), where
+        if target >= n_buckets:
+            assert sorted(where) == list(range(target)), where
+            assert all(len(b) == 1 for b in where.values()), where
+            slices = [sum(b in bs for bs in where.values()) for b in range(n_buckets)]
+            assert max(slices) - min(slices) <= 1, slices
+        else:
+            keys = [len(b) for b in where.values()]
+            assert len(where) == target and max(keys) - min(keys) <= 1, where
+    dec = curate(pages, CurateConfig(num_buckets=4, target_partitions=16))
     assert dec.rdd.getNumPartitions() >= 16
-    # every bucket occupies >1 physical partition (salt actually varies)
-    per_part = (
-        dec.withColumn("pid", F.spark_partition_id())
-        .groupBy("bucket")
-        .agg(F.countDistinct("pid").alias("n_pids"))
-        .collect()
-    )
-    assert all(r["n_pids"] > 1 for r in per_part), per_part
 
 
 def test_curate_boiler_broadcast(spark):
