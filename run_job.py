@@ -64,7 +64,6 @@ def main(argv: list[str] | None = None) -> int:
     c.add_argument("--buckets", type=int, default=256)
     c.add_argument("--salt", type=int, default=0)
     c.add_argument("--snapshot", default="cli")
-    c.add_argument("--scorer", choices=["arrow", "join"], default="arrow")
     c.add_argument("--text-from-html", action="store_true",
                    help="derive the text column on-engine from the raw "
                         "html:binary payload (fixed extraction spec) "
@@ -195,7 +194,7 @@ def main(argv: list[str] | None = None) -> int:
         df = spark.read.parquet(a.input)
         cfg = CurateConfig(
             num_buckets=a.buckets, salt=a.salt, input_snapshot=a.snapshot,
-            scorer=a.scorer, para_dedup=a.para_dedup,
+            para_dedup=a.para_dedup,
             near_dedup=a.near_dedup, near_dedup_mode=a.near_dedup_mode,
             text_from_html=a.text_from_html,
         )
@@ -223,11 +222,9 @@ def main(argv: list[str] | None = None) -> int:
         # a valid run over an empty input commits zero batches and never
         # creates <output>/data — report 0 rows instead of crashing on
         # the nonexistent path
-        import os as _os
-
         n = (
             catalog.read_output(spark, a.output).count()
-            if _os.path.isdir(f"{a.output}/data")
+            if os.path.isdir(f"{a.output}/data")
             else 0
         )
         print(json.dumps({"output_rows": n, "path": a.output}))

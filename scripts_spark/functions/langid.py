@@ -1,8 +1,8 @@
 """Language decision from a document's integer language score.
 
 The score itself (the sum of per-token word scores, exact long) comes
-from the model scorers: the Arrow UDF in scoring_udf.py or the
-explode+join form in scoring_join.py. These two expressions are the
+from the Arrow UDF scorer in scoring_udf.py; scoring_join.py is its
+pure-SQL reference form. These two expressions are the
 Spark twins of ``langmodel.lang_decision`` and ``langmodel.lang_conf``.
 """
 

@@ -1,9 +1,9 @@
 """Bigram (KenLM-style) perplexity: the cost table as a frame and the
 per-document perplexity and threshold expressions.
 
-The join scorer (functions/scoring_join) reaches the data with this
-table through a broadcast hash join — the shape that still works when
-the LM has 10^8 n-grams. Costs are integer milli-nats so the per-doc
+The pure-SQL reference scorer (functions/scoring_join, run by the
+doc_scoring registry query) reaches the data with this table through
+a broadcast hash join. Costs are integer milli-nats so the per-doc
 sum is an exact long; the keep/drop comparison is integer
 cross-multiplication (sum > threshold·n), never a float compare.
 """

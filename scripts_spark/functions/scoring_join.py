@@ -1,5 +1,7 @@
-"""Model-table scoring: ONE token explode per document, two broadcast
-hash joins (word-score table, bigram cost table via a lag window), one
+"""Model-table scoring in pure SQL — the reference form of the Arrow
+scorer (scoring_udf.py), run by the doc_scoring registry query against
+DuckDB: ONE token explode per document, two broadcast hash joins
+(word-score table, bigram cost table via a lag window), one
 groupBy(url) aggregation.
 
 Design notes (measured on 200k docs, local[32]):

@@ -7,12 +7,12 @@ broadcast, and scoring runs inside an Arrow-batched pandas UDF with a
 per-task token memo — the reference's ``prob_dict`` cache
 (/root/reference/src/cur-prot/reclassify.py:40-47) made distributed.
 
-Why this beats the JVM explode+join path (both are implemented;
-scoring_join.py is the pure-SQL alternative): token scoring is two
-dict lookups per token here, versus explode (20M rows), a window sort,
-two hash joins and a re-aggregation there — measured ~9x faster on
-200k docs at local[32], where the JVM path's allocation churn hits GC
-contention. No shuffle at all on this path.
+Why this beats the JVM explode+join path (scoring_join.py keeps it
+as the pure-SQL reference this scorer is checked against): token
+scoring is two dict lookups per token here, versus explode (20M
+rows), a window sort, two hash joins and a re-aggregation there —
+measured ~9x faster on 200k docs at local[32], where the JVM path's
+allocation churn hits GC contention. No shuffle at all on this path.
 
 All sums are Python ints (exact); results are bit-identical to the
 oracle and to scoring_join (same frozen tables).

@@ -132,7 +132,8 @@ def paragraph_dedup_hashed(docs: DataFrame, id_col: str = "doc_id",
        Zipf-hot boilerplate spans as skew magnets);
     2. fold the surviving span ordinals into ONE sorted int array per
        document (a ~n_spans·4-byte row keyed by the doc id — uniform,
-       never hot);
+       never hot); steps 1-2 are :func:`first_occurrence_ordinals`,
+       the curate pipeline's para-dedup rule too;
     3. rebuild dedup_text in a second pass: join that kept-ordinal
        array back to the docs table on the id and re-derive the span
        array map-side — text crosses an exchange exactly once, keyed
@@ -178,29 +179,55 @@ def paragraph_dedup_hashed(docs: DataFrame, id_col: str = "doc_id",
         (h1(F.col("para")) if h1 is not None else d_h1).alias("_h1"),
         d_h2.alias("_h2"),
     )
-    occ = F.struct(F.col(id_col).alias("d"), F.col("idx").alias("i"))
-    w = Window.partitionBy("_h1", "_h2")
-    kept = hp.withColumn("kept", occ == F.min(occ).over(w))
-    per_doc = kept.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_paras"),
-        F.sum(F.col("kept").cast("long")).alias("n_kept"),
-        F.array_sort(
-            F.collect_list(F.when(F.col("kept"), F.col("idx")))
-        ).alias("_kept_idx"),
-    )
     rebuilt = live.select(F.col(id_col), spans.alias("_spans")).join(
-        per_doc, id_col
+        first_occurrence_ordinals(hp, id_col, "idx"), id_col
     )
     return rebuilt.select(
         id_col,
-        "n_paras",
-        "n_kept",
+        F.size("_spans").cast("long").alias("n_paras"),
+        F.size("_kept_idx").cast("long").alias("n_kept"),
         F.array_join(
             F.transform(
                 F.col("_kept_idx"), lambda i: F.element_at(F.col("_spans"), i + 1)
             ),
             " ",
         ).alias("dedup_text"),
+    )
+
+
+def first_occurrence_ordinals(rows: DataFrame, id_col: str, idx_col: str,
+                              history: DataFrame | None = None) -> DataFrame:
+    """The first-occurrence rule of the hashed paragraph dedup, shared
+    by :func:`paragraph_dedup_hashed` and the curate pipeline's
+    para-dedup stage: from (id, idx, _h1, _h2) span rows, keep a span
+    only at the corpus-wide min (id, idx) of its 128-bit key — one
+    window over the 16-byte key, no string — and fold each document's
+    surviving ordinals into one sorted int array. Returns
+    (id, _kept_idx); a document whose every span lost has an empty
+    array.
+
+    ``history``: an (h1, h2) frame of span keys seen EARLIER (the
+    streaming span store). A span whose key appears there is dropped
+    too — its first occurrence lives in an already-committed batch —
+    so batch and streaming runs share one survivor rule: first
+    occurrence in (batch, id, idx) order."""
+    occ = F.struct(F.col(id_col).alias("u"), F.col(idx_col).alias("i"))
+    flags = rows.withColumn(
+        "_kept", occ == F.min(occ).over(Window.partitionBy("_h1", "_h2"))
+    )
+    if history is not None:
+        hist = (
+            history.select(F.col("h1").alias("_h1"), F.col("h2").alias("_h2"))
+            .distinct()
+            .withColumn("_hist", F.lit(True))
+        )
+        flags = flags.join(hist, ["_h1", "_h2"], "left").withColumn(
+            "_kept", F.col("_kept") & F.col("_hist").isNull()
+        )
+    return flags.groupBy(id_col).agg(
+        F.array_sort(
+            F.collect_list(F.when(F.col("_kept"), F.col(idx_col)))
+        ).alias("_kept_idx")
     )
 
 
@@ -288,6 +315,41 @@ def band_candidate_pairs(rows: DataFrame, key: str) -> DataFrame:
         )
         .select(F.col(f"a.{key}").alias("key_a"), F.col(f"b.{key}").alias("key_b"))
         .distinct()
+    )
+
+
+def signature_history_losers(cur: DataFrame, hist: DataFrame, key: str,
+                             num: int, den: int, num_hashes: int) -> DataFrame:
+    """(key, near_dup_of) for every ``cur`` row whose MinHash signature
+    matches some ``hist`` row's on >= num/den of its ``num_hashes``
+    components — the cross-batch near-dup estimate against a signature
+    store, which holds no text to shingle-verify against.
+
+    ``cur`` is (key, sig, bks) rows (signature_with_bands' shape),
+    ``hist`` is (h_<key>, h_sig, band, band_key) rows. Candidates come
+    from an equi-join on (band, band_key); the threshold is an integer
+    cross-multiplication on the matching-component count (never a
+    float compare); near_dup_of is the smallest matching h_<key>. A
+    same-key match counts. Signature values are only compared for
+    equality, so any hash family works."""
+    h_key = f"h_{key}"
+    cand = (
+        cur.select(key, "sig", F.posexplode("bks").alias("band", "band_key"))
+        .join(hist, ["band", "band_key"])
+        .select(key, "sig", h_key, "h_sig")
+        .distinct()
+    )
+    m = F.size(
+        F.filter(
+            F.zip_with(F.col("sig"), F.col("h_sig"), lambda a, b: a == b),
+            lambda x: x,
+        )
+    )
+    return (
+        cand.withColumn("_m", m)
+        .filter(F.col("_m") * den >= F.lit(num * num_hashes))
+        .groupBy(key)
+        .agg(F.min(h_key).alias("near_dup_of"))
     )
 
 

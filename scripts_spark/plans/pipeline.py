@@ -17,13 +17,13 @@ Scale design (100 TB / 1000 executors):
   no explode/regroup for anything that is per-document;
 - the genuine cross-row work is the (domain, line) boilerplate count:
   one partial-agg'd shuffle whose tiny result broadcasts back;
-- model lookups (langid word scores, bigram LM costs) go through
-  vocabulary-dedup + broadcast hash joins, NOT map literals: Spark map
+- model lookups (langid word scores, bigram LM costs) run in one
+  Arrow pandas UDF over broadcast model tables with a per-task token
+  memo (functions/scoring_udf.py), NOT map literals: Spark map
   lookups are linear scans, so a 1.4k-entry literal costs ~70k string
-  compares per doc (measured 135s vs 10s per 200k docs at local[8]),
-  and literals cap out long before a real LM table would fit anyway.
-  The Arrow pandas-UDF scorer (functions/scoring_udf.py) is the
-  default form of the same seam;
+  compares per doc (measured 135s vs 10s per 200k docs at local[8]).
+  functions/scoring_join.py is the pure-SQL reference the scorer is
+  checked against (the doc_scoring registry query);
 - plus the url-dedup window and the explicit bucket layout
   (north rule): each (bucket, salt-slice) key is placed in its own
   partition by id, so every partition does work. Every shuffle
@@ -45,8 +45,9 @@ from types import SimpleNamespace
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
-from scripts_spark.functions import ids, langid, langmodel, perplexity, scoring_join, scoring_udf, text_kernel
+from scripts_spark.functions import ids, langid, langmodel, perplexity, scoring_udf, text_kernel
 from scripts_spark.functions import html_extract
+from scripts_spark.operators import dedup as D
 from scripts_spark.session import per_app
 from scripts_spark.sources.pages import domain_of
 
@@ -88,7 +89,6 @@ class CurateConfig:
     # bucket owns its own run of them, at fewer they share.
     target_partitions: int | None = None
     input_snapshot: str = "fixture-v1"
-    scorer: str = "arrow"  # "arrow" | "join"
     # "salted" (production): place each (url-hash bucket, intra-bucket
     # salt) key in its own partition by id (_partition_id) — uniform
     # under ANY domain distribution, no partition left empty. "domain":
@@ -143,9 +143,8 @@ class CurateConfig:
 
     def __post_init__(self) -> None:
         # an unknown mode would otherwise silently take the fallback
-        # branch (join scorer, salted layout) and change the output
+        # branch (salted layout, neighbor survival) and change the output
         for field, allowed in (
-            ("scorer", ("arrow", "join")),
             ("repartition_mode", ("salted", "domain")),
             ("near_dedup_mode", ("component", "neighbor")),
         ):
@@ -445,22 +444,22 @@ def boiler_line_evidence(docs: DataFrame, cfg: CurateConfig) -> tuple[DataFrame,
 
 
 # the 128-bit span key definition lives with the dedup operators;
-# re-exported here because the batch stage and streaming span state
-# import it from this module
-from scripts_spark.operators.dedup import span_hash_cols  # noqa: E402
+# re-exported here because streaming's span state imports it from
+# this module
+span_hash_cols = D.span_hash_cols
 
 
 def _corpus_para_dedup(
     d: DataFrame, cfg: CurateConfig, span_history: DataFrame | None = None
 ) -> DataFrame:
     """Corpus-wide first-occurrence paragraph dedup over the
-    boiler-stripped kept_paras — the PRODUCTION hash-keyed form
-    (operators/dedup.paragraph_dedup_hashed, same two-pass): explode
-    to (url, pidx) + a 16-byte (xxhash64, confirm-xxhash64) key — the
-    paragraph string never crosses the dedup exchange — resolve the
-    arg-min survivor per key with one window, fold surviving ordinals
-    into a per-doc int array, and join that tiny array back on the
-    uniform url key to rebuild kept_paras map-side.
+    boiler-stripped kept_paras: explode to (url, pidx) + a 16-byte
+    (xxhash64, confirm-xxhash64) key — the paragraph string never
+    crosses the dedup exchange — and let
+    operators/dedup.first_occurrence_ordinals (the rule
+    paragraph_dedup_hashed runs too) fold each doc's surviving
+    ordinals into an int array, which joins back on the uniform url
+    key to rebuild kept_paras map-side.
 
     Deterministic BY CONSTRUCTION for resume: the survivor of a
     repeated paragraph is the corpus-wide lexicographic min
@@ -472,36 +471,16 @@ def _corpus_para_dedup(
 
     ``span_history`` (streaming seam): an (h1, h2) frame of span keys
     seen by EARLIER micro-batches — any current paragraph whose key
-    appears there is dropped too (its first occurrence lives in an
-    already-committed batch). The history join runs on the same
-    16-byte keys, after the within-batch arg-min, so batch and
-    streaming modes share one survivor rule: corpus-wide first
-    occurrence in (batch, url, pidx) order.
+    appears there is dropped too, so batch and streaming modes share
+    one survivor rule: corpus-wide first occurrence in
+    (batch, url, pidx) order.
 
     Adds ``paras_dup`` (how many of this doc's post-boiler paragraphs
     were dropped as earlier-seen) and rewrites ``kept_paras``."""
     ex = d.select("url", F.posexplode("kept_paras").alias("pidx", "para"))
     h1, h2 = span_hash_cols(F.col("para"))
     hp = ex.select("url", "pidx", h1.alias("_h1"), h2.alias("_h2"))
-    occ = F.struct(F.col("url").alias("u"), F.col("pidx").alias("i"))
-    w = Window.partitionBy("_h1", "_h2")
-    flags = hp.withColumn("_kept", occ == F.min(occ).over(w))
-    if span_history is not None:
-        hist = (
-            span_history.select(
-                F.col("h1").alias("_h1"), F.col("h2").alias("_h2")
-            )
-            .distinct()
-            .withColumn("_hist", F.lit(True))
-        )
-        flags = flags.join(hist, ["_h1", "_h2"], "left").withColumn(
-            "_kept", F.col("_kept") & F.col("_hist").isNull()
-        )
-    per_doc = flags.groupBy("url").agg(
-        F.array_sort(
-            F.collect_list(F.when(F.col("_kept"), F.col("pidx")))
-        ).alias("_kept_idx")
-    )
+    per_doc = D.first_occurrence_ordinals(hp, "url", "pidx", history=span_history)
     # left join: a doc whose kept_paras is already empty has no
     # exploded rows, hence no per_doc row — it keeps an empty array
     d = d.join(per_doc, "url", "left")
@@ -530,8 +509,9 @@ def _near_dup_losers(d: DataFrame, cfg: CurateConfig,
     see near_dup_sig_evidence) additionally drops any current document
     that near-duplicates crawl HISTORY: candidates via (band,
     band_key) equi-join of the current batch's band keys against the
-    store, similarity estimated from the signatures alone (matching
-    MinHash components · den ≥ num · num_hashes — the store carries no
+    store, similarity estimated from the signatures alone
+    (operators/dedup.signature_history_losers: matching MinHash
+    components · den ≥ num · num_hashes — the store carries no
     text to shingle-verify against, which is exactly why it is
     ~25 longs/doc instead of the corpus). History may arrive compact
     ((url, sig, bks) — exploded here) or pre-exploded ((url, sig,
@@ -567,31 +547,14 @@ def _near_dup_losers(d: DataFrame, cfg: CurateConfig,
     propagation rounds over the verified PAIRS only (near-dup graphs
     are shallow stars); "neighbor" survival is a single groupBy-min
     over the pair list."""
-    from scripts_spark.operators import dedup as D
-
-    txt = d.select(
-        "url", F.array_join("kept_paras", "\n").alias("_nd_text")
-    ).filter(F.length("_nd_text") > 0)
-    if cur_sig_rows is not None and not cfg.para_dedup:
-        # kept_paras here IS the evidence text form — reuse the rows
-        # for in-batch candidates instead of re-signing the batch
-        cur = cur_sig_rows
-        cand = D.band_candidate_pairs(cur, "url")
-    else:
-        sig = D.minhash_signatures(
-            txt, "url", "_nd_text",
-            cfg.near_dedup_hashes, cfg.near_dedup_shingle_k,
-        )
-        cand = D.lsh_candidate_pairs(
-            sig, "url", cfg.near_dedup_hashes, cfg.near_dedup_bands
-        )
-        cur = cur_sig_rows if cur_sig_rows is not None else (
-            D.signature_with_bands(
-                sig, "url", cfg.near_dedup_hashes, cfg.near_dedup_bands
-            )
-        )
+    # with para-dedup off, kept_paras IS the evidence text form — reuse
+    # the caller's rows for in-batch candidates instead of re-signing
+    own = cur_sig_rows if (cur_sig_rows is not None and not cfg.para_dedup) \
+        else _sig_rows_from_kept(d, cfg)
+    cand = D.band_candidate_pairs(own, "url")
     ver = D.jaccard_verify(
-        txt, cand, "url", "_nd_text", cfg.near_dedup_shingle_k, threshold=0.0
+        _kept_text(d), cand, "url", "_nd_text", cfg.near_dedup_shingle_k,
+        threshold=0.0,
     )
     pairs = ver.filter(
         F.col("n_common") * cfg.near_dup_den
@@ -614,7 +577,6 @@ def _near_dup_losers(d: DataFrame, cfg: CurateConfig,
         )
     if sig_history is None:
         return batch_losers
-    cb = cur.select("url", "sig", F.posexplode("bks").alias("band", "band_key"))
     hcols = set(sig_history.columns)
     if hcols == {"url", "sig", "bks"}:
         hb = sig_history.select(
@@ -644,25 +606,9 @@ def _near_dup_losers(d: DataFrame, cfg: CurateConfig,
     # same-url hit is a RECRAWL of already-corpus content — stale under
     # the first-occurrence rule whether or not the independent
     # cross-batch url-dedup opt-in is on (see docstring)
-    cand = (
-        cb.join(hb, ["band", "band_key"])
-        .select("url", "sig", "h_url", "h_sig")
-        .distinct()
-    )
-    m = F.size(
-        F.filter(
-            F.zip_with(F.col("sig"), F.col("h_sig"), lambda a, b: a == b),
-            lambda x: x,
-        )
-    )
-    hist_losers = (
-        cand.withColumn("_m", m)
-        .filter(
-            F.col("_m") * cfg.near_dup_den
-            >= F.lit(cfg.near_dup_num * cfg.near_dedup_hashes)
-        )
-        .groupBy("url")
-        .agg(F.min("h_url").alias("near_dup_of"))
+    hist_losers = D.signature_history_losers(
+        cur_sig_rows if cur_sig_rows is not None else own, hb, "url",
+        cfg.near_dup_num, cfg.near_dup_den, cfg.near_dedup_hashes,
     )
     # a url can lose both ways (in-batch AND vs history); the caller
     # left-joins on url, so the union must stay unique per url
@@ -694,19 +640,24 @@ def near_dup_sig_evidence(docs: DataFrame, boiler: DataFrame,
     return _sig_rows_from_kept(d, cfg)
 
 
-def _sig_rows_from_kept(d: DataFrame, cfg: CurateConfig) -> DataFrame:
-    """(url, sig, bks) MinHash rows of a post-boiler frame's
-    ``kept_paras`` — the ONE signing path; both the signature-store
-    write (near_dup_sig_evidence) and curate()'s history-query side go
-    through it, so the two sides of the cross-batch comparison are
-    guaranteed to sign the same text form with the same parameters."""
-    from scripts_spark.operators import dedup as D
-
-    txt = d.select(
+def _kept_text(d: DataFrame) -> DataFrame:
+    """(url, _nd_text): near-dedup's detection text, the joined kept
+    paragraphs of every doc that has any."""
+    return d.select(
         "url", F.array_join("kept_paras", "\n").alias("_nd_text")
     ).filter(F.length("_nd_text") > 0)
+
+
+def _sig_rows_from_kept(d: DataFrame, cfg: CurateConfig) -> DataFrame:
+    """(url, sig, bks) MinHash rows of a post-boiler frame's
+    ``kept_paras`` — the ONE signing path; the signature-store write
+    (near_dup_sig_evidence), curate()'s history-query side and the
+    in-batch candidates all go through it, so the two sides of the
+    cross-batch comparison are guaranteed to sign the same text form
+    with the same parameters."""
     sig = D.minhash_signatures(
-        txt, "url", "_nd_text", cfg.near_dedup_hashes, cfg.near_dedup_shingle_k
+        _kept_text(d), "url", "_nd_text",
+        cfg.near_dedup_hashes, cfg.near_dedup_shingle_k,
     )
     return D.signature_with_bands(
         sig, "url", cfg.near_dedup_hashes, cfg.near_dedup_bands
@@ -801,8 +752,6 @@ def drain_curate_persisted() -> None:
     (written/collected); draining earlier is safe for the cached
     frames (the next action recomputes the post-boiler chain) but not
     for a component-mode near-dedup frame, whose labels are gone."""
-    from scripts_spark.operators import dedup as D
-
     while _CURATE_PERSISTED:
         _CURATE_PERSISTED.pop().unpersist()
     while _CURATE_CHECKPOINTS:
@@ -877,25 +826,13 @@ def curate(pages: DataFrame, cfg: CurateConfig | None = None,
         losers = _near_dup_losers(d, cfg, sig_history=sig_history,
                                   cur_sig_rows=sig_current)
         d = d.join(losers.select("url", F.lit(True).alias("_nd_loser")), "url", "left")
-    d = d.select(*c.scrub)
-    # langid + perplexity scoring. Two interchangeable physical forms
-    # with identical results (both pinned to the oracle):
-    # - "arrow" (default): broadcast model tables inside an Arrow
-    #   pandas UDF with a per-task token memo — zero shuffle, and
-    #   ~9x faster than the explode path at local[32] (dict lookups
-    #   vs 20M-row explode + window + joins + re-agg with GC churn).
-    #   The UDF call sits inside the stats projection (c.stats), so the
-    #   rest of the plan is one linear pass — nothing to persist;
-    # - "join": pure-SQL explode → broadcast hash joins → groupBy
-    #   (functions/scoring_join.py), for model tables too large to
-    #   broadcast to Python workers. It consumes d twice, so checkpoint
-    #   it. (Map literals were measured and rejected: Spark map lookup
-    #   is a linear scan — 135s vs 10s.)
-    if cfg.scorer != "arrow":
-        d = d.persist()
-        _CURATE_PERSISTED.append(d)
-        d = d.join(scoring_join.doc_scores(d), "url", "left").select(*c.join_scores)
-    return d.select(*c.stats).select(*c.reasons).select(*c.final)
+    # langid + perplexity scoring: broadcast model tables inside an
+    # Arrow pandas UDF with a per-task token memo — zero shuffle, and
+    # ~9x faster than the pure-SQL explode + join form
+    # (functions/scoring_join.py, the reference it is checked against)
+    # at local[32]. The UDF call sits inside the stats projection
+    # (c.stats), so the rest of the plan is one linear pass.
+    return d.select(*c.scrub).select(*c.stats).select(*c.reasons).select(*c.final)
 
 
 # translate char sets spelled to match the regex classes EXACTLY:
@@ -910,12 +847,11 @@ _UPPERS = "ABCDEFGHIJKLMNOPQRSTUVWXYZ" + "".join(chr(c) for c in range(0xC0, 0xD
 
 def _curate_cols(spark: SparkSession, cfg: CurateConfig) -> SimpleNamespace:
     """curate()'s select lists after the boiler join: strip, scrub,
-    (join scorer: coalesce the left-joined scores), stats, reasons and
-    the output schema."""
+    stats (with the Arrow scores), reasons and the output schema."""
     def build() -> SimpleNamespace:
         stage = ["paras_dup"] * cfg.para_dedup + ["_nd_loser"] * cfg.near_dedup
         names = ["url", "warc_ts", "bucket", "paras_total", "paras_boiler", *stage,
-                 "scrubbed_text", "kept_paras", *scoring_udf.SCORE_COLS, "n_chars",
+                 "scrubbed_text", "kept_paras", "n_chars",
                  "n_tokens", "n_distinct", "tok_chars", "n_digits", "n_letters", "n_upper",
                  "lang_pred", "lang_conf", "perplexity", "ppx_flag", "filter_reasons"]
         c = {n: F.col(n) for n in names}
@@ -926,10 +862,7 @@ def _curate_cols(spark: SparkSession, cfg: CurateConfig) -> SimpleNamespace:
             stage_in[-1] = F.coalesce(c["_nd_loser"], F.lit(False)).alias("_nd_loser")
         carried = base + [c["paras_total"], c["paras_boiler"], *(c[n] for n in stage),
                           c["scrubbed_text"]]
-        if cfg.scorer == "arrow":
-            lang_score, ppx_sum, n_bigrams = scoring_udf.score_cols(spark)
-        else:
-            lang_score, ppx_sum, n_bigrams = (c[n] for n in scoring_udf.SCORE_COLS)
+        lang_score, ppx_sum, n_bigrams = scoring_udf.score_cols(spark)
         # token counts are pure string arithmetic: scrubbed_text is
         # ws-normalized with exactly one ' '/'\n' between tokens, so
         # n_tokens = separators+1 and tok_chars = n_chars - separators —
@@ -970,9 +903,6 @@ def _curate_cols(spark: SparkSession, cfg: CurateConfig) -> SimpleNamespace:
             scrub=base + [
                 c["paras_total"], c["paras_boiler"] if stage else paras_boiler, *stage_in,
                 text_kernel.scrub_all(F.array_join(c["kept_paras"], "\n")).alias("scrubbed_text"),
-            ],
-            join_scores=carried + [
-                F.coalesce(c[n], F.lit(0)).alias(n) for n in scoring_udf.SCORE_COLS
             ],
             stats=carried + [e.alias(n) for n, e in stats.items()],
             reasons=base + [st, c["n_tokens"], c["lang_pred"], c["lang_conf"],

@@ -2839,7 +2839,7 @@ def metrics_rollup(spark, sf_dir):
     return partition_metrics(dec)
 
 
-# --- M1 scoring (join form) value-checked end-to-end --------------------
+# --- M1 scoring (join reference form) value-checked end-to-end ----------
 from scripts_spark.functions import langmodel as LM  # noqa: E402
 from scripts_spark.functions import scoring_join as SJOIN  # noqa: E402
 
@@ -2904,14 +2904,15 @@ _DIGIT_SQL = "[0-9\\-–—/]+"
     """,
 )
 def doc_scoring(spark, sf_dir):
-    """M1 model scoring, pure-JVM join form (functions/scoring_join:
-    token explode -> broadcast word-score join -> lag-window bigrams ->
-    broadcast cost join -> exact long sums), value-checked end-to-end
-    against a DuckDB replica that embeds the SAME frozen model tables
-    (190 word scores + {n_bg} bigram costs) as VALUES. This pins the
-    langid + perplexity semantics the flagship pipeline uses — the
-    Arrow scorer is equivalence-tested against this join form in
-    tests/test_pipeline_parity.py."""
+    """M1 model scoring in its pure-SQL reference form
+    (functions/scoring_join: token explode -> broadcast word-score join
+    -> lag-window bigrams -> broadcast cost join -> exact long sums),
+    value-checked end-to-end against a DuckDB replica that embeds the
+    SAME frozen model tables (190 word scores + {n_bg} bigram costs) as
+    VALUES. This pins the langid + perplexity semantics; curate itself
+    scores with the Arrow UDF (functions/scoring_udf), which
+    tests/test_pipeline_parity.py checks against this form on curate's
+    own scrubbed_text."""
     d = T(spark, sf_dir, "documents").select(
         "doc_id", F.coalesce(F.col("text"), F.lit("")).alias("scrubbed_text")
     )
@@ -4033,8 +4034,6 @@ def paragraph_dedup_q(spark, sf_dir):
     aggregable arg-min), other occurrences are stripped and the text
     reassembled. operators/dedup.paragraph_dedup; hash-then-confirm
     swap noted there for crawl scale."""
-    from scripts_spark.operators import dedup as D
-
     return D.paragraph_dedup(T(spark, sf_dir, "documents")).select(
         "doc_id", "n_paras", "n_kept", "dedup_text"
     )
@@ -4044,16 +4043,15 @@ def paragraph_dedup_q(spark, sf_dir):
 def paragraph_dedup_fast(spark, sf_dir):
     """The PRODUCTION form of corpus-wide paragraph dedup
     (operators/dedup.paragraph_dedup_hashed): first-occurrence
-    arg-min resolved on a 16-byte (xxhash64, confirm-xxhash64) key —
-    the corpus exchange carries 32-byte rows instead of every span
-    string — then text rebuilt in a second pass keyed by the uniform
-    doc id. Output is bit-identical to `paragraph_dedup` (a false
+    arg-min resolved on a 16-byte (xxhash64, confirm-xxhash64) key by
+    operators/dedup.first_occurrence_ordinals — the same operator the
+    curate pipeline's para-dedup stage runs — so the corpus exchange
+    carries 32-byte rows instead of every span string, then text
+    rebuilt in a second pass keyed by the uniform doc id. Output is bit-identical to `paragraph_dedup` (a false
     merge needs a 2^-128 double collision), so it shares that query's
     exact-string DuckDB oracle verbatim: the driver value-hashing BOTH
     forms against one SQL is the equivalence proof at the gate level.
     No-string-shuffle pinned in tests/test_plans.py."""
-    from scripts_spark.operators import dedup as D
-
     return D.paragraph_dedup_hashed(T(spark, sf_dir, "documents")).select(
         "doc_id", "n_paras", "n_kept", "dedup_text"
     )
@@ -4800,13 +4798,14 @@ def history_near_losers(spark, sf_dir):
     query: docs with doc_id % 3 == 0 play the signature STORE (prior
     crawl drops), the rest play the current batch, and a batch doc
     loses when its MinHash signature matches a stored one on >=
-    num/den of the components after a band-key candidate join — the
-    EXACT arithmetic streaming's sig_state path runs per trigger
+    num/den of the components after a band-key candidate join. The
+    estimate is operators/dedup.signature_history_losers — the same
+    operator streaming's sig_state path runs per trigger
     (plans/pipeline._near_dup_losers history side: band equi-join →
-    component count → integer cross-multiplication → min-survivor),
-    which until now had only rows-only streaming evidence. Hash family
-    is the md5-string one shared with minhash_lsh_pairs so DuckDB
-    reproduces it bit-for-bit; production uses xxhash64 longs
+    component count → integer cross-multiplication → min-survivor).
+    Hash family is the md5-string one shared with minhash_lsh_pairs so
+    DuckDB reproduces it bit-for-bit (the operator only compares
+    signature values for equality); production uses xxhash64 longs
     (operators/dedup.signature_with_bands), same shape: the exchange
     carries 8 signature columns + 4 band keys per doc, candidates are
     an equi-join, and the verdict is exact integer math — no text and
@@ -4832,32 +4831,14 @@ def history_near_losers(spark, sf_dir):
             ]
         ).alias("bks"),
     )
-    cb = rows.filter(F.col("doc_id") % 3 != 0).select(
-        "doc_id", "sig", F.posexplode("bks").alias("band", "key")
-    )
-    hb = rows.filter(F.col("doc_id") % 3 == 0).select(
-        F.col("doc_id").alias("h_id"),
+    hist = rows.filter(F.col("doc_id") % 3 == 0).select(
+        F.col("doc_id").alias("h_doc_id"),
         F.col("sig").alias("h_sig"),
-        F.posexplode("bks").alias("band", "key"),
+        F.posexplode("bks").alias("band", "band_key"),
     )
-    cand = (
-        cb.join(hb, ["band", "key"])
-        .select("doc_id", "sig", "h_id", "h_sig")
-        .distinct()
-    )
-    m = F.size(
-        F.filter(
-            F.zip_with(F.col("sig"), F.col("h_sig"), lambda a, b: a == b),
-            lambda x: x,
-        )
-    )
-    # integer cross-multiplication, never a float compare: lose when
-    # matching components >= (num/den) * num_hashes = (4/5) * 8
-    return (
-        cand.withColumn("n_match", m)
-        .filter(F.col("n_match") * 5 >= F.lit(4 * 8))
-        .groupBy("doc_id")
-        .agg(F.min("h_id").alias("near_dup_of"))
+    # lose when matching components >= (4/5) * 8
+    return D.signature_history_losers(
+        rows.filter(F.col("doc_id") % 3 != 0), hist, "doc_id", 4, 5, 8
     )
 
 

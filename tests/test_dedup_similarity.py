@@ -285,3 +285,47 @@ def test_paragraph_dedup_hashed_equivalence(spark, docs):
             for r in dedup.paragraph_dedup_hashed(td, h1=crafted).collect()
         )
         assert got == exact
+
+
+def test_first_occurrence_ordinals_with_history(spark):
+    """A span survives only at the min (id, idx) of its key, and not at
+    all when its key is in the history; a doc whose every span is in
+    the history comes back with an empty ordinal array, not no row."""
+    rows = spark.createDataFrame(
+        [("x", 0, 1, 1), ("x", 1, 2, 2), ("y", 0, 1, 1), ("y", 1, 3, 3),
+         ("z", 0, 4, 4), ("z", 1, 5, 5)],
+        "doc_id string, idx int, _h1 long, _h2 long",
+    )
+    hist = spark.createDataFrame([(4, 4), (5, 5), (9, 9)], "h1 long, h2 long")
+
+    def kept(history):
+        out = dedup.first_occurrence_ordinals(rows, "doc_id", "idx", history)
+        return {r["doc_id"]: list(r["_kept_idx"]) for r in out.collect()}
+
+    assert kept(None) == {"x": [0, 1], "y": [1], "z": [0, 1]}
+    assert kept(hist) == {"x": [0, 1], "y": [1], "z": []}
+
+
+def test_signature_history_losers_threshold_and_survivor(spark):
+    """The history estimate at 4/5 over 5 hashes: 4 matching components
+    (m·den == num·hashes) lose, 3 stay; a same-key hit names the doc
+    itself; of two matching history rows the smaller key wins."""
+    cur = spark.createDataFrame(
+        [("a", [1, 2, 3, 4, 9], [10, 11]),
+         ("b", [1, 2, 3, 8, 9], [20, 21]),
+         ("c", [6, 6, 6, 6, 6], [30, 31]),
+         ("d", [7, 7, 7, 7, 7], [40, 41])],
+        "doc_id string, sig array<bigint>, bks array<bigint>",
+    )
+    hist = spark.createDataFrame(
+        [("h1", [1, 2, 3, 4, 5], 0, 10),
+         ("h2", [1, 2, 3, 4, 5], 0, 20),
+         ("c", [6, 6, 6, 6, 6], 1, 31),
+         ("h4", [7, 7, 7, 7, 7], 0, 40),
+         ("h3", [7, 7, 7, 7, 7], 1, 41)],
+        "h_doc_id string, h_sig array<bigint>, band int, band_key bigint",
+    )
+    got = dedup.signature_history_losers(cur, hist, "doc_id", 4, 5, 5)
+    assert {r["doc_id"]: r["near_dup_of"] for r in got.collect()} == {
+        "a": "h1", "c": "c", "d": "h3"
+    }

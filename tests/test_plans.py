@@ -17,7 +17,6 @@ from scripts_spark.plans.pipeline import (
     boilerplate_sets,
     curate,
     deduped_docs,
-    drain_curate_persisted,
 )
 from scripts_spark.sources.pages import pages_df
 
@@ -185,17 +184,15 @@ def test_boilerplate_two_passes_over_docs(spark):
 
 
 def test_join_scorer_model_tables_are_local(spark):
-    """The join scorer's model tables are LocalTableScans (no pickled
-    Python RDD to scan per slice), one per Spark application."""
-    dec = curate(pages_df(spark, 50, partitions=2),
-                 CurateConfig(num_buckets=4, scorer="join"))
-    try:
-        plan = _plan(dec)
-        assert "LocalTableScan" in plan and "ExistingRDD" not in plan
-        other = spark.newSession()
-        assert scoring_join.stop_score_df(other) is scoring_join.stop_score_df(spark)
-    finally:
-        drain_curate_persisted()
+    """The reference join scorer's model tables are LocalTableScans (no
+    pickled Python RDD to scan per slice), one per Spark application."""
+    docs = spark.range(1).select(
+        F.lit("https://a.se/1").alias("url"), F.lit("det är en text").alias("scrubbed_text")
+    )
+    plan = _plan(scoring_join.doc_scores(docs))
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    other = spark.newSession()
+    assert scoring_join.stop_score_df(other) is scoring_join.stop_score_df(spark)
 
 
 def test_minhash_no_vocab_broadcast(spark):

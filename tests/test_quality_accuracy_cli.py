@@ -191,8 +191,7 @@ def test_cli_check_accepts_opt_in_reasons(spark, tmp_path):
 
 
 def test_curate_config_rejects_unknown_modes():
-    for kwargs in ({"scorer": "jion"}, {"repartition_mode": "domian"},
-                   {"near_dedup_mode": "neighbour"}):
+    for kwargs in ({"repartition_mode": "domian"}, {"near_dedup_mode": "neighbour"}):
         with pytest.raises(ValueError, match=next(iter(kwargs))):
             CurateConfig(**kwargs)
 
