@@ -22,10 +22,16 @@ Subcommands:
                 (F1 + per-stratum Beta CIs + confusion matrix) — the
                 reference's §3.3 annotate→estimate loop end-to-end
     metrics     print per-bucket metrics from a decisions output
+    snapshots   print the snapshot log: one row per commit (seq, buckets,
+                rows, kept)
+    trend       the snapshot log with deltas between consecutive commits
+    dedup-groups  near-dup group ids (doc_id, group_id) over a
+                decisions output: MinHash-LSH pairs closed into
+                connected components
     stream-curate  incremental ingest: stream new crawl drops through
                 the same curate plan with exactly-once bucket commits
                 (optional cross-batch url dedup + compacted
-                boilerplate state)
+                boilerplate, paragraph-span and signature state)
 """
 
 from __future__ import annotations

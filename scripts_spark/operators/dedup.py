@@ -526,33 +526,34 @@ def connected_components(pairs: DataFrame, key_a: str = "key_a",
         .distinct()
         .localCheckpoint()
     )
-    labels = (
-        edges.select(F.col("a").alias("node")).distinct()
-        .withColumn("group", F.col("node"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iter):
-        prop = (
-            edges.join(labels, edges["a"] == labels["node"])
-            .select(F.col("b").alias("node"), "group")
-        )
-        new_labels = (
-            labels.unionByName(prop)
-            .groupBy("node")
-            .agg(F.min("group").alias("group"))
+    labels = old = None
+    try:
+        labels = (
+            edges.select(F.col("a").alias("node")).distinct()
+            .withColumn("group", F.col("node"))
             .localCheckpoint()
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.group") != F.col("o.group"))
-            .count()
-        )
-        release_checkpoint(labels)
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
+        for _ in range(max_iter):
+            prop = (
+                edges.join(labels, edges["a"] == labels["node"])
+                .select(F.col("b").alias("node"), "group")
+            )
+            old, labels = labels, (
+                labels.unionByName(prop)
+                .groupBy("node")
+                .agg(F.min("group").alias("group"))
+                .localCheckpoint()
+            )
+            changed = (
+                labels.alias("n")
+                .join(old.alias("o"), "node")
+                .filter(F.col("n.group") != F.col("o.group"))
+                .count()
+            )
+            release_checkpoint(old)
+            old = None
+            if changed == 0:
+                return labels
         # exhausting max_iter with labels still moving would silently
         # SPLIT a real component into several group ids — refuse loudly
         raise RuntimeError(
@@ -560,5 +561,10 @@ def connected_components(pairs: DataFrame, key_a: str = "key_a",
             f"({changed} labels still changing); raise max_iter — the "
             "component diameter exceeds it"
         )
-    release_checkpoint(edges)
-    return labels
+    except BaseException:
+        for held in (old, labels):
+            if held is not None:
+                release_checkpoint(held)
+        raise
+    finally:
+        release_checkpoint(edges)

@@ -13,10 +13,10 @@ from __future__ import annotations
 import hashlib
 import re
 from collections import Counter
-from dataclasses import dataclass, field
 
 from scripts_spark.functions import langmodel
 from scripts_spark.oracle import textoracle
+from scripts_spark.plans.pipeline import CurateConfig
 
 _DOMAIN = re.compile(r"^https?://([^/]+)/")
 _DIGIT = re.compile("[0-9]")
@@ -24,36 +24,13 @@ _LETTER = re.compile("[A-Za-zÀ-þ]")
 _UPPER = re.compile("[A-ZÀ-Þ]")
 
 
-@dataclass(frozen=True)
-class OracleConfig:
-    min_chars: int = 140
-    rep_num: int = 3
-    rep_den: int = 10
-    rep_min_tokens: int = 20
-    word_len_min: int = 2
-    word_len_max: int = 14
-    digit_num: int = 3
-    digit_den: int = 10
-    caps_num: int = 5
-    caps_den: int = 10
-    caps_min_letters: int = 20
-    boiler_min_docs: int = 2
-    boiler_frac_num: int = 1
-    boiler_frac_den: int = 10
-    boiler_doc_num: int = 1
-    boiler_doc_den: int = 2
-    para_dedup: bool = False
-    para_dup_num: int = 3
-    para_dup_den: int = 10
-    # near-dedup twin: EXACT all-pairs shingle Jaccard (no LSH — at
-    # oracle scale O(n²) is fine and it upper-bounds the pipeline's
-    # candidate recall, so parity asserts LSH missed nothing on the
-    # fixture), same integer threshold + survivor rules as the plan
-    near_dedup: bool = False
-    near_dup_num: int = 4
-    near_dup_den: int = 5
-    near_dedup_shingle_k: int = 3
-    near_dedup_mode: str = "component"
+# The oracle runs the engine's own config and thresholds; perfbench
+# imports it under this name. Its near-dedup twin is EXACT all-pairs
+# shingle Jaccard (no LSH — at oracle scale O(n²) is fine and it
+# upper-bounds the pipeline's candidate recall, so parity asserts LSH
+# missed nothing on the fixture), same integer threshold + survivor
+# rules as the plan.
+OracleConfig = CurateConfig
 
 
 def domain_of(url: str) -> str:
@@ -67,8 +44,8 @@ def repair(p: str) -> str:
     )
 
 
-def curate_rows(rows: list[dict], cfg: OracleConfig | None = None) -> dict[str, dict]:
-    cfg = cfg or OracleConfig()
+def curate_rows(rows: list[dict], cfg: CurateConfig | None = None) -> dict[str, dict]:
+    cfg = cfg or CurateConfig()
 
     # url dedup: keep min (warc_ts, coalesce(text,'')) — mirrors the
     # pipeline's groupBy(url).min(struct(warc_ts, text))
@@ -143,10 +120,6 @@ def curate_rows(rows: list[dict], cfg: OracleConfig | None = None) -> dict[str, 
                 union = len(sh[a]) + len(sh[b]) - inter
                 if inter > 0 and inter * cfg.near_dup_den >= union * cfg.near_dup_num:
                     pairs.append((a, b))
-        if cfg.near_dedup_mode not in ("component", "neighbor"):
-            # mirror pipeline._near_dup_losers: a typo'd mode must
-            # error here too, not silently produce neighbor output
-            raise ValueError(f"unknown near_dedup_mode {cfg.near_dedup_mode!r}")
         if cfg.near_dedup_mode == "component":
             parent: dict[str, str] = {}
 

@@ -33,8 +33,9 @@ Scale design (100 TB / 1000 executors):
   and perplexity sums are exact longs — no float-order
   nondeterminism anywhere.
 
-Every threshold is configurable via CurateConfig; thresholds are part
-of the rule version map in the lineage struct.
+Every threshold is a constant on CurateConfig, defined once: it
+changes only with the code, and changing one is a row-semantics change
+that bumps PIPELINE_VERSION, the version the lineage struct records.
 """
 
 from __future__ import annotations
@@ -42,6 +43,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from itertools import chain
 from types import SimpleNamespace
+from typing import ClassVar
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
@@ -52,7 +54,8 @@ from scripts_spark.session import per_app
 from scripts_spark.sources.pages import domain_of
 
 PIPELINE_VERSION = "1.2"  # 1.2: toxicity lexicon scrub after PII
-# Only a change of row semantics bumps this; physical-layout changes
+# Only a change of row semantics bumps this, and a change to any rule
+# threshold on CurateConfig is one; physical-layout changes
 # (such as the bucket layout exchange placing rows by partition id)
 # keep every row and digest and do not. The opt-in paragraph-dedup
 # and near-dedup stages do NOT bump it either: with them off, row
@@ -63,23 +66,35 @@ PIPELINE_VERSION = "1.2"  # 1.2: toxicity lexicon scrub after PII
 
 @dataclass(frozen=True)
 class CurateConfig:
-    min_chars: int = 140
+    """The settings a caller picks for one curate run. The rule
+    thresholds are ClassVar constants, read as ``cfg.<name>`` but not
+    settable: changing one changes the code and PIPELINE_VERSION."""
+
+    min_chars: ClassVar[int] = 140
     # repetition: drop when n_distinct / n_tokens < rep_num/rep_den
-    rep_num: int = 3
-    rep_den: int = 10
-    rep_min_tokens: int = 20
-    word_len_min: int = 2  # mean token length bounds
-    word_len_max: int = 14
-    digit_num: int = 3  # digit ratio > 3/10 → drop
-    digit_den: int = 10
-    caps_num: int = 5  # uppercase ratio > 5/10 → drop
-    caps_den: int = 10
-    caps_min_letters: int = 20
-    boiler_min_docs: int = 2  # line boilerplate iff in > this many docs
-    boiler_frac_num: int = 1  # ... and in > 1/10 of the domain's docs
-    boiler_frac_den: int = 10
-    boiler_doc_num: int = 1  # doc reason iff > 1/2 of paragraphs stripped
-    boiler_doc_den: int = 2
+    rep_num: ClassVar[int] = 3
+    rep_den: ClassVar[int] = 10
+    rep_min_tokens: ClassVar[int] = 20
+    word_len_min: ClassVar[int] = 2  # mean token length bounds
+    word_len_max: ClassVar[int] = 14
+    digit_num: ClassVar[int] = 3  # digit ratio > 3/10 → drop
+    digit_den: ClassVar[int] = 10
+    caps_num: ClassVar[int] = 5  # uppercase ratio > 5/10 → drop
+    caps_den: ClassVar[int] = 10
+    caps_min_letters: ClassVar[int] = 20
+    boiler_min_docs: ClassVar[int] = 2  # line boilerplate iff in > this many docs
+    boiler_frac_num: ClassVar[int] = 1  # ... and in > 1/10 of the domain's docs
+    boiler_frac_den: ClassVar[int] = 10
+    boiler_doc_num: ClassVar[int] = 1  # doc reason iff > 1/2 of paragraphs stripped
+    boiler_doc_den: ClassVar[int] = 2
+    para_dup_num: ClassVar[int] = 3  # see para_dedup
+    para_dup_den: ClassVar[int] = 10
+    near_dup_num: ClassVar[int] = 4  # Jaccard >= 4/5; see near_dedup
+    near_dup_den: ClassVar[int] = 5
+    near_dedup_hashes: ClassVar[int] = 16
+    near_dedup_bands: ClassVar[int] = 8
+    near_dedup_shingle_k: ClassVar[int] = 3
+
     num_buckets: int = 64
     salt: int = 0
     # physical partitions of the layout exchange (and so the tasks of
@@ -105,8 +120,6 @@ class CurateConfig:
     # > para_dup_num/para_dup_den of a doc's post-boiler paragraphs
     # were such repeats (Gopher's duplicate-paragraph-fraction rule).
     para_dedup: bool = False
-    para_dup_num: int = 3
-    para_dup_den: int = 10
     # opt-in corpus-wide NEAR-dedup (the FineWeb/Lee-et-al fuzzy-dedup
     # pattern) over the post-boiler (and post-paragraph-dedup, if on)
     # kept text: MinHash signatures → banded-LSH candidates → exact
@@ -134,11 +147,6 @@ class CurateConfig:
     # get it too — the lineage record is truthful on every path.
     text_from_html: bool = False
     near_dedup: bool = False
-    near_dup_num: int = 4  # Jaccard >= 4/5
-    near_dup_den: int = 5
-    near_dedup_hashes: int = 16
-    near_dedup_bands: int = 8
-    near_dedup_shingle_k: int = 3
     near_dedup_mode: str = "component"  # "component" | "neighbor"
 
     def __post_init__(self) -> None:

@@ -2641,8 +2641,7 @@ def boiler_headers(spark, sf_dir):
     dom_docs = d.groupBy(F.col("source").alias("domain")).agg(
         F.count(F.lit(1)).alias("domain_docs")
     )
-    cfg = CurateConfig(boiler_min_docs=2, boiler_frac_num=1, boiler_frac_den=10)
-    return boiler_line_rows(line_docs, dom_docs, cfg).select(
+    return boiler_line_rows(line_docs, dom_docs, CurateConfig()).select(
         "domain", "para", "line_docs", "domain_docs"
     )
 

@@ -38,6 +38,11 @@ from scripts_spark.session import local_frame
 from scripts_spark.sources.pages import PAGES_SCHEMA
 
 
+# how far behind the newest warc_ts a url stays in the cross-batch
+# url-dedup state
+DEDUP_WATERMARK = "30 days"
+
+
 def read_pages_stream(spark: SparkSession, input_dir: str,
                       max_files_per_trigger: int | None = None) -> DataFrame:
     r = spark.readStream.schema(PAGES_SCHEMA)
@@ -51,7 +56,6 @@ def stream_curate(spark: SparkSession, input_dir: str, out_dir: str,
                   available_now: bool = True,
                   max_files_per_trigger: int | None = None,
                   dedup_urls_across_batches: bool = False,
-                  dedup_watermark: str = "30 days",
                   boiler_state_dir: str | None = None,
                   span_state_dir: str | None = None,
                   sig_state_dir: str | None = None,
@@ -63,10 +67,10 @@ def stream_curate(spark: SparkSession, input_dir: str, out_dir: str,
     ``dedup_urls_across_batches`` upgrades the documented per-batch
     url-dedup approximation to exact cross-batch semantics: a
     watermarked dropDuplicatesWithinWatermark("url") keeps one row per
-    url across micro-batches (state bounded by the warc_ts watermark —
-    a recrawl of the same url more than ``dedup_watermark`` later is
-    treated as a new document, which is the right call for a rolling
-    crawl). State survives restarts via the checkpoint.
+    url across micro-batches (state bounded by the warc_ts watermark
+    DEDUP_WATERMARK, 30 days — a recrawl of the same url more than
+    that later is treated as a new document, which is the right call
+    for a rolling crawl). State survives restarts via the checkpoint.
 
     ``boiler_state_dir`` upgrades boilerplate detection the same way:
     each micro-batch appends its (domain, line-hash) counts to a
@@ -163,7 +167,7 @@ def stream_curate(spark: SparkSession, input_dir: str, out_dir: str,
         _check_sig_params(sig_state_dir, cfg, sig_store_buckets)
     stream = read_pages_stream(spark, input_dir, max_files_per_trigger)
     if dedup_urls_across_batches:
-        stream = stream.withWatermark("warc_ts", dedup_watermark)
+        stream = stream.withWatermark("warc_ts", DEDUP_WATERMARK)
         stream = stream.dropDuplicatesWithinWatermark(["url"])
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
@@ -390,8 +394,8 @@ def _check_sig_params(state_dir: str, cfg: CurateConfig,
                 f"sig state dir {state_dir!r} was written with MinHash "
                 f"params [{have}] but this run configures [{want}]: "
                 "stored signatures and band keys are incomparable "
-                "across parameterizations — resume with the original "
-                "CurateConfig or clear the sig state dir"
+                "across parameterizations — resume with the engine "
+                "version that wrote the store or clear the sig state dir"
             )
         return
     os.makedirs(state_dir, exist_ok=True)

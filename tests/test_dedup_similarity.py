@@ -141,6 +141,19 @@ def test_connected_components_groups(spark):
     assert again == got
 
 
+def test_connected_components_no_converge_releases_checkpoints(spark):
+    """A chain deeper than max_iter raises, and the edge set and label
+    checkpoints it took are released rather than left to the session."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5)], "key_a long, key_b long"
+    )
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.connected_components(pairs, max_iter=1)
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_asof_join_semantics(spark):
     # right rows at EQUAL ts are visible (<= semantics); later rights
     # are not; keys without any prior right carry null

@@ -140,7 +140,7 @@ def test_stream_curate_cross_batch_boilerplate(spark, tmpdirs):
     import datetime
 
     in_dir, out_dir, ckpt, state = tmpdirs
-    cfg = CurateConfig(num_buckets=4, boiler_min_docs=2)
+    cfg = CurateConfig(num_buckets=4)
     nav = "hem nyheter kontakt arkiv om oss"
 
     def batch(i):
@@ -205,7 +205,7 @@ def test_boiler_state_replay_idempotent(spark, tmpdirs):
         for j in range(3)
     ]
     batch = spark.createDataFrame(rows, PAGES_SCHEMA)
-    cfg = CurateConfig(num_buckets=2, boiler_min_docs=1)
+    cfg = CurateConfig(num_buckets=2)
     from scripts_spark.plans.pipeline import deduped_docs
     from scripts_spark.streaming.jobs import _merged_boiler
 
@@ -255,7 +255,7 @@ def test_boiler_state_compaction_bounds_files(spark, tmpdirs):
 
     _, _, _, state = tmpdirs
     state_dir = state + "/compboil"
-    cfg = CurateConfig(num_buckets=2, boiler_min_docs=1)
+    cfg = CurateConfig(num_buckets=2)
     from scripts_spark.plans.pipeline import deduped_docs
     from scripts_spark.streaming.jobs import _compacted_through, _merged_boiler
 
@@ -329,7 +329,7 @@ def test_boiler_state_legacy_schema_fails_fast(spark, tmpdirs):
 
     _, _, _, state = tmpdirs
     state_dir = state + "/legacyboil"
-    cfg = CurateConfig(num_buckets=2, boiler_min_docs=1)
+    cfg = CurateConfig(num_buckets=2)
     (
         spark.createDataFrame(
             [("old.example.com", "gammal rad", 3, 0)],
@@ -596,17 +596,14 @@ def test_sig_state_params_mismatch_fails_fast(spark, tmpdirs):
     cfg = CurateConfig(near_dedup=True)
     SJ._check_sig_params(sig_dir, cfg)          # first use: pins params
     SJ._check_sig_params(sig_dir, cfg)          # same params: fine
+    # a store written under other MinHash params
+    with open(sig_dir + "/SIG_PARAMS", "w") as f:
+        f.write("hashes=32 bands=8 shingle_k=3\n")
     with pytest.raises(ValueError, match=r"MinHash\s+params"):
-        SJ._check_sig_params(
-            sig_dir, CurateConfig(near_dedup=True, near_dedup_hashes=32)
-        )
+        SJ._check_sig_params(sig_dir, cfg)
     # and stream_curate actually routes through the guard
     with pytest.raises(ValueError, match=r"MinHash\s+params"):
-        SJ.stream_curate(
-            spark, in_dir, out_dir, ckpt,
-            CurateConfig(near_dedup=True, near_dedup_shingle_k=4),
-            sig_state_dir=sig_dir,
-        )
+        SJ.stream_curate(spark, in_dir, out_dir, ckpt, cfg, sig_state_dir=sig_dir)
 
 
 def test_stream_curate_repost_caught_despite_para_dedup(spark, tmpdirs):
@@ -890,7 +887,7 @@ def test_state_from_a_later_batch_fails_loudly(spark, tmp_path):
 
     from scripts_spark.plans.pipeline import boilerplate_sets, deduped_docs
 
-    cfg = CurateConfig(num_buckets=2, boiler_min_docs=2, para_dedup=True)
+    cfg = CurateConfig(num_buckets=2, para_dedup=True)
     boil, spans = str(tmp_path / "boil"), str(tmp_path / "spans")
 
     def docs(bid):
@@ -940,7 +937,7 @@ def test_stream_curate_all_stores_compaction_equivalence(spark, tmp_path):
     import datetime
     import os
 
-    cfg = CurateConfig(num_buckets=4, boiler_min_docs=2, para_dedup=True,
+    cfg = CurateConfig(num_buckets=4, para_dedup=True,
                        near_dedup=True, near_dedup_mode="neighbor")
     NAV = "hem nyheter kontakt arkiv om oss"
     P = "detta stycke upprepas i varje veckas leverans av samma nyhetsbrev"

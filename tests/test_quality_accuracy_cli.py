@@ -3,6 +3,7 @@ entry point driven end-to-end."""
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import math
 import shutil
@@ -194,6 +195,15 @@ def test_curate_config_rejects_unknown_modes():
     for kwargs in ({"repartition_mode": "domian"}, {"near_dedup_mode": "neighbour"}):
         with pytest.raises(ValueError, match=next(iter(kwargs))):
             CurateConfig(**kwargs)
+    # the settings a caller picks are the only fields; a rule threshold
+    # is a constant and cannot be passed
+    assert {f.name for f in dataclasses.fields(CurateConfig)} == {
+        "num_buckets", "salt", "target_partitions", "input_snapshot",
+        "repartition_mode", "para_dedup", "text_from_html", "near_dedup",
+        "near_dedup_mode",
+    }
+    with pytest.raises(TypeError, match="caps_num"):
+        CurateConfig(caps_num=6)
 
 
 def test_make_pyfiles():

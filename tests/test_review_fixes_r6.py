@@ -46,13 +46,12 @@ def test_curate_persists_are_drainable(spark):
 def test_oracle_rejects_unknown_near_dedup_mode():
     from scripts_spark.oracle.pipeline_oracle import OracleConfig, curate_rows
 
-    cfg = OracleConfig(near_dedup=True, near_dedup_mode="neighbour")
     rows = [
         {"url": "https://a.se/1", "warc_ts": 1, "html": None,
          "text": "ett två tre fyra fem sex sju åtta nio tio", "lang": "sv"},
     ]
     with pytest.raises(ValueError, match="near_dedup_mode"):
-        curate_rows(rows, cfg)
+        curate_rows(rows, OracleConfig(near_dedup=True, near_dedup_mode="neighbour"))
 
 
 def test_curate_sig_current_equivalence(spark):
