@@ -47,19 +47,31 @@ def repair(p: str) -> str:
 def curate_rows(rows: list[dict], cfg: CurateConfig | None = None) -> dict[str, dict]:
     cfg = cfg or CurateConfig()
 
+    def text_of(r: dict) -> str:
+        # the engine's text: the text column, or with text_from_html the
+        # html payload run through the extraction spec (the engine's
+        # binary cast passes malformed UTF-8 through raw; this decodes
+        # it to U+FFFD); null becomes ''
+        if not cfg.text_from_html:
+            return r["text"] or ""
+        html = r["html"]
+        if isinstance(html, (bytes, bytearray)):
+            html = bytes(html).decode("utf-8", "replace")
+        return textoracle.html_to_text(html) or ""
+
     # url dedup: keep min (warc_ts, coalesce(text,'')) — mirrors the
     # pipeline's groupBy(url).min(struct(warc_ts, text))
-    by_url: dict[str, dict] = {}
+    best: dict[str, tuple] = {}
     for r in rows:
-        cur = by_url.get(r["url"])
-        key = (r["warc_ts"], r["text"] if r["text"] is not None else "")
-        if cur is None or key < (cur["warc_ts"], cur["text"] or ""):
-            by_url[r["url"]] = r
+        key = (r["warc_ts"], text_of(r))
+        if r["url"] not in best or key < best[r["url"]]:
+            best[r["url"]] = key
+    by_url = {url: text for url, (_, text) in best.items()}
 
     # repaired non-empty paragraphs per url
     paras: dict[str, list[str]] = {}
-    for url, r in by_url.items():
-        ps = [repair(p) for p in (r["text"] or "").split("\n")]
+    for url, text in by_url.items():
+        ps = [repair(p) for p in text.split("\n")]
         paras[url] = [p for p in ps if p != ""]
 
     # domain-level boilerplate lines
@@ -144,8 +156,7 @@ def curate_rows(rows: list[dict], cfg: CurateConfig | None = None) -> dict[str, 
                 nd_losers[b] = min(nd_losers.get(b, a), a)
 
     out: dict[str, dict] = {}
-    for url, r in by_url.items():
-        dom = domain_of(url)
+    for url in by_url:
         plist = paras[url]
         n_kept_pre_dedup = len(kept_by_url[url]) + dup_by_url[url]
         kept = kept_by_url[url]

@@ -12,6 +12,12 @@ from __future__ import annotations
 
 import re
 
+from scripts_spark.functions.html_extract import (
+    HTML_ENTITY_STEPS,
+    HTML_REGEX_STEPS,
+    HTML_WS_STEPS,
+)
+
 _DOLLAR_1 = re.compile(r"^8 [0-9]{1,2}\.")
 _DOLLAR_2 = re.compile(r"^[0-9]{1,2} ?\$")
 _SOFT_HYPHEN = re.compile(" ?­ ?")
@@ -23,6 +29,20 @@ _ADDR = re.compile(
 )
 _WF_PUNCT = re.compile("[\\[\\]\\{\\}\\(\\)<>.,!§”$«»'\";]")
 _WF_DIGIT_DASH = re.compile("[0-9\\-–—/]+")
+
+
+def html_to_text(s: str | None) -> str | None:
+    """functions/html_extract.html_to_text's spec in Python ``re``,
+    built from the same step tables. Null html yields null text."""
+    if s is None:
+        return None
+    for pat, rep in HTML_REGEX_STEPS:
+        s = re.sub(pat, rep, s)
+    for lit, rep in HTML_ENTITY_STEPS:
+        s = s.replace(lit, rep)
+    for pat, rep in HTML_WS_STEPS:
+        s = re.sub(pat, rep, s)
+    return s.strip(" \n")
 
 
 def normalize_ws(t: str) -> str:

@@ -416,16 +416,29 @@ def boiler_sets_from_counts(line_docs: DataFrame, dom_docs: DataFrame,
 def boiler_kept_col() -> Column:
     """THE boiler-strip expression: the kept paragraphs of a frame
     carrying ``paras`` plus a (possibly-null, from a left join against
-    the (domain, boiler_set) table) ``boiler_set`` column. Every
-    consumer — curate()'s strip, the streaming span-evidence write,
-    and the near-dup signature evidence — must filter through this one
-    expression: the stored evidence and the text the pipeline actually
-    keeps have to agree on what "post-boiler" means, and three
-    hand-synchronized copies of the coalesce+array_contains filter
-    were one normalization tweak away from silently desynchronizing
-    cross-batch state from the output."""
+    the (domain, boiler_set) table) ``boiler_set`` column. Its
+    consumers are strip_boiler — the one post-boiler frame that
+    curate() and a stateful stream trigger's span and signature
+    evidence all read — and perfbench's boilerplate layer, which
+    rebuilds the stage on its own."""
     bset = F.coalesce(F.col("boiler_set"), F.array().cast("array<string>"))
     return F.filter(F.col("paras"), lambda p: ~F.array_contains(bset, p))
+
+
+def strip_boiler(docs: DataFrame, boiler: DataFrame) -> DataFrame:
+    """THE post-boiler frame: (url, warc_ts, bucket, paras_total,
+    kept_paras) of a deduped_docs frame stripped against a (domain,
+    boiler_set) table. curate() builds it from its own boilerplate
+    sets; a stateful stream trigger builds it once from the sets its
+    boiler store merged, persists it, and hands the same frame to
+    curate(stripped=), to the signing of its signature evidence and to
+    its span evidence — so stored evidence and the text the pipeline
+    keeps cannot disagree on what "post-boiler" means."""
+    cols = per_app(docs.sparkSession, "pipeline.strip", lambda: [
+        F.col("url"), F.col("warc_ts"), F.col("bucket"),
+        F.size("paras").alias("paras_total"), boiler_kept_col().alias("kept_paras"),
+    ])
+    return docs.join(F.broadcast(boiler), "domain", "left").select(*cols)
 
 
 def boiler_line_evidence(docs: DataFrame, cfg: CurateConfig) -> tuple[DataFrame, DataFrame]:
@@ -513,18 +526,17 @@ def _near_dup_losers(d: DataFrame, cfg: CurateConfig,
     boilerplate (and, if on, corpus-duplicated paragraphs) never vote
     on similarity.
 
-    ``sig_history`` ((url, sig, bks) rows from PRIOR micro-batches —
-    see near_dup_sig_evidence) additionally drops any current document
-    that near-duplicates crawl HISTORY: candidates via (band,
-    band_key) equi-join of the current batch's band keys against the
-    store, similarity estimated from the signatures alone
-    (operators/dedup.signature_history_losers: matching MinHash
-    components · den ≥ num · num_hashes — the store carries no
-    text to shingle-verify against, which is exactly why it is
-    ~25 longs/doc instead of the corpus). History may arrive compact
-    ((url, sig, bks) — exploded here) or pre-exploded ((url, sig,
-    band, band_key) — the band-key-partitioned store read, already
-    bucket-pruned). Within-batch pairs keep the
+    ``sig_history`` ((url, sig, band, band_key) rows, one per band, of
+    PRIOR micro-batches — the one shape both signature-store reads,
+    streaming/jobs._sig_state and _sig_state_banded, return)
+    additionally drops any current document that near-duplicates
+    crawl HISTORY: candidates via (band, band_key) equi-join of the
+    current batch's band keys against the store, similarity estimated
+    from the signatures alone (operators/dedup.signature_history_losers:
+    matching MinHash components · den ≥ num · num_hashes — the store
+    carries no text to shingle-verify against, which is exactly why it
+    is ~25 longs/doc instead of the corpus). A frame of any other shape
+    fails at analysis. Within-batch pairs keep the
     exact shingle verify; the estimate applies only across batches.
     A SAME-url history match counts: under the first-occurrence rule
     an unchanged recrawl of url U is stale corpus content exactly like
@@ -535,16 +547,16 @@ def _near_dup_losers(d: DataFrame, cfg: CurateConfig,
     (streaming/jobs._sig_state).
 
     ``cur_sig_rows`` is the batch's own (url, sig, bks) evidence frame
-    (near_dup_sig_evidence — i.e. signatures of the post-boiler,
-    PRE-paragraph-dedup text). When given, the history comparison uses
-    it directly, guaranteeing query-side and stored signatures are
-    built from the SAME text form — without it, a repost whose
-    duplicated paragraphs were already stripped by _corpus_para_dedup
-    would be signed on the edited remainder only and systematically
-    underestimate similarity vs the stored full-text signature. When
-    para-dedup is OFF the frame is byte-identical to what this
-    function would sign anyway, so in-batch candidates reuse it too
-    (one signing per micro-batch, not two).
+    (_sig_rows_from_kept of the post-boiler, PRE-paragraph-dedup
+    frame), and ``sig_history`` requires it: the history comparison
+    signs nothing itself, so query-side and stored signatures are
+    always built from the SAME text form — a repost whose duplicated
+    paragraphs were already stripped by _corpus_para_dedup, signed
+    here, would be signed on the edited remainder only and
+    systematically underestimate similarity vs the stored full-text
+    signature. When para-dedup is OFF the frame is byte-identical to
+    what this function would sign anyway, so in-batch candidates reuse
+    it too (one signing per micro-batch, not two).
 
     Scale shape: signatures are one explode + partial-agg'd groupBy
     (16 longs/doc through the exchange), candidates an equi self-join
@@ -555,6 +567,8 @@ def _near_dup_losers(d: DataFrame, cfg: CurateConfig,
     propagation rounds over the verified PAIRS only (near-dup graphs
     are shallow stars); "neighbor" survival is a single groupBy-min
     over the pair list."""
+    if sig_history is not None and cur_sig_rows is None:
+        raise ValueError("sig_history requires the batch's own signature rows")
     # with para-dedup off, kept_paras IS the evidence text form — reuse
     # the caller's rows for in-batch candidates instead of re-signing
     own = cur_sig_rows if (cur_sig_rows is not None and not cfg.para_dedup) \
@@ -585,37 +599,15 @@ def _near_dup_losers(d: DataFrame, cfg: CurateConfig,
         )
     if sig_history is None:
         return batch_losers
-    hcols = set(sig_history.columns)
-    if hcols == {"url", "sig", "bks"}:
-        hb = sig_history.select(
-            F.col("url").alias("h_url"),
-            F.col("sig").alias("h_sig"),
-            F.posexplode("bks").alias("band", "band_key"),
-        )
-    elif hcols == {"url", "sig", "band", "band_key"}:
-        # pre-exploded history — the band-key-partitioned store read
-        # (streaming/jobs._sig_state_banded) hands rows back as
-        # (url, sig, band, band_key), already pruned to the buckets
-        # this batch can match
-        hb = sig_history.select(
-            F.col("url").alias("h_url"),
-            F.col("sig").alias("h_sig"),
-            "band", "band_key",
-        )
-    else:
-        # layout dispatch is by EXACT column set: a frame that merely
-        # contains one shape plus extras would silently take the wrong
-        # branch (double-explode or mis-join) — refuse instead
-        raise ValueError(
-            "sig_history must be compact (url, sig, bks) or exploded "
-            f"(url, sig, band, band_key) rows; got {sorted(hcols)}"
-        )
+    hb = sig_history.select(
+        F.col("url").alias("h_url"), F.col("sig").alias("h_sig"), "band", "band_key"
+    )
     # no self-url exclusion: history is strictly prior batches, so a
     # same-url hit is a RECRAWL of already-corpus content — stale under
     # the first-occurrence rule whether or not the independent
     # cross-batch url-dedup opt-in is on (see docstring)
     hist_losers = D.signature_history_losers(
-        cur_sig_rows if cur_sig_rows is not None else own, hb, "url",
+        cur_sig_rows, hb, "url",
         cfg.near_dup_num, cfg.near_dup_den, cfg.near_dedup_hashes,
     )
     # a url can lose both ways (in-batch AND vs history); the caller
@@ -625,27 +617,6 @@ def _near_dup_losers(d: DataFrame, cfg: CurateConfig,
         .groupBy("url")
         .agg(F.min("near_dup_of").alias("near_dup_of"))
     )
-
-
-def near_dup_sig_evidence(docs: DataFrame, boiler: DataFrame,
-                          cfg: CurateConfig) -> DataFrame:
-    """This batch's (url, sig, bks) rows for the cross-batch near-dup
-    signature store — EVERY post-boiler document's signature, losers
-    included (a future page similar only to a dropped loser still
-    near-duplicates corpus content, and including losers keeps the
-    write independent of the loser computation, so it can run after
-    the bucket commit with the same crash-replay idempotence as
-    _write_span_evidence). Detection text is the post-boiler kept
-    paragraphs (pre span-dedup when cfg.para_dedup is also on —
-    evidence is built the same way for every batch, so the estimate
-    is self-consistent across the stream). Strip and signing go
-    through boiler_kept_col / _sig_rows_from_kept — the exact
-    expressions curate() itself strips and signs with — so stored
-    evidence can never drift from what the pipeline keeps."""
-    d = docs.join(F.broadcast(boiler), "domain", "left").withColumn(
-        "kept_paras", boiler_kept_col()
-    )
-    return _sig_rows_from_kept(d, cfg)
 
 
 def _kept_text(d: DataFrame) -> DataFrame:
@@ -658,9 +629,9 @@ def _kept_text(d: DataFrame) -> DataFrame:
 
 def _sig_rows_from_kept(d: DataFrame, cfg: CurateConfig) -> DataFrame:
     """(url, sig, bks) MinHash rows of a post-boiler frame's
-    ``kept_paras`` — the ONE signing path; the signature-store write
-    (near_dup_sig_evidence), curate()'s history-query side and the
-    in-batch candidates all go through it, so the two sides of the
+    ``kept_paras`` — the ONE signing path; a stateful stream trigger's
+    signature-store write and history-query side (both from its one
+    strip_boiler frame) and the in-batch candidates all go through it, so the two sides of the
     cross-batch comparison are guaranteed to sign the same text form
     with the same parameters."""
     sig = D.minhash_signatures(
@@ -767,28 +738,26 @@ def drain_curate_persisted() -> None:
 
 
 def curate(pages: DataFrame, cfg: CurateConfig | None = None,
-           boiler_override: DataFrame | None = None,
-           docs: DataFrame | None = None,
+           stripped: DataFrame | None = None,
            span_history: DataFrame | None = None,
            sig_history: DataFrame | None = None,
            sig_current: DataFrame | None = None) -> DataFrame:
     """Full pipeline → decision frame (SURVEY.md §7.0 output schema +
     bucket column for manifests/metrics).
 
-    ``boiler_override``: a precomputed (domain, boiler_set) frame to use
-    instead of this input's own boilerplate_sets — the seam streaming
-    uses to strip against evidence merged across micro-batches.
-    ``docs``: an already-computed (and typically persisted)
-    deduped_docs frame for the same pages, so a caller that needed it
-    for evidence extraction doesn't pay the dedup+repair chain twice.
+    ``stripped``: the post-boiler frame of these pages (strip_boiler),
+    used instead of this input's own url-dedup, repair and boilerplate
+    stages — the seam a stateful stream trigger uses: it strips once
+    against the boiler sets merged across micro-batches and reads the
+    same persisted frame for its span and signature evidence.
     ``span_history``: earlier-batch span keys for the paragraph-dedup
     stage (see _corpus_para_dedup) — requires ``cfg.para_dedup``.
-    ``sig_history``: earlier-batch (url, sig, bks) MinHash rows for
-    the near-dedup stage (see near_dup_sig_evidence) — requires
-    ``cfg.near_dedup``. ``sig_current``: THIS batch's already-computed
-    evidence rows (streaming computes them once for the state write —
-    passing them here avoids signing the batch twice); derived
-    internally when omitted."""
+    ``sig_history``: earlier-batch (url, sig, band, band_key) MinHash
+    rows for the near-dedup stage (see _near_dup_losers) — requires
+    ``cfg.near_dedup`` and ``sig_current``, THIS batch's (url, sig,
+    bks) rows signed from ``stripped`` by _sig_rows_from_kept: the
+    form the signature store holds, so the comparison never signs a
+    second text form."""
     cfg = cfg or CurateConfig()
     if span_history is not None and not cfg.para_dedup:
         raise ValueError("span_history requires CurateConfig.para_dedup=True")
@@ -796,33 +765,23 @@ def curate(pages: DataFrame, cfg: CurateConfig | None = None,
         raise ValueError("sig_history requires CurateConfig.near_dedup=True")
     if sig_current is not None and not cfg.near_dedup:
         raise ValueError("sig_current requires CurateConfig.near_dedup=True")
-    if docs is None:
-        docs = deduped_docs(pages, cfg)
+    if sig_history is not None and sig_current is None:
+        raise ValueError("sig_history requires sig_current")
+    d = stripped
+    if d is None:
         # three consumers read this frame (the boilerplate hash and
         # confirm passes, and the main decision branch) — without the
         # persist each would recompute the scan + url-dedup window +
         # repair chain
-        if boiler_override is None:
-            docs = docs.persist()
-            _CURATE_PERSISTED.append(docs)
-    boiler = boilerplate_sets(docs, cfg) if boiler_override is None else boiler_override
+        docs = deduped_docs(pages, cfg).persist()
+        _CURATE_PERSISTED.append(docs)
+        d = strip_boiler(docs, boilerplate_sets(docs, cfg))
 
     c = _curate_cols(pages.sparkSession, cfg)
-    d = docs.join(F.broadcast(boiler), "domain", "left").select(*c.strip)
     if cfg.para_dedup or cfg.near_dedup:
         # the stages rewrite kept_paras: count the boiler-stripped
         # paragraphs first
         d = d.select(*c.staged)
-    if cfg.near_dedup and sig_history is not None and sig_current is None \
-            and cfg.para_dedup:
-        # the signature STORE holds pre-paragraph-dedup signatures
-        # (near_dup_sig_evidence); the query side must sign the SAME
-        # text form, so capture it here — after para-dedup rewrites
-        # kept_paras, a repost's duplicated paragraphs would be
-        # stripped before signing and Jaccard vs the stored full-text
-        # signature would systematically underestimate, defeating
-        # exactly the cross-batch repost case the store exists for
-        sig_current = _sig_rows_from_kept(d, cfg)
     if cfg.para_dedup:
         d = _corpus_para_dedup(d, cfg, span_history=span_history)
     if cfg.near_dedup:
@@ -854,7 +813,7 @@ _UPPERS = "ABCDEFGHIJKLMNOPQRSTUVWXYZ" + "".join(chr(c) for c in range(0xC0, 0xD
 
 
 def _curate_cols(spark: SparkSession, cfg: CurateConfig) -> SimpleNamespace:
-    """curate()'s select lists after the boiler join: strip, scrub,
+    """curate()'s select lists after the boiler strip: staged, scrub,
     stats (with the Arrow scores), reasons and the output schema."""
     def build() -> SimpleNamespace:
         stage = ["paras_dup"] * cfg.para_dedup + ["_nd_loser"] * cfg.near_dedup
@@ -905,8 +864,6 @@ def _curate_cols(spark: SparkSession, cfg: CurateConfig) -> SimpleNamespace:
             F.lit(cfg.input_snapshot).alias("input_snapshot"),
         )
         return SimpleNamespace(
-            strip=base + [F.size("paras").alias("paras_total"),
-                          boiler_kept_col().alias("kept_paras")],
             staged=base + [c["paras_total"], c["kept_paras"], paras_boiler],
             scrub=base + [
                 c["paras_total"], c["paras_boiler"] if stage else paras_boiler, *stage_in,

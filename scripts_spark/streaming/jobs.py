@@ -23,15 +23,15 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from scripts_spark.plans.pipeline import (
     CurateConfig,
-    boiler_kept_col,
+    _sig_rows_from_kept,
     boiler_line_evidence,
     boiler_sets_from_counts,
     boilerplate_sets,
     curate,
     deduped_docs,
     drain_curate_persisted,
-    near_dup_sig_evidence,
     span_hash_cols,
+    strip_boiler,
 )
 from scripts_spark.sources import catalog
 from scripts_spark.session import local_frame
@@ -46,7 +46,7 @@ DEDUP_WATERMARK = "30 days"
 def read_pages_stream(spark: SparkSession, input_dir: str,
                       max_files_per_trigger: int | None = None) -> DataFrame:
     r = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger:
+    if max_files_per_trigger is not None:
         r = r.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return r.parquet(input_dir)
 
@@ -120,6 +120,15 @@ def stream_curate(spark: SparkSession, input_dir: str, out_dir: str,
     ``compact_every`` batches a store's tail is folded into one
     snapshot (_state_view). A state dir that belongs to another
     checkpoint fails the trigger (_guard_watermark).
+    ``max_files_per_trigger`` (None: no limit), ``compact_every`` and
+    ``sig_store_buckets`` below 1 are rejected.
+
+    A trigger with any store strips the batch's boilerplate ONCE
+    (plans/pipeline.strip_boiler, against the batch-local or merged
+    boiler sets) and persists that frame: curate(stripped=) decides on
+    it, and the span evidence and the signature rows (signed once, for
+    both the history comparison and the store write) are read from
+    it.
 
     Each trigger starts with an empty check (one Spark job) and returns
     when the batch has no rows. It stays although the commit would
@@ -136,13 +145,16 @@ def stream_curate(spark: SparkSession, input_dir: str, out_dir: str,
         raise ValueError("sig_state_dir requires CurateConfig.near_dedup=True")
     if sig_store_buckets is not None and sig_state_dir is None:
         raise ValueError("sig_store_buckets requires sig_state_dir")
-    if sig_store_buckets is not None and sig_store_buckets < 1:
-        # 0 would pin 'store_buckets=0' in the marker while _process's
-        # truthiness check silently ran the compact layout — marker
-        # and on-disk layout disagreeing forever
-        raise ValueError(
-            f"sig_store_buckets must be >= 1, got {sig_store_buckets}"
-        )
+    # None means no limit / never / the compact layout; any other
+    # value below 1 would silently mean something else (0 files per
+    # trigger: every file in one trigger; compact_every 0: never,
+    # negative: every trigger; 0 store buckets: a marker pinning a
+    # layout _process does not run)
+    for name, v in (("max_files_per_trigger", max_files_per_trigger),
+                    ("compact_every", compact_every),
+                    ("sig_store_buckets", sig_store_buckets)):
+        if v is not None and v < 1:
+            raise ValueError(f"{name} must be >= 1, got {v}")
     named = [
         ("boiler_state_dir", boiler_state_dir),
         ("span_state_dir", span_state_dir),
@@ -173,18 +185,7 @@ def stream_curate(spark: SparkSession, input_dir: str, out_dir: str,
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        boiler, docs, evidence, sig_cur = None, None, None, None
-        any_state = (
-            boiler_state_dir is not None
-            or span_state_dir is not None
-            or sig_state_dir is not None
-        )
-        if any_state:
-            # compute + persist the deduped/repaired docs frame ONCE:
-            # the evidence writes and the curate pass all read it
-            # (without this the scan + url-dedup + repair chain runs 3x
-            # per micro-batch)
-            docs = deduped_docs(batch_df, cfg).persist()
+        docs, stripped, evidence, sig_cur = None, None, None, None
         # everything that can fail AFTER a persist — state reads incl.
         # their fail-fast watermark guards, the bucket collect, curate,
         # the commit — runs under the one finally that releases every
@@ -192,16 +193,22 @@ def stream_curate(spark: SparkSession, input_dir: str, out_dir: str,
         # leak the materialized docs/signature caches into the shared
         # session
         try:
-            if boiler_state_dir is not None:
-                boiler, evidence = _merged_boiler(
-                    spark, docs, batch_id, boiler_state_dir, cfg,
-                    compact_every=compact_every,
-                )
-            elif any_state:
-                # span/sig evidence and the strip must agree on the
-                # boiler sets: compute the batch-local sets ONCE here
-                # and hand them to curate as the override
-                boiler = boilerplate_sets(docs, cfg)
+            if (boiler_state_dir is not None or span_state_dir is not None
+                    or sig_state_dir is not None):
+                # the deduped/repaired docs feed the boiler evidence
+                # and sets; the ONE post-boiler frame stripped from them
+                # feeds curate, the span evidence and the signing — each
+                # persisted, so the scan + url-dedup + repair chain and
+                # the strip run once per micro-batch
+                docs = deduped_docs(batch_df, cfg).persist()
+                if boiler_state_dir is not None:
+                    boiler, evidence = _merged_boiler(
+                        spark, docs, batch_id, boiler_state_dir, cfg,
+                        compact_every=compact_every,
+                    )
+                else:
+                    boiler = boilerplate_sets(docs, cfg)
+                stripped = strip_boiler(docs, boiler).persist()
             span_hist = None
             if span_state_dir is not None:
                 span_hist = _span_state(
@@ -219,9 +226,13 @@ def stream_curate(spark: SparkSession, input_dir: str, out_dir: str,
                 # serve curate's history comparison (and, with
                 # para_dedup off, its in-batch candidates) AND the
                 # post-commit store write — signing is the dominant
-                # near-dedup cost per batch
-                sig_cur = near_dup_sig_evidence(docs, boiler, cfg).persist()
-                if sig_store_buckets:
+                # near-dedup cost per batch. Every post-boiler doc is
+                # signed, losers included: a future page similar only
+                # to a dropped loser still near-duplicates corpus
+                # content, and the write stays independent of the
+                # loser computation (it runs after the commit)
+                sig_cur = _sig_rows_from_kept(stripped, cfg).persist()
+                if sig_store_buckets is not None:
                     # the batch's own bucket set drives snapshot
                     # partition pruning; driver-side collect is bounded
                     # by sig_store_buckets distinct ints, never by
@@ -235,7 +246,7 @@ def stream_curate(spark: SparkSession, input_dir: str, out_dir: str,
                     sig_hist = _sig_state(
                         spark, sig_state_dir, batch_id, compact_every
                     )
-            dec = curate(batch_df, cfg, boiler_override=boiler, docs=docs,
+            dec = curate(batch_df, cfg, stripped=stripped,
                          span_history=span_hist, sig_history=sig_hist,
                          sig_current=sig_cur)
             # the commit unit is (job_id=batch_id, bucket): a replayed
@@ -244,28 +255,24 @@ def stream_curate(spark: SparkSession, input_dir: str, out_dir: str,
             # already committed is still written in full (no
             # cross-batch skipping)
             catalog.commit_buckets(dec, out_dir, job_id=batch_id)
+            # evidence AFTER the commit: a crash in between replays the
+            # batch, which resumes the commit and rewrites its own
+            # evidence partitions (idempotent); history for the replay
+            # is still exclusive of this batch (see _state_view)
             if span_state_dir is not None:
-                # AFTER the commit: a crash in between replays the
-                # batch, which resumes the commit and rewrites its own
-                # evidence partition (idempotent); history for the
-                # replay is still exclusive of this batch (see
-                # _span_state)
-                _write_span_evidence(docs, boiler, batch_id, span_state_dir)
+                _write_span_evidence(stripped, batch_id, span_state_dir)
             if sig_state_dir is not None:
-                _write_sig_evidence(sig_cur, batch_id, sig_state_dir)
+                _write_evidence(sig_cur, batch_id, sig_state_dir, "sigs")
         finally:
-            if sig_cur is not None:
-                sig_cur.unpersist()
-            if docs is not None:
-                docs.unpersist()
+            for f in (sig_cur, stripped, docs, evidence):
+                if f is not None:
+                    f.unpersist()
             # release exactly the frames curate() cached internally
             # (near-dedup post-boiler frame, its own docs persist when
-            # we didn't pass one) — NOT catalog.clearCache(), which
-            # would also evict every caller-owned cached frame in the
-            # shared session
+            # we didn't pass a stripped frame) — NOT
+            # catalog.clearCache(), which would also evict every
+            # caller-owned cached frame in the shared session
             drain_curate_persisted()
-            if evidence is not None:
-                evidence.unpersist()
 
     w = (
         stream.writeStream.foreachBatch(_process)
@@ -546,7 +553,7 @@ def _state_view(spark: SparkSession, state_dir: str, batch_id: int,
             tail if through < 0
             else tail.unionByName(_snapshot(spark, state_dir, s, through))
         )
-    if not compact_every or upto - through < compact_every:
+    if compact_every is None or upto - through < compact_every:
         return views
     for s in stores:
         out = s.fold(views[s.sub])
@@ -584,9 +591,13 @@ def _span_state(spark: SparkSession, state_dir: str, batch_id: int,
 
 def _sig_state(spark: SparkSession, state_dir: str, batch_id: int,
                compact_every: int | None) -> DataFrame:
-    """Cross-batch near-dup history: the (url, sig, bks) MinHash rows
-    of every post-boiler document processed by micro-batches BEFORE
-    this one — the span history's read, applied to signature rows.
+    """Cross-batch near-dup history: the MinHash rows of every
+    post-boiler document processed by micro-batches BEFORE this one —
+    the span history's read, applied to signature rows. The store
+    holds compact (url, sig, bks) rows, in its tails and snapshots
+    alike; they come back exploded per band as (url, sig, band,
+    band_key), the one history shape _near_dup_losers takes (and
+    _sig_state_banded returns).
 
     Scale note: the candidate join scans the whole store per trigger
     (fine while the store is snapshot + ≤K tail partitions of compact
@@ -597,9 +608,10 @@ def _sig_state(spark: SparkSession, state_dir: str, batch_id: int,
     pmod(band_key, N) with the batch's band-key set pushed down as a
     partition filter — O(batch x occupancy) per trigger instead of
     O(store), same marker/GC machinery."""
-    return _state_view(
+    view = _state_view(
         spark, state_dir, batch_id, batch_id - 1, compact_every, [_SIGS]
     )["sigs"]
+    return view.select("url", "sig", F.posexplode("bks").alias("band", "band_key"))
 
 
 def sig_bucket_col(band_key: "F.Column | str", store_buckets: int):
@@ -659,33 +671,22 @@ def _sig_state_banded(spark: SparkSession, state_dir: str, batch_id: int,
     ).select("url", "sig", "band", "band_key")
 
 
-def _write_span_evidence(docs: DataFrame, boiler: DataFrame, batch_id: int,
+def _write_span_evidence(stripped: DataFrame, batch_id: int,
                          state_dir: str) -> None:
-    """Append this batch's post-boiler span keys (distinct 128-bit
-    hashes, ~16 bytes/span — never the paragraph strings) as its own
-    ``batch_id=`` partition (see _write_evidence).
-    Evidence is the PRE-dedup kept paragraphs: spans this batch
-    dropped as duplicates are already in history, so the union of
-    histories is unchanged and the write needs no dependency on the
-    strip itself (it can run after the bucket commit)."""
-    para = docs.join(F.broadcast(boiler), "domain", "left").select(
-        F.explode(boiler_kept_col()).alias("para")
-    )
+    """Append the span keys of a strip_boiler frame's kept paragraphs
+    (distinct 128-bit hashes, ~16 bytes/span — never the paragraph
+    strings) as this batch's own ``batch_id=`` partition (see
+    _write_evidence). Evidence is the PRE-dedup kept paragraphs: spans
+    this batch dropped as duplicates are already in history, so the
+    union of histories is unchanged and the write needs no dependency
+    on the paragraph-dedup stage (it can run after the bucket
+    commit)."""
     h1, h2 = span_hash_cols(F.col("para"))
     _write_evidence(
-        para.select(h1.alias("h1"), h2.alias("h2")).distinct(),
+        stripped.select(F.explode("kept_paras").alias("para"))
+        .select(h1.alias("h1"), h2.alias("h2")).distinct(),
         batch_id, state_dir, "spans",
     )
-
-
-def _write_sig_evidence(sig_rows: DataFrame, batch_id: int,
-                        state_dir: str) -> None:
-    """Append this batch's (url, sig, bks) MinHash rows as its own
-    ``batch_id=`` partition (see _write_evidence). ``sig_rows`` is the
-    near_dup_sig_evidence frame _process computed (and persisted) once
-    for the whole trigger; see plans.pipeline.near_dup_sig_evidence
-    for what the rows are and why losers are included."""
-    _write_evidence(sig_rows, batch_id, state_dir, "sigs")
 
 
 def _merged_boiler(spark: SparkSession, docs: DataFrame, batch_id: int,
@@ -714,9 +715,10 @@ def _merged_boiler(spark: SparkSession, docs: DataFrame, batch_id: int,
 
     Returns (boiler_sets, persisted_line_docs): line_docs is persisted
     because TWO actions consume it — the state write here, and the
-    lazy confirm join when curate runs the strip — and without the
-    persist the batch's explode+groupBy aggregation would execute
-    twice per micro-batch. The caller unpersists it after commit."""
+    lazy confirm join, which runs once, in the first action on the
+    trigger's persisted strip_boiler frame — and without the persist
+    the batch's explode+groupBy aggregation would execute twice per
+    micro-batch. The caller unpersists it after commit."""
     # one-time per process: schema inference on the state table costs
     # a listing + footer read per call — pointless on every trigger of
     # a long stream for a migration check whose answer cannot change

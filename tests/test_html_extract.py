@@ -6,31 +6,12 @@ shows up as a three-way disagreement somewhere)."""
 
 from __future__ import annotations
 
-import re
-
 import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from scripts_spark.functions.html_extract import (
-    HTML_ENTITY_STEPS,
-    HTML_REGEX_STEPS,
-    HTML_WS_STEPS,
-    html_to_text,
-)
-
-
-def py_html_to_text(s: str | None) -> str | None:
-    if s is None:
-        return None
-    for pat, rep in HTML_REGEX_STEPS:
-        s = re.sub(pat, rep, s)
-    for lit, rep in HTML_ENTITY_STEPS:
-        s = s.replace(lit, rep)
-    for pat, rep in HTML_WS_STEPS:
-        s = re.sub(pat, rep, s)
-    return s.strip(" \n")
-
+from scripts_spark.functions.html_extract import html_to_text
+from scripts_spark.oracle.textoracle import html_to_text as py_html_to_text
 
 CASES = [
     # comments stripped, incl. multi-line
@@ -167,6 +148,32 @@ def test_curate_text_from_html_drop_in(spark):
         # curate persists its docs frame internally; release so later
         # tests asserting a cache-clean session aren't poisoned
         drain_curate_persisted()
+
+
+def test_curate_text_from_html_oracle_parity(spark):
+    """On html-only pages (text null) the oracle extracts the html by
+    the same spec when text_from_html is on: keep F1 = 1.0 and
+    byte-identical scrubbed_text against the engine."""
+    from scripts_spark.oracle.pipeline_oracle import curate_rows
+    from scripts_spark.plans.pipeline import CurateConfig, curate, drain_curate_persisted
+    from scripts_spark.sources.pages import PAGES_SCHEMA, gen_rows
+
+    rows = [dict(r, text=None) for r in gen_rows(range(50))]
+    cfg = CurateConfig(num_buckets=4, text_from_html=True)
+    try:
+        got = {r["url"]: r for r in curate(
+            spark.createDataFrame(rows, PAGES_SCHEMA), cfg).collect()}
+    finally:
+        drain_curate_persisted()
+    want = curate_rows(rows, cfg)
+    assert set(got) == set(want)
+    tp = sum(got[u]["keep"] and w["keep"] for u, w in want.items())
+    fp = sum(got[u]["keep"] and not w["keep"] for u, w in want.items())
+    fn = sum(w["keep"] and not got[u]["keep"] for u, w in want.items())
+    assert tp > 0 and fp == fn == 0  # keep F1 = 1.0
+    for u, w in want.items():
+        assert got[u]["scrubbed_text"] == w["scrubbed_text"], u
+        assert list(got[u]["filter_reasons"]) == w["filter_reasons"], u
 
 
 def test_single_projection_no_shuffle(spark):

@@ -434,7 +434,7 @@ def test_span_state_replay_sees_history_exclusive_of_itself(spark, tmpdirs):
     _, _, _, state = tmpdirs
     span_dir = state + "/respan"
     cfg = CurateConfig(num_buckets=2, para_dedup=True)
-    from scripts_spark.plans.pipeline import boilerplate_sets, deduped_docs
+    from scripts_spark.plans.pipeline import boilerplate_sets, deduped_docs, strip_boiler
     from scripts_spark.streaming.jobs import _span_state, _write_span_evidence
 
     def batch(i, text):
@@ -447,7 +447,7 @@ def test_span_state_replay_sees_history_exclusive_of_itself(spark, tmpdirs):
         boiler = boilerplate_sets(docs, cfg)
         hist = {(r["h1"], r["h2"])
                 for r in _span_state(spark, span_dir, bid, None).collect()}
-        _write_span_evidence(docs, boiler, bid, span_dir)
+        _write_span_evidence(strip_boiler(docs, boiler), bid, span_dir)
         return hist
 
     h0 = process(0, "första raden\nandra raden")
@@ -543,6 +543,11 @@ def test_curate_sig_history_requires_near_dedup(spark):
     with pytest.raises(ValueError, match="near_dedup"):
         _curate(spark.createDataFrame([], PAGES_SCHEMA), CurateConfig(),
                 sig_history=hist)
+    # history is only ever compared against the batch's own signature
+    # rows: curate signs no second text form for it
+    with pytest.raises(ValueError, match="sig_current"):
+        _curate(spark.createDataFrame([], PAGES_SCHEMA),
+                CurateConfig(near_dedup=True), sig_history=hist)
 
 
 def test_stream_curate_same_url_recrawl_caught_by_sig_history(spark, tmpdirs):
@@ -614,7 +619,9 @@ def test_stream_curate_repost_caught_despite_para_dedup(spark, tmpdirs):
     signature must be built from the PRE-paragraph-dedup text (the
     same form the store signs), or Jaccard vs the stored full-text
     signature collapses to the edited remainder and the repost
-    escapes. Regression pin for the sig_current capture in curate()."""
+    escapes. Regression pin for stream_curate signing its signature
+    rows from the strip_boiler frame, before paragraph dedup, and
+    passing them to curate() as sig_current."""
     import datetime
 
     in_dir, out_dir, ckpt, state = tmpdirs
@@ -793,15 +800,15 @@ def test_banded_sig_state_replay_excludes_own_batch(spark, tmp_path):
             "url string, sig array<bigint>, bks array<bigint>",
         )
 
-    SJ._write_sig_evidence(rows_b(0), 0, state)
-    SJ._write_sig_evidence(rows_b(1), 1, state)
+    SJ._write_evidence(rows_b(0), 0, state, "sigs")
+    SJ._write_evidence(rows_b(1), 1, state, "sigs")
     # batch 2's read triggers compaction (through=1, tails folded+GC'd)
     h2 = SJ._sig_state_banded(spark, state, 2, 1, list(range(8)), 8)
     assert {r["url"] for r in h2.collect()} == {"u0", "u1"}
     # batch 2 writes its own evidence, then crashes; the replay's
     # history is unchanged — its own partition is excluded by the
     # batch_id bound, not by luck of GC timing
-    SJ._write_sig_evidence(rows_b(2), 2, state)
+    SJ._write_evidence(rows_b(2), 2, state, "sigs")
     h2r = SJ._sig_state_banded(spark, state, 2, 1, list(range(8)), 8)
     assert {r["url"] for r in h2r.collect()} == {"u0", "u1"}
     with pytest.raises(ValueError, match="watermark"):
@@ -832,16 +839,20 @@ def test_empty_history_compaction_never_wedges(spark, tmp_path):
 
 
 def test_sig_store_buckets_validation(spark, tmp_path):
-    """0 (and negatives) would pin the marker while _process silently
-    ran the compact layout — rejected at setup."""
-    for bad in (0, -8):
-        with pytest.raises(ValueError, match="sig_store_buckets"):
-            SJ.stream_curate(
-                spark, str(tmp_path / "in"), str(tmp_path / "out"),
-                str(tmp_path / "ck"), CurateConfig(near_dedup=True),
-                sig_state_dir=str(tmp_path / "sig"),
-                sig_store_buckets=bad,
-            )
+    """Values below 1 are rejected at setup, where each would silently
+    mean something else: 0 store buckets would pin the marker while
+    _process ran the compact layout, 0 files per trigger would put
+    every file in one trigger, compact_every 0 would never compact and
+    a negative one would compact every trigger."""
+    for name in ("sig_store_buckets", "max_files_per_trigger", "compact_every"):
+        for bad in (0, -8):
+            with pytest.raises(ValueError, match=f"{name} must be >= 1"):
+                SJ.stream_curate(
+                    spark, str(tmp_path / "in"), str(tmp_path / "out"),
+                    str(tmp_path / "ck"), CurateConfig(near_dedup=True),
+                    sig_state_dir=str(tmp_path / "sig"),
+                    **{name: bad},
+                )
 
 
 def test_process_failure_releases_caches(spark, tmpdirs):
@@ -885,7 +896,7 @@ def test_state_from_a_later_batch_fails_loudly(spark, tmp_path):
     import datetime
     import os
 
-    from scripts_spark.plans.pipeline import boilerplate_sets, deduped_docs
+    from scripts_spark.plans.pipeline import boilerplate_sets, deduped_docs, strip_boiler
 
     cfg = CurateConfig(num_buckets=2, para_dedup=True)
     boil, spans = str(tmp_path / "boil"), str(tmp_path / "spans")
@@ -903,7 +914,7 @@ def test_state_from_a_later_batch_fails_loudly(spark, tmp_path):
         d = docs(bid)
         _, ld = SJ._merged_boiler(spark, d, bid, boil, cfg)
         ld.unpersist()
-        SJ._write_span_evidence(d, boilerplate_sets(d, cfg), bid, spans)
+        SJ._write_span_evidence(strip_boiler(d, boilerplate_sets(d, cfg)), bid, spans)
     before = sorted(os.listdir(boil + "/lines/batch_id=0"))
     with pytest.raises(ValueError, match="evidence of micro-batch 3"):
         SJ._merged_boiler(spark, docs(0), 0, boil, cfg)

@@ -336,3 +336,25 @@ def test_near_dedup_neighbor_mode_is_lazy(spark):
     assert len(after) == len(before), "neighbor-mode plan build ran jobs"
     assert out.columns[0] == "url"  # plan is intact and analyzable
     spark.catalog.clearCache()
+
+
+def test_curate_stripped_seam_matches_batch_path(spark):
+    """curate(stripped=) with the post-boiler frame a stateful stream
+    trigger builds once (strip_boiler over the pages' own boilerplate
+    sets) decides exactly as curate's own strip, with both opt-in
+    stages on (component survival)."""
+    rows, _ = _near_dup_fixture()
+    df = spark.createDataFrame(rows, pages.PAGES_SCHEMA)
+    cfg = pipeline.CurateConfig(num_buckets=8, para_dedup=True, near_dedup=True)
+    docs = pipeline.deduped_docs(df, cfg)
+    stripped = pipeline.strip_boiler(docs, pipeline.boilerplate_sets(docs, cfg))
+    try:
+        want = {r["url"]: r.asDict(recursive=True)
+                for r in pipeline.curate(df, cfg).collect()}
+        got = {r["url"]: r.asDict(recursive=True)
+               for r in pipeline.curate(df, cfg, stripped=stripped).collect()}
+    finally:
+        pipeline.drain_curate_persisted()
+    assert got == want
+    assert any("boilerplate" in r["filter_reasons"] for r in want.values())
+

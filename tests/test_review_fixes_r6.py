@@ -55,40 +55,37 @@ def test_oracle_rejects_unknown_near_dedup_mode():
 
 
 def test_curate_sig_current_equivalence(spark):
-    """curate(sig_history=H) and curate(sig_history=H, sig_current=E)
-    — E being the batch's own near_dup_sig_evidence, exactly what
-    stream_curate now computes once and passes in — must produce the
-    same decisions row-for-row: passing the rows is a signing-cost
-    optimization, never a semantics change."""
+    """curate(sig_history=H, sig_current=E) — E the batch's own rows
+    signed from its strip_boiler frame, H the prior batch's rows in the
+    exploded history shape, exactly what a stateful stream trigger
+    passes — flags the 20 urls the batch recrawls from history (same-url
+    matches count; url-dedup across batches is a separate opt-in)."""
+    from pyspark.sql import functions as F
+
     from scripts_spark.plans.pipeline import (
+        _sig_rows_from_kept,
         boilerplate_sets,
         deduped_docs,
-        near_dup_sig_evidence,
+        strip_boiler,
     )
 
     cfg = CurateConfig(num_buckets=4, near_dedup=True,
                        near_dedup_mode="neighbor")
+
+    def sig_rows(pages):
+        docs = deduped_docs(pages, cfg)
+        return _sig_rows_from_kept(
+            strip_boiler(docs, boilerplate_sets(docs, cfg)), cfg)
+
     prev = pages_df(spark, 40, partitions=2, start=0)
     cur = pages_df(spark, 40, partitions=2, start=20)  # 20 docs overlap prev
-    pdocs = deduped_docs(prev, cfg)
-    hist = near_dup_sig_evidence(pdocs, boilerplate_sets(pdocs, cfg), cfg)
-
-    cdocs = deduped_docs(cur, cfg)
-    ev = near_dup_sig_evidence(cdocs, boilerplate_sets(cdocs, cfg), cfg)
-    a = curate(cur, cfg, sig_history=hist)
-    b = curate(cur, cfg, sig_history=hist, sig_current=ev)
-    cols = sorted(a.columns)
+    hist = sig_rows(prev).select(
+        "url", "sig", F.posexplode("bks").alias("band", "band_key"))
+    dec = curate(cur, cfg, sig_history=hist, sig_current=sig_rows(cur))
     try:
-        ra = sorted(map(str, a.select(*cols).collect()))
-        rb = sorted(map(str, b.select(*cols).collect()))
+        flagged = sum("near_dup" in r["filter_reasons"] for r in dec.collect())
     finally:
         drain_curate_persisted()
-    assert ra == rb and len(ra) > 0
-    # the 20 recrawled urls must be flagged against history (same-url
-    # matches count; url-dedup across batches is a separate opt-in)
-    flagged = sum("near_dup" in r["filter_reasons"]
-                  for r in b.collect())
-    drain_curate_persisted()
     assert flagged >= 20
 
 
@@ -121,8 +118,9 @@ def test_near_dup_losers_reuses_cur_sig_rows(spark):
         "url string, sig array<bigint>, bks array<bigint>",
     )
     hist = spark.createDataFrame(
-        [("https://old.se/x", sig_match, [999, 302, 998, 997, 996, 995, 994, 993])],
-        "url string, sig array<bigint>, bks array<bigint>",
+        [("https://old.se/x", sig_match, band, key)
+         for band, key in enumerate([999, 302, 998, 997, 996, 995, 994, 993])],
+        "url string, sig array<bigint>, band int, band_key bigint",
     )
     losers = {r["url"]: r["near_dup_of"]
               for r in _near_dup_losers(d, cfg, sig_history=hist,
@@ -131,9 +129,13 @@ def test_near_dup_losers_reuses_cur_sig_rows(spark):
 
 
 def test_near_dup_losers_rejects_unknown_history_layout(spark):
-    """Layout dispatch is by exact column set — a history frame that
-    merely CONTAINS one shape plus extras must be refused, not
-    silently routed to the wrong branch."""
+    """History has ONE shape, (url, sig, band, band_key): a compact
+    (url, sig, bks) frame — the store's on-disk row, which
+    streaming/jobs._sig_state explodes on read — fails at analysis
+    instead of being routed anywhere, and history without the batch's
+    own signature rows is refused."""
+    from pyspark.errors import AnalysisException
+
     from scripts_spark.plans.pipeline import _near_dup_losers
 
     cfg = CurateConfig(near_dedup=True, near_dedup_mode="neighbor")
@@ -141,9 +143,11 @@ def test_near_dup_losers_rejects_unknown_history_layout(spark):
         [("https://a.se/1", ["lite text i ett dokument här"])],
         "url string, kept_paras array<string>",
     )
-    bad = spark.createDataFrame(
-        [], "url string, sig array<bigint>, bks array<bigint>, band int, "
-            "band_key long",
-    )
-    with pytest.raises(ValueError, match="compact .* or exploded"):
-        _near_dup_losers(d, cfg, sig_history=bad)
+    compact = spark.createDataFrame(
+        [], "url string, sig array<bigint>, bks array<bigint>")
+    with pytest.raises(AnalysisException):
+        _near_dup_losers(d, cfg, sig_history=compact, cur_sig_rows=compact)
+    exploded = spark.createDataFrame(
+        [], "url string, sig array<bigint>, band int, band_key bigint")
+    with pytest.raises(ValueError, match="signature rows"):
+        _near_dup_losers(d, cfg, sig_history=exploded)
