@@ -157,8 +157,8 @@ def main(argv: list[str] | None = None) -> int:
     st.add_argument("--boiler-state", default=None,
                     help="state dir for cross-batch boilerplate evidence")
     st.add_argument("--compact-every", type=int, default=16,
-                    help="fold every cross-batch state store (boiler, span, "
-                         "signature) into a snapshot every K batches")
+                    help="fold every cross-batch state store (boiler, span, signature) "
+                         "into a snapshot every K >= 1 batches (the CLI has no 'never')")
     st.add_argument("--para-dedup", action="store_true",
                     help="corpus paragraph-dedup stage per micro-batch")
     st.add_argument("--span-state", default=None,

@@ -430,10 +430,10 @@ def strip_boiler(docs: DataFrame, boiler: DataFrame) -> DataFrame:
     kept_paras) of a deduped_docs frame stripped against a (domain,
     boiler_set) table. curate() builds it from its own boilerplate
     sets; a stateful stream trigger builds it once from the sets its
-    boiler store merged, persists it, and hands the same frame to
-    curate(stripped=), to the signing of its signature evidence and to
-    its span evidence — so stored evidence and the text the pipeline
-    keeps cannot disagree on what "post-boiler" means."""
+    boiler store merged and hands the same frame to curate(stripped=),
+    to the signing of its signature evidence and to its span evidence
+    — so stored evidence and the text the pipeline keeps cannot
+    disagree on what "post-boiler" means."""
     cols = per_app(docs.sparkSession, "pipeline.strip", lambda: [
         F.col("url"), F.col("warc_ts"), F.col("bucket"),
         F.size("paras").alias("paras_total"), boiler_kept_col().alias("kept_paras"),
@@ -737,7 +737,7 @@ def drain_curate_persisted() -> None:
         D.release_checkpoint(_CURATE_CHECKPOINTS.pop())
 
 
-def curate(pages: DataFrame, cfg: CurateConfig | None = None,
+def curate(pages: DataFrame | None, cfg: CurateConfig | None = None,
            stripped: DataFrame | None = None,
            span_history: DataFrame | None = None,
            sig_history: DataFrame | None = None,
@@ -745,11 +745,13 @@ def curate(pages: DataFrame, cfg: CurateConfig | None = None,
     """Full pipeline → decision frame (SURVEY.md §7.0 output schema +
     bucket column for manifests/metrics).
 
-    ``stripped``: the post-boiler frame of these pages (strip_boiler),
-    used instead of this input's own url-dedup, repair and boilerplate
-    stages — the seam a stateful stream trigger uses: it strips once
-    against the boiler sets merged across micro-batches and reads the
-    same persisted frame for its span and signature evidence.
+    Give exactly one input: ``pages``, or ``stripped``, a post-boiler
+    frame (strip_boiler) that replaces the url-dedup, repair and
+    boilerplate stages — the seam a stateful stream trigger uses: it
+    strips once against the boiler sets merged across micro-batches
+    and reads the same persisted frame for its span and signature
+    evidence. With a dedup stage on, curate reads ``stripped`` more
+    than once and does not cache it itself: persist it.
     ``span_history``: earlier-batch span keys for the paragraph-dedup
     stage (see _corpus_para_dedup) — requires ``cfg.para_dedup``.
     ``sig_history``: earlier-batch (url, sig, band, band_key) MinHash
@@ -759,6 +761,8 @@ def curate(pages: DataFrame, cfg: CurateConfig | None = None,
     form the signature store holds, so the comparison never signs a
     second text form."""
     cfg = cfg or CurateConfig()
+    if (pages is None) == (stripped is None):
+        raise ValueError("curate takes exactly one of pages and stripped")
     if span_history is not None and not cfg.para_dedup:
         raise ValueError("span_history requires CurateConfig.para_dedup=True")
     if sig_history is not None and not cfg.near_dedup:
@@ -777,7 +781,7 @@ def curate(pages: DataFrame, cfg: CurateConfig | None = None,
         _CURATE_PERSISTED.append(docs)
         d = strip_boiler(docs, boilerplate_sets(docs, cfg))
 
-    c = _curate_cols(pages.sparkSession, cfg)
+    c = _curate_cols(d.sparkSession, cfg)
     if cfg.para_dedup or cfg.near_dedup:
         # the stages rewrite kept_paras: count the boiler-stripped
         # paragraphs first
@@ -787,9 +791,12 @@ def curate(pages: DataFrame, cfg: CurateConfig | None = None,
     if cfg.near_dedup:
         # the losers frame re-reads d (self-similarity is cross-doc by
         # nature); persist the post-boiler frame so the repair + strip
-        # chain isn't recomputed for the signature/verify branches
-        d = d.persist()
-        _CURATE_PERSISTED.append(d)
+        # chain isn't recomputed for the signature/verify branches —
+        # unless d is a bare projection of the caller's stripped frame,
+        # which the caller persists
+        if stripped is None or cfg.para_dedup:
+            d = d.persist()
+            _CURATE_PERSISTED.append(d)
         losers = _near_dup_losers(d, cfg, sig_history=sig_history,
                                   cur_sig_rows=sig_current)
         d = d.join(losers.select("url", F.lit(True).alias("_nd_loser")), "url", "left")

@@ -125,10 +125,11 @@ def stream_curate(spark: SparkSession, input_dir: str, out_dir: str,
 
     A trigger with any store strips the batch's boilerplate ONCE
     (plans/pipeline.strip_boiler, against the batch-local or merged
-    boiler sets) and persists that frame: curate(stripped=) decides on
-    it, and the span evidence and the signature rows (signed once, for
-    both the history comparison and the store write) are read from
-    it.
+    boiler sets): curate(stripped=) decides on that frame, and the
+    span evidence and the signature rows (signed once, for both the
+    history comparison and the store write) are read from it. It is
+    persisted when a dedup stage is on; with neither stage the commit
+    is its one reader.
 
     Each trigger starts with an empty check (one Spark job) and returns
     when the batch has no rows. It stays although the commit would
@@ -197,9 +198,9 @@ def stream_curate(spark: SparkSession, input_dir: str, out_dir: str,
                     or sig_state_dir is not None):
                 # the deduped/repaired docs feed the boiler evidence
                 # and sets; the ONE post-boiler frame stripped from them
-                # feeds curate, the span evidence and the signing — each
-                # persisted, so the scan + url-dedup + repair chain and
-                # the strip run once per micro-batch
+                # feeds curate and, with a span or signature store, the
+                # span evidence and the signing — so the scan + url-dedup
+                # + repair chain and the strip run once per micro-batch
                 docs = deduped_docs(batch_df, cfg).persist()
                 if boiler_state_dir is not None:
                     boiler, evidence = _merged_boiler(
@@ -208,7 +209,13 @@ def stream_curate(spark: SparkSession, input_dir: str, out_dir: str,
                     )
                 else:
                     boiler = boilerplate_sets(docs, cfg)
-                stripped = strip_boiler(docs, boiler).persist()
+                stripped = strip_boiler(docs, boiler)
+                if cfg.para_dedup or cfg.near_dedup:
+                    # read more than once: by the stage's self-join and
+                    # by the span/signature evidence (each store needs
+                    # its stage); with neither stage the commit is the
+                    # one reader
+                    stripped = stripped.persist()
             span_hist = None
             if span_state_dir is not None:
                 span_hist = _span_state(
@@ -246,9 +253,8 @@ def stream_curate(spark: SparkSession, input_dir: str, out_dir: str,
                     sig_hist = _sig_state(
                         spark, sig_state_dir, batch_id, compact_every
                     )
-            dec = curate(batch_df, cfg, stripped=stripped,
-                         span_history=span_hist, sig_history=sig_hist,
-                         sig_current=sig_cur)
+            dec = curate(None if stripped is not None else batch_df, cfg, stripped=stripped,
+                         span_history=span_hist, sig_history=sig_hist, sig_current=sig_cur)
             # the commit unit is (job_id=batch_id, bucket): a replayed
             # micro-batch resumes its own partial commit, while a NEW
             # batch whose documents hash into buckets an earlier batch
@@ -268,8 +274,7 @@ def stream_curate(spark: SparkSession, input_dir: str, out_dir: str,
                 if f is not None:
                     f.unpersist()
             # release exactly the frames curate() cached internally
-            # (near-dedup post-boiler frame, its own docs persist when
-            # we didn't pass a stripped frame) — NOT
+            # (the near-dedup input after para-dedup) — NOT
             # catalog.clearCache(), which would also evict every
             # caller-owned cached frame in the shared session
             drain_curate_persisted()

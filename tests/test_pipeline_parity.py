@@ -352,9 +352,12 @@ def test_curate_stripped_seam_matches_batch_path(spark):
         want = {r["url"]: r.asDict(recursive=True)
                 for r in pipeline.curate(df, cfg).collect()}
         got = {r["url"]: r.asDict(recursive=True)
-               for r in pipeline.curate(df, cfg, stripped=stripped).collect()}
+               for r in pipeline.curate(None, cfg, stripped=stripped).collect()}
     finally:
         pipeline.drain_curate_persisted()
     assert got == want
+    for pg, st in ((df, stripped), (None, None)):  # exactly one input
+        with pytest.raises(ValueError, match="exactly one"):
+            pipeline.curate(pg, cfg, stripped=st)
     assert any("boilerplate" in r["filter_reasons"] for r in want.values())
 
